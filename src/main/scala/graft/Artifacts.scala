@@ -121,14 +121,23 @@ object Artifacts {
     norm + "::" + name
   }
 
+  /** The path `name` for input `dir` is materialized under, calling
+    * `write` with a fresh path on first use only — the write-once primitive
+    * for any file product (parquet artifacts, a roundtrip query's staging
+    * files), so building the same query again never rewrites files an
+    * earlier DataFrame still reads. */
+  def path(spark: SparkSession, dir: String, name: String)
+      (write: String => Unit): String =
+    materialize(normKey(spark, dir, name)) { () =>
+      val p = dataPath(spark, name)
+      write(p)
+      p
+    }
+
   /** Return `name` for input `dir`, building + writing it on first use. */
   def table(spark: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame =
-    spark.read.parquet(materialize(normKey(spark, dir, name)) { () =>
-      val p = dataPath(spark, name)
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
+    spark.read.parquet(path(spark, dir, name)(build.write.mode("overwrite").parquet(_)))
 
   /** Like [[table]], but materialized as a BUCKETED catalog table on
     * `bucketCols` — the warehouse form a 100 TB index-build stage writes:

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every declared query at the given scale
   * factor and prints one JSON line. A full untimed warm-up pass runs first
   * so the timed pass measures steady-state execution (parquet footers
@@ -11,32 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // $SPARK_GRAFT_CPUS clamped to the effective cgroup/processor budget
-    // (round-18, verdict item 1): local[N] far above the granted CPUs
-    // oversubscribes the scheduler and degrades every CPU-bound task
-    val cpus = Cpus.effectiveStr()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Round-17: let AQE re-plan CACHED relations too. Persisted
-      // intermediates (pair candidate sets, per-user/type relations, band
-      // tables) otherwise materialize with the static shuffle partition
-      // count — 32 near-empty cache blocks per tiny relation at bench
-      // scale — and every consumer pays one task per block. With this on,
-      // the cache adopts AQE-coalesced partitioning (sized by
-      // advisoryPartitionSizeInBytes, so it stays byte-driven at every
-      // scale factor). Measured: events_cooccurrence 165 -> 9 tasks,
-      // sim_triangles executor time 2.6 s -> 0.05 s at sf0.1; results are
-      // partitioning-independent by repo discipline (exact-integer /
-      // decimal aggregates only) and the full oracle sweep re-proves it.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.local()
     // ERROR, not WARN: benign CacheManager "already cached" warnings from
     // re-running persisting queries otherwise flood the bounded stdout tail
     // the driver parses the metric line from.

@@ -315,17 +315,8 @@ object GenData {
     // sf6/sf10 ANN-artifact scaling probes, where generating a 660 MB
     // lineitem nobody reads would dominate the run
     val only = args.drop(2).headOption.map(_.split(",").map(_.trim).toSet)
-    // $SPARK_GRAFT_CPUS clamped to the effective cgroup/processor budget
-    // (round-18, verdict item 1): local[N] far above the granted CPUs
-    // oversubscribes the scheduler and degrades every CPU-bound task
-    val cpus = Cpus.effectiveStr()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     writeSf(spark, sf, outDir, only,
       multiFile = sys.env.get("GRAFT_GEN_MULTIFILE").contains("1"))

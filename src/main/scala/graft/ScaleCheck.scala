@@ -46,18 +46,7 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // $SPARK_GRAFT_CPUS clamped to the effective cgroup/processor budget
-    // (round-18, verdict item 1): local[N] far above the granted CPUs
-    // oversubscribes the scheduler and degrades every CPU-bound task
-    val cpus = Cpus.effectiveStr()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     var failed = false
     def report(name: String, ok: Boolean, detail: String): Unit = {

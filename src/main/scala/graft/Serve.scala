@@ -149,13 +149,7 @@ object Serve {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.drop(1).headOption.map(_.toInt).getOrElse(8080)
     val bindAddr = args.drop(2).headOption.getOrElse("127.0.0.1")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     val server = start(spark, dir, port, bindAddr)
     println(s"serving on ${server.getAddress}")

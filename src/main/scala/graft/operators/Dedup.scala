@@ -395,12 +395,6 @@ object Dedup {
       .map(i => col(s"x.k$i") === col(s"y.k$i"))
       .foldLeft(col("x.band") === col("y.band"))(_ && _)
 
-  /** The default-geometry producer pipeline, for [[graft.ExplainBuild]]'s
-    * plan dumps (the declared query reads the materialized artifact). */
-  private[graft] def minhashPairsBuildForExplain(
-      spark: SparkSession, dir: String): DataFrame =
-    minhashPipeline(spark, dir, NumPerms, NumBands)
-
   private def minhashPipeline(
       spark: SparkSession,
       dir: String,

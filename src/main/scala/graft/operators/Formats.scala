@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Artifacts, Q, Tables}
 import graft.Q._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * reads parquet); a complete engine speaks the other two first-class
   * Hadoop-ecosystem formats too. Both queries follow the round-trip
   * contract: sink → source must be lossless for the schema, so the oracle
-  * is simply the original parquet table.
+  * is simply the original parquet table. Both sinks are staged write-once
+  * per input through [[graft.Artifacts.path]], so building a query again
+  * never rewrites files an earlier DataFrame still reads.
   */
 object Formats {
 
@@ -26,13 +28,12 @@ object Formats {
     * API dumps land as JSONL); the nested struct exercises the schema
     * depth that flat CSV cannot represent. */
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_json_bronze/" +
-      spark.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + "/supplier"
-    Tables.supplier(spark, dir)
-      .select(col("s_suppkey"), col("s_name"),
-        struct(col("s_nationkey"), col("s_acctbal")).as("contact"))
-      .write.mode("overwrite").json(out)
+    val out = Artifacts.path(spark, dir, "rel_json_supplier") { p =>
+      Tables.supplier(spark, dir)
+        .select(col("s_suppkey"), col("s_name"),
+          struct(col("s_nationkey"), col("s_acctbal")).as("contact"))
+        .write.mode("overwrite").json(p)
+    }
     val schema = StructType(Seq(
       StructField("s_suppkey", LongType),
       StructField("s_name", StringType),
@@ -57,13 +58,12 @@ object Formats {
     * (PushedFilters, asserted in FormatsSpec) so a selective read skips
     * stripes before any row decode. */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc_bronze/" +
-      spark.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + "/orders"
-    Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
-        col("o_totalprice"))
-      .write.mode("overwrite").orc(out)
+    val out = Artifacts.path(spark, dir, "rel_orc_orders") { p =>
+      Tables.orders(spark, dir)
+        .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
+          col("o_totalprice"))
+        .write.mode("overwrite").orc(p)
+    }
     spark.read.orc(out)
       .filter(col("o_orderstatus") === "F")
       .groupBy(col("o_orderpriority"))

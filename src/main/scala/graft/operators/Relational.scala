@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Artifacts, Q, Tables}
 import graft.Q._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -167,17 +167,17 @@ object Relational {
     * schema, so the oracle is simply the parquet table. Mirrors the
     * reference's LOAD DATA … skip_leading_rows=1 (`etl_medallion.py:90-99`)
     * and the notebook's sep=';', inferSchema read (`etl_spark.ipynb:113`).
+    * The sink is staged write-once per input through [[Artifacts.path]], so
+    * building the query again never rewrites files an earlier DataFrame
+    * still reads.
     */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    // per-session nonce (applicationId) keeps two concurrent runs against
-    // the same sf dir from racing on one output path
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_bronze/" +
-      spark.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + "/part"
-    Tables.part(spark, dir)
-      .write.mode("overwrite")
-      .option("header", "true").option("sep", ";")
-      .csv(out)
+    val out = Artifacts.path(spark, dir, "rel_csv_part") { p =>
+      Tables.part(spark, dir)
+        .write.mode("overwrite")
+        .option("header", "true").option("sep", ";")
+        .csv(p)
+    }
     // FAILFAST mirrors the reference's allow_jagged_rows=false
     // (`etl_medallion.py:96`): a malformed row aborts the load instead of
     // silently becoming NULLs (PERMISSIVE) or vanishing (DROPMALFORMED)
@@ -202,13 +202,12 @@ object Relational {
     * or parquet. The query pins that the codec layer is lossless and
     * transparent to the reader. */
   def csvGzipRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_gzip/" +
-      spark.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + "/supplier"
-    Tables.supplier(spark, dir)
-      .write.mode("overwrite")
-      .option("header", "true").option("compression", "gzip")
-      .csv(out)
+    val out = Artifacts.path(spark, dir, "rel_csv_gzip_supplier") { p =>
+      Tables.supplier(spark, dir)
+        .write.mode("overwrite")
+        .option("header", "true").option("compression", "gzip")
+        .csv(p)
+    }
     spark.read
       .option("header", "true").option("inferSchema", "true")
       .option("mode", "FAILFAST")
@@ -653,27 +652,15 @@ object Relational {
     * aggregate. The read plan scans only the `l_returnflag=R` directory —
     * partition pruning happens at file listing, before any I/O; at scale
     * that is the difference between reading 100 TB and reading one flag's
-    * share. Output-path nonce (applicationId) keeps concurrent runs from
-    * racing, as in [[csvRoundtrip]]. Write-once per session (the
-    * bucketed-sink policy): repeat invocations read the existing layout,
-    * as a production job reads yesterday's partitioned snapshot. */
-  private val partitionedWritten =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
+    * share. Staged write-once per input through [[Artifacts.path]], as in
+    * [[csvRoundtrip]]: repeat invocations read the existing layout, as a
+    * production job reads yesterday's partitioned snapshot. */
   def partitionedRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_part_sink/" +
-      spark.sparkContext.applicationId + "/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_") + "/lineitem"
-    // record the sink only AFTER the write succeeds — marking first would
-    // poison every later invocation if the first write throws
-    partitionedWritten.synchronized {
-      if (!partitionedWritten.contains(out)) {
-        Tables.lineitem(spark, dir)
-          .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-            col("l_quantity"), col("l_returnflag"))
-          .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-        partitionedWritten.put(out, true)
-      }
+    val out = Artifacts.path(spark, dir, "rel_partitioned_lineitem") { p =>
+      Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
+          col("l_quantity"), col("l_returnflag"))
+        .write.mode("overwrite").partitionBy("l_returnflag").parquet(p)
     }
     spark.read.parquet(out)
       .filter(col("l_returnflag") === "R")

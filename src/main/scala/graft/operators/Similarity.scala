@@ -355,14 +355,6 @@ object Similarity {
       .groupBy(col("vec_id"), col("tbl"))
       .agg(sum(col("bit")).as("bkey"))
 
-  /** [[srpBandsBuild]] at the default kNN-graph geometry, for
-    * [[graft.ExplainBuild]]'s plan dumps. */
-  private[graft] def srpBandsBuildForExplain(spark: SparkSession,
-      dir: String): DataFrame = {
-    val n = corpus(spark, dir).count()
-    srpBandsBuild(spark, dir, NumTables, bandBits(n))
-  }
-
   /** Per-table occupancy audit of the SRP band artifact — the ScaleCheck
     * `band_occupancy` gate's input (round-13 verdict: the geometry
     * ceiling must fail visibly, and the occupancy invariant must be
@@ -373,23 +365,7 @@ object Similarity {
     * growth rate decides whether the ANN tier is linear or quadratic. */
   private[graft] def bandOccupancy(spark: SparkSession, dir: String): DataFrame = {
     val bits = bandBits(corpus(spark, dir).count())
-    occupancyOf(srpBands(spark, dir, "sim_srp_bands", NumTables, bits), bits)
-  }
-
-  /** [[bandOccupancy]] at an EXPLICIT bit width — ProbeBands' frozen-
-    * geometry counterfactual against the adaptive choice on the same
-    * corpus. Distinct artifact name per width: a probe must never
-    * overwrite (or silently reuse) the production band table. */
-  private[graft] def bandOccupancyAt(spark: SparkSession, dir: String,
-      bits: Int): DataFrame = {
-    require(bits >= 1 && bits <= MaxBits,
-      s"bandOccupancyAt: bits=$bits outside the plane catalog [1, $MaxBits]")
-    occupancyOf(
-      srpBands(spark, dir, s"sim_srp_bands_probe_$bits", NumTables, bits), bits)
-  }
-
-  private def occupancyOf(bands: DataFrame, bits: Int): DataFrame =
-    bands
+    srpBands(spark, dir, "sim_srp_bands", NumTables, bits)
       .groupBy(col("tbl"), col("bkey")).agg(count(lit(1)).as("occ"))
       .groupBy(col("tbl"))
       .agg(sum(col("occ")).as("n_vectors"), count(lit(1)).as("n_buckets"),
@@ -397,6 +373,7 @@ object Similarity {
         sum(col("occ") * col("occ")).as("sum_sq"))
       .withColumn("bits", lit(bits))
       .withColumn("occ_bound", lit(256L << bits))
+  }
 
   /** Exact top-[[K]] ground truth for the first `nQ` vectors — the
     * recall probe's baseline, same plan shape as [[bruteForceTopK]] but

@@ -5,9 +5,9 @@ package org.apache.spark
 object GraftSpark {
 
   /** Drain the async listener bus: returns once every queued event has
-    * been delivered, so listener-derived diagnostic counters (ProbePerf's
-    * jobs/tasks/executor-time) settle deterministically instead of racing
-    * a fixed sleep on a loaded box (round-17 ADVICE). */
+    * been delivered, so listener-derived diagnostic counters (the traced
+    * benchmark's jobs/tasks/executor-time) settle deterministically instead
+    * of racing a fixed sleep on a loaded box. */
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 }

@@ -19,7 +19,14 @@ output from a per-run temp file, and writes OUT.json:
    "value": <median total>, "value_min": ..., "value_max": ...,
    "spread_pct": 100*(max-min)/median,
    "queries": {name: {"median": s, "min": s, "max": s}},
-   "totals": [t1, t2, t3]}
+   "totals": [t1, t2, t3],
+   "artifacts": {"n": <median artifact count>,
+                 "build_sec": {"median": s, "min": s, "max": s},
+                 "per_artifact_sec": {name: <median s>}}}
+
+The index build (Bench's write-once artifacts, built during warm-up and
+outside every per-query time) is kept as its own line item, so the
+end-to-end cost is build plus queries.
 
 Any query erroring in any run keeps the string "error" and fails the exit
 code, so a flaky query can't hide inside a median.
@@ -45,6 +52,20 @@ def run_once(sf_dir, i):
         raise SystemExit(f"bench run {i} failed (exit {proc.returncode})")
     with open(out) as f:
         return json.load(f)
+
+
+def artifact_summary(runs):
+    arts = [r.get("artifacts", {}) for r in runs]
+    builds = [float(a.get("build_sec", 0.0)) for a in arts]
+    names = sorted({k for a in arts for k in a.get("per_artifact_sec", {})})
+    per = {k: round(statistics.median(a["per_artifact_sec"][k] for a in arts
+                                      if k in a.get("per_artifact_sec", {})), 4)
+           for k in names}
+    return {"n": statistics.median_low(int(a.get("n", 0)) for a in arts),
+            "build_sec": {"median": round(statistics.median(builds), 3),
+                          "min": round(min(builds), 3),
+                          "max": round(max(builds), 3)},
+            "per_artifact_sec": per}
 
 
 def main():
@@ -82,6 +103,7 @@ def main():
         "errors": errors,
         "queries": queries,
         "totals": [round(t, 3) for t in totals],
+        "artifacts": artifact_summary(runs),
     }
     with open(out_path, "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
@@ -89,7 +111,9 @@ def main():
     print(f"{out_path}: median {result['value']}s over {n_runs} runs "
           f"(spread {result['spread_pct']}%, "
           f"min {result['value_min']} / max {result['value_max']}), "
-          f"{len(names)} queries, {len(errors)} errors")
+          f"{len(names)} queries, {len(errors)} errors, "
+          f"{result['artifacts']['n']} artifacts built in a median "
+          f"{result['artifacts']['build_sec']['median']}s")
     return 1 if errors else 0
 
 
