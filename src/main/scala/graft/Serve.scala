@@ -22,8 +22,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Serving posture: the server holds ONE long-lived SparkSession (the
   * production pattern for a Spark serving sidecar — session startup is
   * seconds, requests are milliseconds); handlers run on a single-thread
-  * executor, serializing pipeline runs exactly like the reference's
-  * single Flask worker. State between requests lives in the session
+  * executor, serializing requests — pipeline runs included — exactly like
+  * the reference's single Flask worker. Within one request the Spark work
+  * fans out: a trigger runs each layer's statements concurrently, and the
+  * read endpoints run their per-table counts and samples concurrently
+  * ([[Pipeline.inParallel]]). State between requests lives in the session
   * catalog (temp views), as the reference's lives in BigQuery datasets.
   */
 object Serve {
@@ -101,8 +104,10 @@ object Serve {
 
     server.createContext("/verify-results", handler { _ =>
       // inventory over the session catalog — requires a prior trigger run,
-      // exactly like the reference's verify against the live datasets
-      val checks = Pipeline.defaultLayers().flatMap(_._2.map(_._1)).map { name =>
+      // exactly like the reference's verify against the live datasets; the
+      // per-table recounts run concurrently
+      val names = Pipeline.defaultLayers().flatMap(_._2.map(_._1))
+      val checks = Pipeline.inParallel(names) { name =>
         val present = spark.catalog.tableExists(name)
         val rows = if (present) spark.table(name).count() else -1L
         s"""{"table":${q(name)},"present":$present,"rows":$rows}"""
@@ -112,7 +117,7 @@ object Serve {
 
     server.createContext("/sample-data", handler { _ =>
       val golds = Seq("gold_sales_analytics", "gold_product_metrics", "gold_sales_summary")
-      val samples = golds.map { name =>
+      val samples = Pipeline.inParallel(golds) { name =>
         if (!spark.catalog.tableExists(name))
           s"""{"table":${q(name)},"rows":[]}"""
         else {

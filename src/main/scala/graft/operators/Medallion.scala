@@ -142,11 +142,6 @@ object Medallion {
         (sum(dec(sales("l_extendedprice"))) * 100).cast("long").as("_sum_cents"))
       .withColumn("avg_sale_amount", avgCents2("_sum_cents", "total_sales"))
       .drop("_sum_cents")
-      // the reference MATERIALIZES gold tables (CREATE OR REPLACE TABLE,
-      // `etl_medallion.py:182`); persisting is the session analog — the
-      // top-products sample query re-reads the stored aggregate instead of
-      // re-running the fact join. Product-cardinality rows, tiny cache.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   val goldProductMetricsSql: String = {
@@ -180,10 +175,6 @@ object Medallion {
         (sum(dec(col("l_extendedprice"))) * 100).cast("long").as("_sum_cents"))
       .withColumn("avg_transaction_value", avgCents2("_sum_cents", "total_transactions"))
       .drop("_sum_cents")
-      // materialized-gold-table analog (reference `etl_medallion.py:198`);
-      // the by-channel re-aggregation reads the stored summary, as the
-      // reference's sample analytics do. year×month×flags cardinality.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   val goldSalesSummarySql: String = {
     val avg = avgCents2Sql("SUM(CAST(l_extendedprice AS DECIMAL(18,2)))", "COUNT(*)")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Artifacts, Q, Tables}
+import graft.{Artifacts, Pipeline, Q, Tables}
 import graft.Q._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -221,25 +221,16 @@ object Relational {
       |FROM supplier
       |ORDER BY s_suppkey""".stripMargin
 
+  /** The medallion relations of [[Pipeline.defaultLayers]], by name (the
+    * reference's expected-table inventory, `etl_medallion.py:261-265`). */
+  private def medallionLayers(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
+    Pipeline.defaultLayers().flatMap(_._2).map { case (name, fn) => name -> fn(spark, dir) }
+
   /** Catalog inventory (S6/S7/S9 + the reference's expected-table contract,
     * `etl_medallion.py:261-265`): register the medallion relations as temp
     * views in a session catalog namespace-by-prefix, then read the inventory
     * back from `spark.catalog`. The oracle pins the expected inventory as a
     * literal — a schema contract, like the reference's hardcoded lists. */
-  /** The medallion relations registered as temp views (the reference's
-    * expected-table inventory, `etl_medallion.py:261-265`). */
-  private def medallionLayers(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
-    Seq(
-      "bronze_lineitem" -> Tables.lineitem(spark, dir),
-      "bronze_part" -> Tables.part(spark, dir),
-      "bronze_supplier" -> Tables.supplier(spark, dir),
-      "silver_sales" -> Medallion.silverSales(spark, dir),
-      "silver_products" -> Medallion.silverProducts(spark, dir),
-      "silver_suppliers" -> Medallion.silverSuppliers(spark, dir),
-      "gold_sales_analytics" -> Medallion.goldSalesAnalytics(spark, dir),
-      "gold_product_metrics" -> Medallion.goldProductMetrics(spark, dir),
-      "gold_sales_summary" -> Medallion.goldSalesSummary(spark, dir))
-
   def catalogInventory(spark: SparkSession, dir: String): DataFrame = {
     val layers = medallionLayers(spark, dir)
     layers.foreach { case (name, df) => df.createOrReplaceTempView(name) }
