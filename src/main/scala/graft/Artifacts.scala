@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.util.control.NonFatal
 
 /** Write-once materialized pipeline products ("index artifacts").
   *
@@ -67,8 +68,8 @@ object Artifacts {
       try {
         import scala.jdk.CollectionConverters.IteratorHasAsScala
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-          .foreach(f => try java.nio.file.Files.deleteIfExists(f) catch { case _: Throwable => () })
-      } catch { case _: Throwable => () }))
+          .foreach(f => try java.nio.file.Files.deleteIfExists(f) catch { case NonFatal(_) => () })
+      } catch { case NonFatal(_) => () }))
     p
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Driver-run benchmark: times every declared query at the given scale
   * factor and prints one JSON line. A full untimed warm-up pass runs first
   * so the timed pass measures steady-state execution (parquet footers
@@ -22,25 +24,25 @@ object Bench {
     // generated code hot in the (bounded) codegen cache, which a single
     // whole-suite warm-up pass does not — later queries evict earlier ones.
     val results = ordered.map { name =>
-      // ATTRIBUTION: start every query from an empty cache, so its number
-      // reflects only its own work (plus reads of the write-once Artifacts
-      // tables, which are filesystem state, not cache state). Round 4's
-      // per-query numbers shifted round-to-round because earlier queries
-      // warmed shared persisted subtrees for later ones — regressions
-      // could not be attributed. Within-query persists rebuild during the
-      // warm-up run and serve both timed runs.
+      // ATTRIBUTION: the warm-up and every timed sample start from an empty
+      // cache (cleared outside the timed span), so each number is the
+      // query's own work from stored tables, plus reads of the write-once
+      // Artifacts tables, which are filesystem state, not cache state. A
+      // persist filled by an earlier query, or by this query's warm-up,
+      // would otherwise serve the timed runs and hide the cost it saves.
       spark.catalog.clearCache()
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       // min of two timed runs: GC/compilation hiccups inflate single
       // samples by seconds on this box; the min is the steady-state cost.
       // A failed run yields None — never a partial elapsed time that would
       // make a broken query look like a fast pass.
       val samples = (1 to 2).map { _ =>
+        spark.catalog.clearCache()
         val t0 = System.nanoTime()
         val ok =
           try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(_) => false }
         (ok, (System.nanoTime() - t0) / 1e9)
       }
       val good = samples.collect { case (true, s) => s }
@@ -71,7 +73,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"bench: could not write $outPath: $e") }
+    catch { case NonFatal(e) => System.err.println(s"bench: could not write $outPath: $e") }
     spark.stop()
   }
 

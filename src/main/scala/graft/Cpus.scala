@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Effective CPU budget for the `local[N]` sessions of every runnable main
   * (optimization guide §2: size parallelism to the hardware actually
   * granted, not to a constant).
@@ -29,10 +31,10 @@ object Cpus {
         val lines = java.nio.file.Files.readAllLines(path)
         if (lines.isEmpty) None else Option(lines.get(0)).map(_.trim)
       } else None
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def toLong(s: String): Option[Long] =
-    try Some(s.toLong) catch { case _: Throwable => None }
+    try Some(s.toLong) catch { case NonFatal(_) => None }
 
   /** cgroup CPU quota in whole cores (ceil), when one is set: cgroup v2
     * `cpu.max` ("25000 100000" → 1; "max 100000" → none), else cgroup v1

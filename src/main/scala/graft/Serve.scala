@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.control.NonFatal
 
 /** Long-lived HTTP serving analog of the reference's Flask app
   * (`main.py:25-177`), over the JDK's built-in `com.sun.net.httpserver` —
@@ -46,7 +47,7 @@ object Serve {
   private def handler(f: HttpExchange => (Int, String)): HttpHandler =
     (ex: HttpExchange) =>
       try { val (c, b) = f(ex); respond(ex, c, b) }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         respond(ex, 500, s"""{"status":"error","error":${q(String.valueOf(e.getMessage))}}""")
       }
 

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -16,7 +17,7 @@ object Verify {
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -33,9 +34,10 @@ object Verify {
     // sf0.01 gate keeps using oracle_sql.json untouched
     Files.writeString(Paths.get(s"$outDir/oracle_stage_sql.json"),
       StagedOracles.json)
-    // release the dedup-tier persisted tables (shingle index, MinHash
-    // signatures) — the long-lived-session analog of dropping a pipeline
-    // stage's intermediate tables when the stage ends
+    // release what the kept in-query persists (winnow fingerprints,
+    // incremental-LSH candidates) leave cached — the long-lived-session
+    // analog of dropping a pipeline stage's intermediate tables when the
+    // stage ends
     spark.catalog.clearCache()
     spark.stop()
   }

@@ -351,8 +351,11 @@ object Dedup {
     else minhashPipeline(spark, dir, numPerms, numBands)
 
   /** The MinHash signature table (doc_id, sig: array of numPerms longs) —
-    * materialized for the default geometry (referenced three times per
-    * pipeline run: banding + both sides of the estimate join). */
+    * referenced three times per pipeline run (banding + both sides of the
+    * estimate join). The default geometry is an artifact; any other is
+    * persisted, because without it the 16x4 geometry measured 1358 ->
+    * 1887 ms (sf0.1, 4 cores, cache cleared before each run, median of 6
+    * alternating pairs, slower in 6 of 6). */
   private def minhashSignatures(
       spark: SparkSession, dir: String, numPerms: Int): DataFrame = {
     def build = {
@@ -820,8 +823,6 @@ object Dedup {
       posexplode(array((0 until nBands).map(b =>
         expr(s"shiftright(simhash, ${b * bandBits}) & $mask")): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-      // both self-join sides read this — persist (the signature-table policy)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bands.as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
@@ -972,7 +973,10 @@ object Dedup {
     // PERSIST, not an Artifacts table, on purpose: the fingerprint set has
     // a single consuming query (three references within it) — a written
     // artifact measured no faster than the memory-cached relation here,
-    // and the artifact layer only pays for itself on CROSS-query products
+    // and the artifact layer only pays for itself on CROSS-query products.
+    // Without the persist the query measured 2925 -> 4454 ms (sf0.1,
+    // 4 cores, cache cleared before each run, median of 6 alternating
+    // pairs, slower in 6 of 6).
     val fps = Tables.documents(spark, dir)
       .filter(length(col("text")) >= 8 + WinnowW - 1) // ≥ one full window
       // native one-pass fingerprinting (round-17): the chained HOF form
@@ -1375,11 +1379,8 @@ object Dedup {
     * relations orders of magnitude smaller. */
   def cascade(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    // each stage's keep set is referenced twice (the next stage's input and
-    // the final per-doc tag join) — persist so the chain runs once
     val s1 = docs.groupBy(md5(col("text")).as("k"))
       .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val comp = components(spark, dir) // doc_id → component_root (artifact)
     val s1c = s1.join(comp, Seq("doc_id"), "left")
     val keepLex = s1c.filter(col("component_root").isNotNull)
@@ -1387,7 +1388,6 @@ object Dedup {
     val s2 = s1c.join(keepLex, Seq("component_root"), "left")
       .filter(col("component_root").isNull || col("doc_id") === col("keep_id"))
       .select(col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sem = Similarity.semanticClusters(spark, dir)
       .select(col("vec_id").as("doc_id"), col("cluster_root"))
     val s2c = s2.join(sem, Seq("doc_id"), "left")
@@ -1506,7 +1506,10 @@ object Dedup {
         lit(false).as("is_cross"))
     val cand = cross.unionByName(within).distinct()
       // two consumers below (the semi-reduction's key set + the scoring
-      // join) — persist so the band self-joins run once
+      // join) — persist so the band self-joins run once. Without this and
+      // the shCand persist the query measured 1440 -> 1738 ms (sf0.1,
+      // 4 cores, cache cleared before each run, median of 6 alternating
+      // pairs, slower in 6 of 6)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // exact-Jaccard verification, candidates only (the pipeline's tail).
     // Round-17 (guide §3.2): semi-reduce the corpus-sized shingle index to

@@ -511,8 +511,6 @@ object EventTime {
   def rfmScores(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val day = datediff(to_date(col("ts")), lit("1970-01-01"))
-    // Checkpointed once: consumed by three threshold sorts + the scoring
-    // join (the twice-referenced-relation persist policy).
     val m = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
@@ -520,7 +518,6 @@ object EventTime {
         max(day).as("last_day"),
         count(lit(1)).as("freq"),
         dec2(sum(dec(col("value")))).as("monetary"))
-      .localCheckpoint()
     // Quintile thresholds (0.2/0.4/0.6/0.8 = k/5) with the PINNED
     // interpolation formula (exact integer index + remainder, identical
     // IEEE op order in both engines) — the engines' built-in interpolated
@@ -695,7 +692,6 @@ object EventTime {
         min(when(col("event_type") === "view", unix_micros(col("ts")))).as("first_view"),
         min(when(col("event_type") === "purchase", unix_micros(col("ts"))))
           .as("first_purchase"))
-      .localCheckpoint()
     val totals = firsts.agg(
       count(lit(1)).as("n_users"),
       count(when(col("first_view").isNotNull &&
@@ -968,7 +964,6 @@ object EventTime {
   def cooccurrence(spark: SparkSession, dir: String): DataFrame = {
     val ut = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val nUsers = ut.select(col("user_id")).distinct()
       .agg(count(lit(1)).as("n_users"))
@@ -1187,7 +1182,6 @@ object EventTime {
         col("event_type"))
       .groupBy(col("day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val grid = counts.select(col("day")).distinct()
       .crossJoin(counts.select(col("event_type")).distinct())
     val full = grid.join(counts, Seq("day", "event_type"), "left")

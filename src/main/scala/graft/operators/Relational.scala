@@ -1682,10 +1682,9 @@ object Relational {
         expr("shiftleft(CAST(1 AS BIGINT), CAST(bit % 60 AS INT))").as("mask"))
     val build = Tables.orders(spark, dir)
       .filter(col("o_totalprice") > BloomHotPrice)
-      .select(col("o_orderkey").as("key")).distinct().persist()
+      .select(col("o_orderkey").as("key")).distinct()
     val bloom = probeBits(build)
       .groupBy(col("word_idx")).agg(expr("bit_or(mask)").as("word"))
-      .persist()
     val probes = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("key")).distinct()
     probeBits(probes)

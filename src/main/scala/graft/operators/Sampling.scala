@@ -357,9 +357,6 @@ object Sampling {
     val perSource = Tables.documents(spark, dir)
       .select(col("source"), size(tokens(col("text"))).cast("long").as("n_tokens"))
       .groupBy(col("source")).agg(sum(col("n_tokens")).as("n_tokens"))
-      // two consumers (the cap solve and the final join) — persist so the
-      // corpus tokenization runs once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one window pass computes rank, prefix, AND the whole-relation totals
     // (empty-frame windows) — no scalar crossJoins, no extra jobs
     val w = Window.orderBy(col("n_tokens"), col("source"))

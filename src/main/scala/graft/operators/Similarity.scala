@@ -1530,7 +1530,6 @@ object Similarity {
         least(col("vec_id"), col("neighbor_id")).as("a"),
         greatest(col("vec_id"), col("neighbor_id")).as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tri = und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
       .join(und.as("e3"),
@@ -1991,7 +1990,6 @@ object Similarity {
     val r = corpus(spark, dir)
       .join(seedAssign(spark, dir), "vec_id")
       .withColumn("rn", row_number().over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val prior = r.as("x").join(r.as("y"),
         col("x.list_id") === col("y.list_id") && col("x.rn") < col("y.rn"))
       .select(col("y.vec_id").as("vec_id"),
@@ -2100,7 +2098,6 @@ object Similarity {
       .select(least(col("vec_id"), col("neighbor_id")).as("a"),
         greatest(col("vec_id"), col("neighbor_id")).as("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(explode(array(col("a"), col("b"))).as("vec_id"))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("deg"))
     val sem = semanticClusters(spark, dir)
@@ -2109,7 +2106,6 @@ object Similarity {
       .select(col("vec_id"),
         coalesce(col("cluster_root"), col("vec_id")).as("community"),
         col("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perComm = assign.groupBy(col("community"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("deg_sum"))
     val ein = und

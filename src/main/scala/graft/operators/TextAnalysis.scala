@@ -26,11 +26,8 @@ object TextAnalysis {
     * (map-side-combined counts), the K-row vocabulary broadcasts into a
     * semi-join, one shuffle on doc_id — never a corpus×vocab join. */
   def oovRate(spark: SparkSession, dir: String): DataFrame = {
-    // three consumers below (vocab, per-doc totals, in-vocab counts) —
-    // persist so the corpus is tokenized once per execution, not thrice
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val vocab = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))
       .limit(OovVocabK)
@@ -535,9 +532,6 @@ object TextAnalysis {
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(wordNGrams(col("text"), 5)).as("g"))
       .select(col("doc_id"), hash60(col("g")).as("h"))
-      // both the benchmark slice and the corpus slice filter this relation
-      // — persist so the scan + explode + MD5 run once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val benchGrams = grams.filter(col("doc_id") % 97 === 0)
       .select(col("h")).distinct()
     grams.filter(col("doc_id") % 97 =!= 0)
@@ -686,17 +680,14 @@ object TextAnalysis {
     * Zipf-hot term key and sorted it, where the aggregate map-side-combines
     * to the distinct-terms relation and AQE broadcasts it into the join
     * (hint-free). df per term is COUNT of tf rows either way — exact
-    * (Round18Spec pins equality to the window form). tf feeds both the df
-    * aggregate and the join probe, so it persists for the query's scope
-    * (the twice-referenced-relation policy). Two shuffles remain: the
-    * (doc, term) aggregation and the per-doc top-k window. */
+    * (Round18Spec pins equality to the window form). Two shuffles remain:
+    * the (doc, term) aggregation and the per-doc top-k window. */
   def tfidfTop(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tf = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     tf.join(df, Seq("term"))
       .withColumn("salience", col("tf").cast("double") / col("df"))
@@ -736,9 +727,6 @@ object TextAnalysis {
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(wordNGrams(col("text"), 2)).as("g"))
       .select(col("doc_id"), hash60(col("g")).as("h"))
-      // referenced twice (corpus counts + the per-doc join) — persist so
-      // the scan + explode + MD5 run once (the shingle-index policy)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpusCounts = grams.groupBy(col("h")).agg(count(lit(1)).as("bc"))
     grams.join(corpusCounts, "h")
       .groupBy(col("doc_id"))
@@ -793,9 +781,6 @@ object TextAnalysis {
         // a token never contains whitespace, so the first space splits the
         // 2-gram back into its left context exactly
         hash60(element_at(split(col("g"), " "), 1)).as("h1"))
-      // three consumers (bigram counts, the scoring join) — persist so the
-      // scan + explode + MD5 run once (the shingle-index policy)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val m12 = grams.groupBy(col("hb"))
       .agg(min(col("h1")).as("h1"), count(lit(1)).as("c12"))
     val m1 = m12.groupBy(col("h1")).agg(sum(col("c12")).as("c1"))
@@ -1155,9 +1140,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(array_distinct(wordNGrams(col("text"), SpanN))).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("h"))
-      // two consumers (the df aggregate and the per-doc totals) — persist
-      // so the scan + n-gram explode + hash run once per execution
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE span-stream shuffle (round-17, guide §2.3 — the text_novelty
     // trick): a span with df = 1 has exactly one doc, so min(doc_id) on
     // the df aggregate attributes it — no join of the df table back onto

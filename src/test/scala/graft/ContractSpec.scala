@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.GraftSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Driver-contract invariants: the flagship smoke, key consistency between
   * queries and oracleSql, and executability of every declared query
@@ -23,11 +26,41 @@ class ContractSpec extends AnyFunSuite {
     assert(names.distinct.size == names.size)
   }
 
+  /** The declared queries whose plans reach an in-query persist that stays
+    * because removing it measured slower with the cache cleared before each
+    * run (sf0.1, 4 cores, median of 6 alternating pairs, slower in 6 of 6).
+    * Every other query must leave the cache as it found it. */
+  private val KeptPersists = Set(
+    "dedup_winnow_pairs", // fingerprint stream, read twice: 2925 -> 4454 ms without
+    "dedup_incremental_lsh") // band candidates + their shingle slice: 1440 -> 1738 ms without
+
   test("every declared query executes at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
+      spark.catalog.clearCache()
       val n = fn(spark, TestSpark.Sf0001).count()
       withClue(name)(assert(n >= 0))
+      if (!KeptPersists.contains(name))
+        withClue(s"$name leaves a cached relation: ") {
+          assert(spark.sharedState.cacheManager.isEmpty)
+        }
     }
+    spark.catalog.clearCache()
+  }
+
+  test("building events_rfm and events_time_to_convert launches no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try Seq("events_rfm", "events_time_to_convert").foreach { name =>
+      GraftSpark.drainListenerBus(sc)
+      jobs.set(0)
+      SparkEntry.queries(name)(spark, TestSpark.Sf0001)
+      GraftSpark.drainListenerBus(sc)
+      withClue(name)(assert(jobs.get == 0))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("core queries are non-empty at sf0.001") {

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-/** A second pipeline run over changed input serves the new data: no gold
-  * table may come from a cache filled by an earlier run over the same path. */
+/** A second pipeline run, or a rebuilt declared query, over changed input
+  * serves the new data: no result may come from a cache filled by an
+  * earlier run over the same path. */
 class PipelineRefreshSpec extends AnyFunSuite {
 
   private def deleteTree(p: Path): Unit = {
@@ -13,14 +15,32 @@ class PipelineRefreshSpec extends AnyFunSuite {
     Files.deleteIfExists(p)
   }
 
-  test("re-running the pipeline after the input changes refreshes every gold table") {
-    // own session: its temp views never shadow the shared session's
-    val spark = TestSpark.spark.newSession()
+  /** A temp copy of sf0.001 for `body`, removed afterwards. */
+  private def withCopy(body: Path => Unit): Unit = {
     val dir = Files.createTempDirectory("graft-refresh")
     try {
       Files.list(java.nio.file.Paths.get(TestSpark.Sf0001)).forEach { f =>
         Files.copy(f, dir.resolve(f.getFileName))
       }
+      body(dir)
+    } finally deleteTree(dir)
+  }
+
+  /** Replaces `<table>.parquet` in `dir` with `df`'s rows. The new file is
+    * moved into place, as an outside writer would do: a Spark write to the
+    * path itself would refresh the caches over it. */
+  private def replaceTable(dir: Path, table: String, df: DataFrame): Unit = {
+    val staging = dir.resolve(s"staging_$table")
+    df.coalesce(1).write.parquet(staging.toString)
+    val part = Files.list(staging).toArray(n => new Array[Path](n))
+      .filter(_.getFileName.toString.endsWith(".parquet")).head
+    Files.move(part, dir.resolve(s"$table.parquet"), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("re-running the pipeline after the input changes refreshes every gold table") {
+    // own session: its temp views never shadow the shared session's
+    val spark = TestSpark.spark.newSession()
+    withCopy { dir =>
       def goldSums(): (Long, Long) = (
         spark.table("gold_sales_summary").agg(sum(col("total_transactions"))).head().getLong(0),
         spark.table("gold_product_metrics").agg(sum(col("total_sales"))).head().getLong(0))
@@ -30,15 +50,9 @@ class PipelineRefreshSpec extends AnyFunSuite {
       val (summaryBefore, productBefore) = goldSums()
       assert(summaryBefore == salesBefore)
 
-      // replace the copy's lineitem with every other order of the original.
-      // The new file is moved into place, as an outside writer would do: a
-      // Spark write to the path itself would refresh the caches over it
-      val staging = dir.resolve("staging")
-      Tables.lineitem(spark, TestSpark.Sf0001).filter(col("l_orderkey") % 2 === 0)
-        .coalesce(1).write.parquet(staging.toString)
-      val part = Files.list(staging).toArray(n => new Array[Path](n))
-        .filter(_.getFileName.toString.endsWith(".parquet")).head
-      Files.move(part, dir.resolve("lineitem.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      // replace the copy's lineitem with every other order of the original
+      replaceTable(dir, "lineitem",
+        Tables.lineitem(spark, TestSpark.Sf0001).filter(col("l_orderkey") % 2 === 0))
 
       val second = Pipeline.run(spark, dir.toString)
       assert(second.status == "success")
@@ -48,6 +62,35 @@ class PipelineRefreshSpec extends AnyFunSuite {
       val (summaryAfter, productAfter) = goldSums()
       assert(summaryAfter == salesAfter, "gold_sales_summary serves the previous run")
       assert(productAfter < productBefore, "gold_product_metrics serves the previous run")
-    } finally deleteTree(dir)
+    }
+  }
+
+  test("declared queries rebuilt after the input changes read the new input") {
+    val spark = TestSpark.spark.newSession()
+    val names = Seq("sample_token_budget", "text_dup_spans", "text_oov_rate", "events_drift")
+    withCopy { dir =>
+      def results(): Map[String, Seq[Row]] =
+        names.map(n => n -> SparkEntry.queries(n)(spark, dir.toString).collect().toSeq).toMap
+      val before = results()
+
+      // every other document and every other event of the original; events
+      // keep the physical `ts` encoding the copy's first read probed
+      val eventsPath = s"${TestSpark.Sf0001}/events.parquet"
+      replaceTable(dir, "documents",
+        Tables.documents(spark, TestSpark.Sf0001).filter(col("doc_id") % 2 === 0))
+      replaceTable(dir, "events",
+        spark.read.schema(Tables.eventsReadSchema(spark, eventsPath)).parquet(eventsPath)
+          .filter(col("event_id") % 2 === 0))
+
+      val rebuilt = results()
+      spark.catalog.clearCache()
+      val fresh = results()
+      names.foreach { n =>
+        withClue(n) {
+          assert(fresh(n) != before(n), "the halved input must change the result")
+          assert(rebuilt(n) == fresh(n), "the rebuilt query serves the previous input")
+        }
+      }
+    }
   }
 }
