@@ -1,8 +1,12 @@
 package graft
 
 import graft.operators.Medallion
+import org.apache.spark.GraftSpark
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import org.apache.spark.sql.execution.LogicalRDD
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
+import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.util.control.NonFatal
 
 /** Orchestration analog of the reference's HTTP surface + `run_etl()`
@@ -19,10 +23,18 @@ import scala.util.control.NonFatal
   *     row counts, like `POST /trigger-etl`'s JSON and
   *     `CloudRunETL.run_etl_pipeline()`'s duration (`etl_pipeline.py:10-13`).
   *
-  * Each "statement" materializes one relation as a temp view (the session-
-  * catalog analog of the reference's CTAS into BigQuery datasets) and forces
-  * it with one count. That count is the statement's `rows` and the run's
-  * inventory row count: no table is counted twice.
+  * Each "statement" stores its table, like the reference's
+  * `CREATE OR REPLACE TABLE … AS SELECT` into BigQuery datasets: the plan is
+  * `localCheckpoint`ed and one count of the stored RDD both forces and
+  * stores it. That count is the statement's `rows` and the run's inventory
+  * row count: no table is counted twice. A local checkpoint is not matched
+  * by the CacheManager, so a later plan over the same input never reads it.
+  *
+  * When the run ends, its successful tables are published together as the
+  * session's temp views and in [[reading]]; each replaces the table of the
+  * same name from an earlier run, which is released once no read in
+  * [[reading]] still holds it. A failed statement leaves the earlier table
+  * in place, as a failed CTAS does.
   */
 object Pipeline {
 
@@ -90,19 +102,67 @@ object Pipeline {
 
   private def msSince(t0: Long): Double = (System.nanoTime() - t0) / 1e6
 
-  /** Run one statement: build the plan, materialize it as a temp view, and
-    * force execution (the CTAS analog — a view alone would defer failures). */
-  private def runStatement(spark: SparkSession, dir: String, st: Statement): StatementResult = {
+  /** A table a statement stored: `df` reads the locally checkpointed RDD. */
+  final class Stored private[Pipeline] (val df: DataFrame) {
+    private val rdd: RDD[_] =
+      df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+
+    /** The row count, as one job over the stored blocks. */
+    def count(): Long = rdd.count()
+
+    private[Pipeline] def release(): Unit = GraftSpark.release(rdd)
+  }
+
+  /** The tables published in one session, and the lock that keeps a publish
+    * from releasing a table while a read still uses it. */
+  private final class Published {
+    private val lock = new ReentrantReadWriteLock()
+    private var tables = Map.empty[String, Stored]
+
+    def read[A](f: Map[String, Stored] => A): A = {
+      lock.readLock.lock()
+      try f(tables) finally lock.readLock.unlock()
+    }
+
+    def publish(fresh: Seq[(String, Stored)]): Unit = {
+      lock.writeLock.lock()
+      try {
+        fresh.foreach { case (n, t) => t.df.createOrReplaceTempView(n) }
+        val replaced = fresh.flatMap { case (n, _) => tables.get(n) }
+        tables ++= fresh
+        replaced.foreach(_.release())
+      } finally lock.writeLock.unlock()
+    }
+  }
+
+  // never emptied: a session has no end hook, and stopping the SparkContext
+  // drops the stored blocks
+  private val published = new ConcurrentHashMap[SparkSession, Published]()
+
+  private def publishedIn(spark: SparkSession): Published =
+    published.computeIfAbsent(spark, _ => new Published)
+
+  /** `f` over the tables the runs in `spark` have published, by name. No
+    * publish releases them until `f` returns; a running [[run]] does not
+    * block `f` before its own publish. */
+  def reading[A](spark: SparkSession)(f: Map[String, Stored] => A): A =
+    publishedIn(spark).read(f)
+
+  /** Run one statement: build the plan and store its table (the CTAS analog;
+    * a lazy view would defer failures). */
+  private def runStatement(
+      spark: SparkSession, dir: String, st: Statement): (StatementResult, Option[Stored]) = {
     val (name, fn) = st
     val t0 = System.nanoTime()
     try {
-      val df = fn(spark, dir)
-      df.createOrReplaceTempView(name)
-      val rows = df.count() // force, like job.result() at etl_medallion.py:67
-      StatementResult(name, ok = true, None, rows, msSince(t0))
+      val table = new Stored(fn(spark, dir).localCheckpoint(eager = false))
+      // one job computes, stores and counts the table, like job.result() at
+      // etl_medallion.py:67
+      val rows = try table.count() catch { case NonFatal(e) => table.release(); throw e }
+      (StatementResult(name, ok = true, None, rows, msSince(t0)), Some(table))
     } catch {
       case NonFatal(e) =>
-        StatementResult(name, ok = false, Some(truncate(e.getMessage)), -1L, msSince(t0))
+        (StatementResult(name, ok = false, Some(truncate(e.getMessage)), -1L, msSince(t0)), None)
     }
   }
 
@@ -111,12 +171,15 @@ object Pipeline {
     val t0 = System.nanoTime()
     val results = scala.collection.mutable.ArrayBuffer.empty[LayerResult]
     val processed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val stored = scala.collection.mutable.ArrayBuffer.empty[(String, Stored)]
     var halted = false
     layers.foreach { case (layer, statements) =>
       if (!halted) {
         val l0 = System.nanoTime()
         // intra-layer: independent statements, all attempted, concurrently
-        val sts = inParallel(statements)(runStatement(spark, dir, _))
+        val ran = inParallel(statements)(runStatement(spark, dir, _))
+        val sts = ran.map(_._1)
+        stored ++= ran.flatMap { case (r, t) => t.map(r.name -> _) }
         val ok = sts.forall(_.ok)
         results += LayerResult(layer, ok, sts, msSince(l0))
         if (ok) processed += layer
@@ -131,6 +194,7 @@ object Pipeline {
     val inventory = layers.flatMap(_._2.map(_._1)).map { name =>
       InventoryCheck(name, forced.contains(name), forced.getOrElse(name, -1L))
     }
+    publishedIn(spark).publish(stored.toSeq)
     RunReport(
       status = if (halted) "error" else "success",
       layersProcessed = processed.toSeq,

@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 import scala.util.control.NonFatal
 
 /** Long-lived HTTP serving analog of the reference's Flask app
@@ -22,13 +23,16 @@ import scala.util.control.NonFatal
   *
   * Serving posture: the server holds ONE long-lived SparkSession (the
   * production pattern for a Spark serving sidecar — session startup is
-  * seconds, requests are milliseconds); handlers run on a single-thread
-  * executor, serializing requests — pipeline runs included — exactly like
-  * the reference's single Flask worker. Within one request the Spark work
-  * fans out: a trigger runs each layer's statements concurrently, and the
-  * read endpoints run their per-table counts and samples concurrently
-  * ([[Pipeline.inParallel]]). State between requests lives in the session
-  * catalog (temp views), as the reference's lives in BigQuery datasets.
+  * seconds, requests are milliseconds). Handlers run on a fixed pool of
+  * [[HandlerThreads]], like the reference's gunicorn workers. Triggers are
+  * serialized behind one lock. The read endpoints never wait for a running
+  * trigger: `/verify-results` and `/sample-data` read the tables the last
+  * finished run stored and published ([[Pipeline.reading]]), as the
+  * reference's reads hit the tables its last CTAS stored in BigQuery, and
+  * `/` and `/status` touch no table. Within one request the Spark work fans
+  * out: a trigger runs each layer's statements concurrently, and the read
+  * endpoints run their per-table counts and samples concurrently
+  * ([[Pipeline.inParallel]]).
   */
 object Serve {
 
@@ -54,24 +58,40 @@ object Serve {
   val Endpoints: Seq[String] =
     Seq("/", "/trigger-etl", "/verify-results", "/sample-data", "/status")
 
+  /** Handler pool size: the reference serves under gunicorn with 2 workers
+    * × 8 threads (`Dockerfile:35`, SURVEY.md "serving workers"). */
+  val HandlerThreads = 16
+
+  /** An idle handler thread ends after this long, so none outlives a
+    * stopped server (`HttpServer.stop` leaves its executor running). */
+  private val HandlerIdleSeconds = 1L
+
   /** Start serving on `bindAddr:port` (0 = ephemeral; read it back from the
     * return value). The caller owns both the server and the session.
     * Loopback by default: `POST /trigger-etl` is arbitrary Spark compute and
     * the data endpoints sample live tables, so exposure beyond the host must
     * be a deliberate choice (pass an explicit interface address), not the
-    * bind-all default the reference's Flask app ships with. */
+    * bind-all default the reference's Flask app ships with. `layers` is the
+    * pipeline a trigger runs; its `gold` layer's tables are the samples. */
   def start(spark: SparkSession, dir: String, port: Int,
-            bindAddr: String = "127.0.0.1"): HttpServer = {
+            bindAddr: String = "127.0.0.1",
+            layers: Seq[(String, Seq[Pipeline.Statement])] = Pipeline.defaultLayers()
+           ): HttpServer = {
     val server = HttpServer.create(
       new InetSocketAddress(java.net.InetAddress.getByName(bindAddr), port), 0)
-    // DAEMON handler thread: HttpServer.stop() does not shut down a
-    // user-supplied executor, and a non-daemon leftover would keep the
-    // JVM alive after the owner stops the server
-    server.setExecutor(java.util.concurrent.Executors.newSingleThreadExecutor { r =>
-      val t = new Thread(r, "graft-serve")
-      t.setDaemon(true)
-      t
-    })
+    // daemon handler threads that end when idle: HttpServer.stop() does not
+    // shut down a user-supplied executor
+    val pool = new ThreadPoolExecutor(HandlerThreads, HandlerThreads,
+      HandlerIdleSeconds, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), { r =>
+        val t = new Thread(r, "graft-serve")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    server.setExecutor(pool)
+    val triggerLock = new Object
+    val tableNames = layers.flatMap(_._2.map(_._1))
+    val goldNames = layers.collect { case ("gold", sts) => sts.map(_._1) }.flatten
 
     server.createContext("/", handler { ex =>
       ex.getRequestURI.getPath match {
@@ -86,7 +106,7 @@ object Serve {
       if (ex.getRequestMethod != "POST")
         (405, """{"status":"error","error":"use POST"}""")
       else {
-        val report = Pipeline.run(spark, dir)
+        val report = triggerLock.synchronized(Pipeline.run(spark, dir, layers))
         val base =
           s""""layers_processed":${arr(report.layersProcessed.map(q))},""" +
             s""""duration_sec":${report.durationSec}"""
@@ -104,27 +124,24 @@ object Serve {
     })
 
     server.createContext("/verify-results", handler { _ =>
-      // inventory over the session catalog — requires a prior trigger run,
-      // exactly like the reference's verify against the live datasets; the
-      // per-table recounts run concurrently
-      val names = Pipeline.defaultLayers().flatMap(_._2.map(_._1))
-      val checks = Pipeline.inParallel(names) { name =>
-        val present = spark.catalog.tableExists(name)
-        val rows = if (present) spark.table(name).count() else -1L
-        s"""{"table":${q(name)},"present":$present,"rows":$rows}"""
+      // inventory of the published tables, each counted from its stored
+      // RDD — requires a prior trigger run, exactly like the reference's
+      // verify against the live datasets; the counts run concurrently
+      val checks = Pipeline.reading(spark) { tables =>
+        Pipeline.inParallel(tableNames) { name =>
+          val rows = tables.get(name).fold(-1L)(_.count())
+          s"""{"table":${q(name)},"present":${rows >= 0},"rows":$rows}"""
+        }
       }
       (200, s"""{"status":"success","tables":${arr(checks)}}""")
     })
 
     server.createContext("/sample-data", handler { _ =>
-      val golds = Seq("gold_sales_analytics", "gold_product_metrics", "gold_sales_summary")
-      val samples = Pipeline.inParallel(golds) { name =>
-        if (!spark.catalog.tableExists(name))
-          s"""{"table":${q(name)},"rows":[]}"""
-        else {
+      val samples = Pipeline.reading(spark) { tables =>
+        Pipeline.inParallel(goldNames) { name =>
           // toJSON keeps the engine-side row rendering; take(5) mirrors the
           // reference's LIMIT 5 sample (`main.py:122-131`)
-          val rows = spark.table(name).toJSON.take(5).toSeq
+          val rows = tables.get(name).fold(Seq.empty[String])(_.df.toJSON.take(5).toSeq)
           s"""{"table":${q(name)},"rows":${arr(rows)}}"""
         }
       }

@@ -1,5 +1,7 @@
 package org.apache.spark
 
+import org.apache.spark.rdd.RDD
+
 /** Bridge into `private[spark]` core surface (the spark-core analog of
   * [[org.apache.spark.sql.GraftSql]]). */
 object GraftSpark {
@@ -10,4 +12,10 @@ object GraftSpark {
     * of racing a fixed sleep on a loaded box. */
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** Drop a locally checkpointed RDD's blocks. `RDD.unpersist` does the same
+    * but warns that the lineage is gone, once per released table: callers
+    * release only RDDs nothing reads again. */
+  def release(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

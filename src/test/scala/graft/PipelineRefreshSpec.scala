@@ -65,6 +65,36 @@ class PipelineRefreshSpec extends AnyFunSuite {
     }
   }
 
+  test("the served tables are what the last run stored, until the next trigger") {
+    import ServeCalls._
+    val spark = TestSpark.spark.newSession()
+    withCopy { dir =>
+      val server = Serve.start(spark, dir.toString, 0)
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      def served(): Map[String, Long] = servedCounts(get(base, "/verify-results").body())
+      try {
+        assert(post(base, "/trigger-etl").statusCode() == 200)
+        val first = served()
+        assert(first.size == 9)
+        assert(spark.table("silver_sales").count() == first("silver_sales"))
+
+        // replace the copy's lineitem with every other order of the original
+        replaceTable(dir, "lineitem",
+          Tables.lineitem(spark, TestSpark.Sf0001).filter(col("l_orderkey") % 2 === 0))
+        assert(served() == first, "/verify-results recounts the new input")
+        assert(spark.table("silver_sales").count() == first("silver_sales"))
+
+        assert(post(base, "/trigger-etl").statusCode() == 200)
+        val second = served()
+        val fresh = Tables.lineitem(spark, dir.toString).count()
+        assert(second("bronze_lineitem") == fresh && fresh < first("bronze_lineitem"))
+        assert(second("silver_sales") < first("silver_sales"))
+        assert(second("bronze_part") == first("bronze_part"))
+        assert(spark.table("silver_sales").count() == second("silver_sales"))
+      } finally server.stop(0)
+    }
+  }
+
   test("declared queries rebuilt after the input changes read the new input") {
     val spark = TestSpark.spark.newSession()
     val names = Seq("sample_token_budget", "text_dup_spans", "text_oov_rate", "events_drift")

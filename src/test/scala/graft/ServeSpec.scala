@@ -1,31 +1,20 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.HttpResponse
+import java.time.Duration
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.jdk.CollectionConverters._
 
 /** The HTTP serving analog (reference `main.py:25-177`), driven end-to-end
   * over a real socket: health, trigger (success AND the 500+suggestion
   * error contract), verification inventory, gold samples, and status. */
 class ServeSpec extends AnyFunSuite {
+  import ServeCalls._
+
   private lazy val spark = TestSpark.spark
-  private lazy val client = HttpClient.newHttpClient()
-
-  private def get(base: String, path: String): HttpResponse[String] =
-    client.send(
-      HttpRequest.newBuilder(URI.create(s"$base$path")).GET().build(),
-      HttpResponse.BodyHandlers.ofString())
-
-  private def post(base: String, path: String): HttpResponse[String] =
-    client.send(
-      HttpRequest.newBuilder(URI.create(s"$base$path"))
-        .POST(HttpRequest.BodyPublishers.noBody()).build(),
-      HttpResponse.BodyHandlers.ofString())
-
-  /** `/verify-results` rows by table. */
-  private def servedCounts(body: String): Map[String, Long] =
-    raw"""\{"table":"(\w+)","present":true,"rows":(\d+)\}""".r
-      .findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toLong).toMap
 
   /** The oracle-green row count of every pipeline table: bronze_<t> is a
     * CTAS of source <t>, whose count meta_row_counts pins; silver/gold are
@@ -38,13 +27,6 @@ class ServeSpec extends AnyFunSuite {
       case t => t -> SparkEntry.queries(t)(spark, TestSpark.Sf0001).count()
     }.toMap
   }
-
-  /** `/sample-data` rows by gold table, each row a JSON object. */
-  private def sampledRows(body: String): Map[String, Seq[String]] =
-    raw"""\{"table":"(gold_\w+)","rows":\[(.*?)\]\}""".r
-      .findAllMatchIn(body)
-      .map(m => m.group(1) -> m.group(2).split(raw"(?<=\}),(?=\{)").filter(_.nonEmpty).toSeq)
-      .toMap
 
   test("the five reference endpoints serve the contract") {
     val server = Serve.start(spark, TestSpark.Sf0001, 0)
@@ -166,5 +148,95 @@ class ServeSpec extends AnyFunSuite {
       assert(r.body().contains("\"suggestion\""))
       assert(r.body().contains("\"layers_processed\":[]"))
     } finally server.stop(0)
+  }
+
+  test("reads answer from the last finished run while a trigger runs") {
+    // a second trigger's gold statements wait on `release`
+    val hold = new AtomicBoolean(false)
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val layers = Pipeline.defaultLayers().map {
+      case ("gold", sts) => "gold" -> sts.map { case (name, fn) =>
+        name -> { (s: SparkSession, d: String) =>
+          if (hold.get) { entered.countDown(); release.await(5, TimeUnit.MINUTES) }
+          fn(s, d)
+        }: Pipeline.Statement
+      }
+      case other => other
+    }
+    val session = spark.newSession()
+    val server = Serve.start(session, TestSpark.Sf0001, 0, layers = layers)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val trigger = Executors.newSingleThreadExecutor()
+    try {
+      assert(post(base, "/trigger-etl").statusCode() == 200)
+      val counts = servedCounts(get(base, "/verify-results").body())
+      val rows = sampledRows(get(base, "/sample-data").body())
+      assert(counts == expectedCounts())
+      assert(rows.keySet == Set(
+        "gold_sales_analytics", "gold_product_metrics", "gold_sales_summary"))
+
+      hold.set(true)
+      val second = trigger.submit(new Callable[HttpResponse[String]] {
+        def call(): HttpResponse[String] = post(base, "/trigger-etl")
+      })
+      assert(entered.await(2, TimeUnit.MINUTES), "the second trigger never reached gold")
+      val quick = Duration.ofSeconds(20)
+      val status = get(base, "/status", quick)
+      assert(status.statusCode() == 200)
+      val verify = get(base, "/verify-results", quick)
+      assert(verify.statusCode() == 200)
+      assert(servedCounts(verify.body()) == counts)
+      val sample = get(base, "/sample-data", quick)
+      assert(sample.statusCode() == 200)
+      assert(sampledRows(sample.body()) == rows)
+      assert(!second.isDone, "the trigger finished while its gold was held")
+
+      release.countDown()
+      assert(second.get(5, TimeUnit.MINUTES).statusCode() == 200)
+    } finally {
+      release.countDown()
+      trigger.shutdown()
+      server.stop(0)
+    }
+  }
+
+  test("stored tables do not pile up across triggers") {
+    val session = spark.newSession()
+    val sc = session.sparkContext
+    session.catalog.clearCache() // other specs share the cache too
+    val before = sc.getPersistentRDDs.keys.toSet
+    val server = Serve.start(session, TestSpark.Sf0001, 0)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    try {
+      (1 to 5).foreach(_ => assert(post(base, "/trigger-etl").statusCode() == 200))
+      // other specs share the SparkContext: count what these triggers left
+      val stored = sc.getPersistentRDDs.keys.toSet -- before
+      assert(stored.size <= Pipeline.defaultLayers().map(_._2.size).sum, stored)
+      assert(servedCounts(get(base, "/verify-results").body()) == expectedCounts())
+      // stored tables are local checkpoints, which the CacheManager never holds
+      assert(session.sharedState.cacheManager.isEmpty)
+    } finally server.stop(0)
+  }
+
+  test("handler threads end after the server stops") {
+    def handlers(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "graft-serve" && t.isAlive).toSet
+    val before = handlers()
+    val server = Serve.start(spark, TestSpark.Sf0001, 0)
+    val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+    val clients = Executors.newFixedThreadPool(4)
+    val started = try {
+      val calls = (1 to 8).map(_ => clients.submit(new Callable[Int] {
+        def call(): Int = get(base, "/status").statusCode()
+      }))
+      assert(calls.map(_.get(2, TimeUnit.MINUTES)).forall(_ == 200))
+      handlers() -- before
+    } finally { clients.shutdown(); server.stop(0) }
+    assert(started.nonEmpty, "no handler thread served the calls")
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+    while (started.exists(_.isAlive) && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(!started.exists(_.isAlive), s"${started.count(_.isAlive)} handler threads outlive the server")
+    assert(handlers().size <= before.size)
   }
 }
