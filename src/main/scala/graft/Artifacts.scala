@@ -155,11 +155,9 @@ object Artifacts {
       bucketCols: Seq[String])(build: => DataFrame): DataFrame =
     spark.table(materialize(normKey(spark, dir, name)) { () =>
       val p = dataPath(spark, name)
-      // artifacts live in their OWN catalog database: catalog-surface
-      // queries (inventory/columns) enumerate the default namespace, so a
-      // growing artifact set can never drift into their output — the
-      // namespace IS the filter (Round7Spec pins non-leakage), and an
-      // operator can inspect the index estate with a plain
+      // artifacts live in their OWN catalog database: a listing of the
+      // default namespace never shows the index estate (Round7Spec pins
+      // non-leakage), and an operator can inspect it with a plain
       // `SHOW TABLES IN graft_artifacts`
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $ArtifactDb")
       val tbl = s"$ArtifactDb.graft_art_" + p.substring(p.lastIndexOf('/') + 1)

@@ -34,11 +34,6 @@ object Verify {
     // sf0.01 gate keeps using oracle_sql.json untouched
     Files.writeString(Paths.get(s"$outDir/oracle_stage_sql.json"),
       StagedOracles.json)
-    // release what the kept in-query persists (winnow fingerprints,
-    // incremental-LSH candidates) leave cached — the long-lived-session
-    // analog of dropping a pipeline stage's intermediate tables when the
-    // stage ends
-    spark.catalog.clearCache()
     spark.stop()
   }
 }

@@ -352,13 +352,12 @@ object Dedup {
 
   /** The MinHash signature table (doc_id, sig: array of numPerms longs) —
     * referenced three times per pipeline run (banding + both sides of the
-    * estimate join). The default geometry is an artifact; any other is
-    * persisted, because without it the 16x4 geometry measured 1358 ->
-    * 1887 ms (sf0.1, 4 cores, cache cleared before each run, median of 6
-    * alternating pairs, slower in 6 of 6). */
+    * estimate join), so it is an artifact. A non-default signature length
+    * suffixes the name, so it never shadows the default table. */
   private def minhashSignatures(
       spark: SparkSession, dir: String, numPerms: Int): DataFrame = {
-    def build = {
+    val suffix = if (numPerms == NumPerms) "" else s"_p$numPerms"
+    Artifacts.table(spark, dir, s"dedup_minhash_sig$suffix") {
       val sh = shingleIndex(spark, dir)
         .withColumn("base", col("h") % MersenneP)
       val minhashes = (0 until numPerms).map(i =>
@@ -368,9 +367,6 @@ object Dedup {
         .withColumn("sig", array((0 until numPerms).map(i => col(s"h$i")): _*))
         .select("doc_id", "sig")
     }
-    if (numPerms == NumPerms)
-      Artifacts.table(spark, dir, "dedup_minhash_sig")(build)
-    else build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** (doc_id, band, k0..k⌈r/2⌉₋₁) from a signature table: each band's
@@ -876,7 +872,7 @@ object Dedup {
     * positives, recall, precision. The dedup twin of `sim_recall_eval`:
     * the number you check before trusting a band geometry in production
     * (the S-curve says what recall SHOULD be; this measures it). Both
-    * inputs are the already-persisted pipeline products, so the evaluation
+    * inputs are written pipeline artifacts, so the evaluation
     * costs two small joins. Precision can be < 1 even though candidates
     * are exactly verified: LSH verifies over ALL shared shingles while the
     * ground truth scores over the df-capped index — the report quantifies
@@ -915,7 +911,8 @@ object Dedup {
     * with every dedup run — corpus size, survivors of the edge-wise
     * MinHash keep-set, and the character mass retained, in one row. Chars
     * aggregate in exact integers; fractions are single int/int divisions.
-    * Composes the persisted keep-set product with one corpus aggregate. */
+    * Composes the keep-set (an anti-join against the written MinHash pairs
+    * artifact) with one corpus aggregate. */
   def impact(spark: SparkSession, dir: String): DataFrame = {
     val before = Tables.documents(spark, dir)
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars_before"))
@@ -970,25 +967,22 @@ object Dedup {
     * shorter than W+7 chars have no full window and drop out (by
     * construction). */
   def winnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    // PERSIST, not an Artifacts table, on purpose: the fingerprint set has
-    // a single consuming query (three references within it) — a written
-    // artifact measured no faster than the memory-cached relation here,
-    // and the artifact layer only pays for itself on CROSS-query products.
-    // Without the persist the query measured 2925 -> 4454 ms (sf0.1,
-    // 4 cores, cache cleared before each run, median of 6 alternating
-    // pairs, slower in 6 of 6).
-    val fps = Tables.documents(spark, dir)
-      .filter(length(col("text")) >= 8 + WinnowW - 1) // ≥ one full window
-      // native one-pass fingerprinting (round-17): the chained HOF form
-      // (hash array projection, then array_min over a slice per window)
-      // was CodegenFallback and allocated a W-element slice per window
-      // position — O(len·W) interpreted evaluations per document, the
-      // heaviest per-row loop in the dedup tier. WinnowFingerprints is the
-      // same grams → windowed-min → first-occurrence-distinct computation
-      // as one compiled loop (WinnowFnsSpec pins bit-equality).
-      .select(col("doc_id"),
-        explode(graft.functions.TextFns.winnowFps(col("text"), WinnowW)).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read twice below; without reuse the query measured 1.5x slower. Per-doc
+    // arrays: an exploded-row artifact made the first call 1.13x slower
+    val fpsByDoc = Artifacts.table(spark, dir, "dedup_winnow_fps") {
+      Tables.documents(spark, dir)
+        .filter(length(col("text")) >= 8 + WinnowW - 1) // ≥ one full window
+        // native one-pass fingerprinting (round-17): the chained HOF form
+        // (hash array projection, then array_min over a slice per window)
+        // was CodegenFallback and allocated a W-element slice per window
+        // position — O(len·W) interpreted evaluations per document, the
+        // heaviest per-row loop in the dedup tier. WinnowFingerprints is the
+        // same grams → windowed-min → first-occurrence-distinct computation
+        // as one compiled loop (WinnowFnsSpec pins bit-equality).
+        .select(col("doc_id"),
+          graft.functions.TextFns.winnowFps(col("text"), WinnowW).as("fps"))
+    }
+    val fps = fpsByDoc.select(col("doc_id"), explode(col("fps")).as("fp"))
     // Round-18 (guide §3.2/§2.4): semi-reduce then group-enumerate. A
     // fingerprint can only form pairs when 2 ≤ df ≤ DfCap, so ONE semi-join
     // against that (small) eligible set drops both the over-cap stop-prints
@@ -1039,8 +1033,8 @@ object Dedup {
     * 0.1 … 0.9 — the calibration table you read BEFORE picking a dedup
     * threshold (and the empirical side of the LSH S-curve: band geometry
     * is tuned so the curve's midpoint sits at the chosen threshold). One
-    * conditional aggregation over the already-persisted pair-intersection
-    * table — the sweep costs nothing beyond the pipeline that produced the
+    * conditional aggregation over the written pair-intersection artifact
+    * — the sweep costs nothing beyond the pipeline that produced the
     * candidates; every threshold appears even with zero pairs. The
     * jaccard double is an int/int division computed identically on both
     * engines, so the threshold comparisons agree bit-for-bit. */
@@ -1091,8 +1085,8 @@ object Dedup {
     * rollout runs before trusting either detector alone: high agreement
     * says the corpus's near-dups are plain copies (either detector
     * suffices); low agreement says paraphrase-heavy (semantic catches what
-    * lexical misses) or template-heavy (vice versa). Both inputs are the
-    * persisted pipeline products, so this evaluator costs one semi-join +
+    * lexical misses) or template-heavy (vice versa). Both inputs are
+    * written pipeline artifacts, so this evaluator costs one semi-join +
     * three scalar aggregates. NULL agreement when both sets are empty
     * (0/0), identically on both engines. */
   def modalityAgreement(spark: SparkSession, dir: String): DataFrame = {
@@ -1504,13 +1498,11 @@ object Dedup {
       .join(newB.as("y"), bandJoinCond(nPacks) && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         lit(false).as("is_cross"))
-    val cand = cross.unionByName(within).distinct()
-      // two consumers below (the semi-reduction's key set + the scoring
-      // join) — persist so the band self-joins run once. Without this and
-      // the shCand persist the query measured 1440 -> 1738 ms (sf0.1,
-      // 4 cores, cache cleared before each run, median of 6 alternating
-      // pairs, slower in 6 of 6)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // read twice below (the semi-reduction's key set + the scoring join);
+    // shCand stays a plain plan: writing it as well measured slower
+    val cand = Artifacts.table(spark, dir, "dedup_incremental_lsh_cand") {
+      cross.unionByName(within).distinct()
+    }
     // exact-Jaccard verification, candidates only (the pipeline's tail).
     // Round-17 (guide §3.2): semi-reduce the corpus-sized shingle index to
     // the candidate docs ONCE — the former shape streamed the full index
@@ -1527,7 +1519,6 @@ object Dedup {
       .distinct()
     val shCand = shingleIndex(spark, dir)
       .join(candDocs, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sz = docSizesFull(spark, dir)
     cand
       .join(shCand.as("ca"), col("doc_a") === col("ca.doc_id"))

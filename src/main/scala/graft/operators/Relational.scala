@@ -222,31 +222,23 @@ object Relational {
       |ORDER BY s_suppkey""".stripMargin
 
   /** The medallion relations of [[Pipeline.defaultLayers]], by name (the
-    * reference's expected-table inventory, `etl_medallion.py:261-265`). */
+    * reference's expected-table inventory, `etl_medallion.py:261-265`).
+    * The catalog queries read names and columns from these relations'
+    * schemas and register nothing: a temp view named like a medallion
+    * table would replace the table a [[Pipeline.run]] published in the
+    * caller's session. */
   private def medallionLayers(spark: SparkSession, dir: String): Seq[(String, DataFrame)] =
     Pipeline.defaultLayers().flatMap(_._2).map { case (name, fn) => name -> fn(spark, dir) }
 
   /** Catalog inventory (S6/S7/S9 + the reference's expected-table contract,
-    * `etl_medallion.py:261-265`): register the medallion relations as temp
-    * views in a session catalog namespace-by-prefix, then read the inventory
-    * back from `spark.catalog`. The oracle pins the expected inventory as a
-    * literal — a schema contract, like the reference's hardcoded lists. */
+    * `etl_medallion.py:261-265`): each medallion relation's layer, name and
+    * column count. The oracle pins the expected inventory as a literal — a
+    * schema contract, like the reference's hardcoded lists. */
   def catalogInventory(spark: SparkSession, dir: String): DataFrame = {
-    val layers = medallionLayers(spark, dir)
-    layers.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    val inventory = spark.catalog.listTables()
-      .filter(col("isTemporary") === true)
-      .select(col("name"))
-      .filter(col("name").startsWith("bronze_") ||
-        col("name").startsWith("silver_") || col("name").startsWith("gold_"))
-      .withColumn("layer", split(col("name"), "_").getItem(0))
-      .withColumn("n_columns",
-        element_at(
-          map(layers.flatMap { case (n, df) =>
-            Seq(lit(n), lit(df.schema.fields.length))
-          }: _*),
-          col("name")))
-    inventory.select(col("layer"), col("name"), col("n_columns"))
+    import spark.implicits._
+    medallionLayers(spark, dir).map { case (name, df) =>
+      (name.takeWhile(_ != '_'), name, df.schema.fields.length)
+    }.toDF("layer", "name", "n_columns")
   }
 
   val catalogInventorySql: String =
@@ -264,32 +256,18 @@ object Relational {
       |ORDER BY name""".stripMargin
 
   /** Catalog column probe (S8): each medallion table's first-5 column names
-    * in ordinal order, read back through `spark.catalog.listColumns` after
-    * view registration — the reference's INFORMATION_SCHEMA.COLUMNS probe
+    * in ordinal order — the reference's INFORMATION_SCHEMA.COLUMNS probe
     * with `ordinal_position <= 5` (`etl_medallion.py:280-290`). The oracle
     * pins the expected names as a literal VALUES list: a schema contract,
     * so any accidental column rename/reorder in silver/gold turns this row
-    * red. */
+    * red. 44 driver-side metadata rows in one LocalRelation, zero jobs; the
+    * ordinal is correct by construction (Round18Spec pins ordinals = 1..5
+    * per table). */
   def catalogColumns(spark: SparkSession, dir: String): DataFrame = {
-    val layers = medallionLayers(spark, dir)
-    layers.foreach { case (name, df) => df.createOrReplaceTempView(name) }
-    // spark.catalog.listColumns is driver-side catalog metadata in schema
-    // (ordinal) order; collect it and emit the ordinal with an explicit
-    // zipWithIndex into one LocalRelation. The round-17 form derived the
-    // ordinal from monotonically_increasing_id, which was only 0-based
-    // sequential while ConvertToLocalRelation constant-folded each branch
-    // driver-side (partitionIndex 0) — an undocumented optimizer contract
-    // (round-17 ADVICE, medium). This form has no plan at all: 44 metadata
-    // rows, zero jobs, and the ordinal is correct by construction
-    // (Round18Spec pins ordinals = 1..5 per table).
     import spark.implicits._
-    layers.flatMap { case (name, _) =>
-      spark.catalog.listColumns(name).collect().toSeq
-        .take(5).zipWithIndex
-        .map { case (c, i) => (name, i + 1, c.name) }
+    medallionLayers(spark, dir).flatMap { case (name, df) =>
+      df.schema.fieldNames.take(5).zipWithIndex.map { case (c, i) => (name, i + 1, c) }
     }.toDF("name", "ordinal", "col_name")
-      .select(col("name"), col("ordinal").cast("int").as("ordinal"),
-        col("col_name"))
   }
 
   val catalogColumnsSql: String = {

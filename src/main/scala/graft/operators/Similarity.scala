@@ -1265,8 +1265,8 @@ object Similarity {
     * [[recallEval]]'s index-recall and [[lshRecall]]'s dedup-recall in the
     * evaluation tier. Ties in the dominant label break to the smallest
     * label (arg-max over cnt·1000−label — `mode()` ties are engine-
-    * arbitrary, a silent cross-engine divergence). Reuses the persisted
-    * refined-centroid tables; the label join broadcasts. */
+    * arbitrary, a silent cross-engine divergence). Reuses the written
+    * refined-centroid artifacts; the label join broadcasts. */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     // reads the materialized k-means assignment (round-18) — previously
     // re-derived corpus × k distances + the argmin window per run
@@ -2257,7 +2257,7 @@ object Similarity {
     * row counts hits via a semi-join of the exact result against the
     * approximate result on (query, neighbor); queries the index missed
     * entirely still appear (left join from the query set, 0 hits). The
-    * whole evaluation reuses the persisted band/centroid/code tables the
+    * whole evaluation reuses the written band/centroid/code artifacts the
     * index queries themselves build — at scale this runs as a cheap
     * side-query over materialized index artifacts, not a recompute. */
   def recallEval(spark: SparkSession, dir: String): DataFrame = {

@@ -1037,9 +1037,10 @@ object TextAnalysis {
     // The chained select materializes the array once — multi-referenced,
     // so CollapseProject cannot inline (duplicate) the call.
     Tables.documents(spark, dir)
+      .select(col("doc_id"), tokens(col("text")).as("_toks"))
       .select(col("doc_id"),
-        graft.functions.TextFns.tokenStats(tokens(col("text")), Nil).as("_st"),
-        size(tokens(col("text"))).as("n_tokens"))
+        graft.functions.TextFns.tokenStats(col("_toks"), Nil).as("_st"),
+        size(col("_toks")).as("n_tokens"))
       .select(
         col("doc_id"),
         col("n_tokens"),

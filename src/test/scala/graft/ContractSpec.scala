@@ -26,25 +26,24 @@ class ContractSpec extends AnyFunSuite {
     assert(names.distinct.size == names.size)
   }
 
-  /** The declared queries whose plans reach an in-query persist that stays
-    * because removing it measured slower with the cache cleared before each
-    * run (sf0.1, 4 cores, median of 6 alternating pairs, slower in 6 of 6).
-    * Every other query must leave the cache as it found it. */
-  private val KeptPersists = Set(
-    "dedup_winnow_pairs", // fingerprint stream, read twice: 2925 -> 4454 ms without
-    "dedup_incremental_lsh") // band candidates + their shingle slice: 1440 -> 1738 ms without
-
   test("every declared query executes at sf0.001") {
+    // a declared query leaves the caller's session as it found it: no
+    // cached relation, and the same temp views bound to the same plans
+    val catalog = spark.sessionState.catalog
+    def tempViews = catalog.getTempViewNames().map(n => n -> catalog.getRawTempView(n).get).toMap
     SparkEntry.queries.foreach { case (name, fn) =>
       spark.catalog.clearCache()
+      val views = tempViews
       val n = fn(spark, TestSpark.Sf0001).count()
       withClue(name)(assert(n >= 0))
-      if (!KeptPersists.contains(name))
-        withClue(s"$name leaves a cached relation: ") {
-          assert(spark.sharedState.cacheManager.isEmpty)
-        }
+      withClue(s"$name leaves a cached relation: ") {
+        assert(spark.sharedState.cacheManager.isEmpty)
+      }
+      val after = tempViews
+      withClue(s"$name changes the session's temp views: ") {
+        assert(after.keySet == views.keySet && views.forall { case (v, r) => after(v) eq r })
+      }
     }
-    spark.catalog.clearCache()
   }
 
   test("building events_rfm and events_time_to_convert launches no Spark job") {

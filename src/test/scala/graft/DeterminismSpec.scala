@@ -51,9 +51,10 @@ class DeterminismSpec extends AnyFunSuite {
   test("pipeline BUILDS are partition-independent (artifact cache bypassed)") {
     // Artifact-backed queries read the same written parquet under any
     // partitioning, so the first test no longer exercises their producer
-    // pipelines. Non-default geometries bypass the artifact cache and run
-    // the full pipelines live — the partition-independence claim is pinned
-    // on those, plus the shared components fixpoint on a synthetic graph.
+    // pipelines. Non-default geometries run their banding and verification
+    // live (the 16x4 MinHash writes only its signature table) — the
+    // partition-independence claim is pinned on those, plus the shared
+    // components fixpoint on a synthetic graph.
     import spark.implicits._
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     def runs(): Seq[Seq[String]] = {

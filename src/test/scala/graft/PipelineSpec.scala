@@ -93,4 +93,15 @@ class PipelineSpec extends AnyFunSuite {
     val e = intercept[LinkageError](Pipeline.run(spark, TestSpark.Sf0001, layers))
     assert(e.getMessage == "fatal")
   }
+
+  test("catalog queries built after a run leave the run's published tables in place") {
+    assert(Pipeline.run(spark, TestSpark.Sf0001).status == "success")
+    def stored = spark.table("silver_sales").queryExecution.analyzed
+      .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r }
+    assert(stored.isDefined)
+    Seq("rel_catalog_inventory", "rel_catalog_columns").foreach { name =>
+      assert(SparkEntry.queries(name)(spark, TestSpark.Sf0001).count() > 0)
+      withClue(s"after $name: ")(assert(stored.isDefined))
+    }
+  }
 }

@@ -101,6 +101,15 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("transform("), "HOF crept back into the bigram path")
   }
 
+  test("text_repetition tokenizes each document once") {
+    val plan = SparkEntry.queries("text_repetition")(spark, TestSpark.Sf001)
+      .queryExecution.optimizedPlan
+    val splits = plan.flatMap(_.expressions.flatMap(_.collect {
+      case s: org.apache.spark.sql.catalyst.expressions.StringSplit => s
+    }))
+    assert(splits.size == 1, plan.treeString.take(1200))
+  }
+
   test("winnow fingerprint is a pure projection — no shuffle before the sort") {
     val p = finalPlan("text_winnow_fingerprint")
     // the per-doc min-gram-hash is computed in place (array_min∘transform),

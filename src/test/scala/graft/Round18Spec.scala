@@ -49,11 +49,11 @@ class Round18Spec extends AnyFunSuite {
       assert(ordinals === (1 to rs.length), s"$table: $ordinals")
       assert(rs.length <= 5, table)
     }
-    // first-5 column names must match the registered view's schema order
+    // first-5 column names must match the medallion relation's schema order
     val byName = rows.map { case (t, rs) =>
       t -> rs.sortBy(_.getInt(1)).map(_.getString(2)).toSeq
     }
-    val expected = spark.table("silver_sales").schema.fieldNames.take(5).toSeq
+    val expected = operators.Medallion.silverSales(spark, dir).schema.fieldNames.take(5).toSeq
     assert(byName("silver_sales") === expected)
   }
 

@@ -15,7 +15,8 @@ class SessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
     assert(conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true")
     assert(conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
-    assert(conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    // Spark's default: no declared query caches a relation
+    assert(conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "false")
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
   }
 
