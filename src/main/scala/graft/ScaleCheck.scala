@@ -372,6 +372,14 @@ object ScaleCheck {
       regimeResults.map { case (n, ok, rows) =>
         s"$n=${if (ok) "ok" else "DIFF"}($rows)" }.mkString(" "))
 
+    //     and the k-core's forced distributed peel against the default
+    //     single-task finish: no workload runs the distributed levels, and
+    //     their anti-joins rest on AQE's runtime broadcast/shuffle choice
+    val (kcoreOk, kcoreRows) = sameRel(operators.Similarity.kcore(spark, dir),
+      operators.Similarity.kcoreWithThreshold(spark, dir, 0L))
+    report("kcore_regimes", kcoreOk,
+      s"distributed=${if (kcoreOk) "ok" else "DIFF"}($kcoreRows)")
+
     // 17. forced skew refinement (round-13 directives #2/#3): the real
     //     per-user activity distribution — heavily tied counts, the
     //     modal-value shape the census refinement exists for — through

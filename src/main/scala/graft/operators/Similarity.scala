@@ -2403,29 +2403,6 @@ object Similarity {
 
   private[graft] val CoreK = 3
 
-  /** Peel levels chained between lineage truncations in [[kcore]] — a
-    * batching factor, not a round cap: the loop still runs to the
-    * fixpoint (exit = an empty peeled set, never a level count). */
-  private[graft] val PeelsPerJob = 4
-
-  /** k-CORE decomposition (peel to fixpoint) of the MUTUAL-kNN graph: keep
-    * only edges where each endpoint ranks the other in its top-k (the
-    * symmetric backbone — one-directional kNN edges are dominated by hubs),
-    * then drop every node with degree < [[CoreK]], recompute degrees on the
-    * surviving subgraph, and REPEAT UNTIL THE EDGE SET IS STABLE — the
-    * standard community-density filter (nodes outside the 3-core are
-    * weakly-embedded points; inside it, dense regions a curriculum/cluster
-    * stage would target). The peel only ever removes edges, so a
-    * non-converged round strictly shrinks the count and the loop terminates
-    * in at most |E| rounds; in practice O(peel depth) rounds. A FIXED round
-    * cap here was the round-6 wrong-at-scale bug: 8 rounds converged at
-    * sf0.1 but left a pre-fixpoint "core" at sf1 (vertices below k), and a
-    * cap-unrolled oracle agreed with the wrong answer — [[graft.ScaleCheck]]
-    * now asserts the degree-≥-k fixpoint property itself at every new
-    * scale. Each round is two semi-joins + a map-side-combined degree
-    * count, and each generation is lineage-truncated the same way
-    * [[graft.operators.Dedup.components]] is — the iterative-fixpoint
-    * discipline at scale. */
   /** The MUTUAL-kNN edge set (a, b): kNN edges where each endpoint ranks
     * the other in its top-k — the symmetric backbone both graph analyses
     * (k-core, neighborhood Jaccard) read. Materialized once. */
@@ -2469,128 +2446,56 @@ object Similarity {
       !removed.getOrElse(a, false) && !removed.getOrElse(b, false) }
   }
 
+  /** k-CORE decomposition of the MUTUAL-kNN graph ([[mutualEdges]], the
+    * symmetric backbone — one-directional kNN edges are dominated by hubs):
+    * drop every vertex with degree < [[CoreK]], recompute degrees on the
+    * surviving subgraph, and repeat until nothing is peeled — the standard
+    * community-density filter (vertices outside the 3-core are weakly
+    * embedded; inside it, dense regions a curriculum/cluster stage would
+    * target). Returns (vec_id, degree_in_core).
+    *
+    * The peel runs in two regimes, split by the edge count:
+    *  - ABOVE [[LocalPeelEdges]]: a level-synchronous distributed peel on
+    *    [[Graph.fixpoint]]. Each level anti-joins the `deg < k` aggregate
+    *    on `a` and on `b`; AQE picks broadcast or shuffle for those joins
+    *    from the aggregate's measured size, so no level collects its
+    *    peeled set. The measure is the edge count: a peeled vertex always has
+    *    an edge, so an unchanged count means nothing was peeled.
+    *  - AT OR BELOW it: the remaining subgraph fits one task (≤ ~50 MB),
+    *    and a single mapPartitions runs [[localPeel]] to the fixpoint — one
+    *    job instead of the round-bound tail of ~0.15 s scheduler
+    *    round-trips (37 levels at sf1). The k-core is unique, so the result
+    *    equals the level-synchronous one.
+    *
+    * A FIXED round cap here was the round-6 wrong-at-scale bug: 8 rounds
+    * converged at sf0.1 but left vertices below k at sf1, and a
+    * cap-unrolled oracle agreed with the wrong answer — [[graft.ScaleCheck]]
+    * asserts the degree-≥-k property itself at every swept scale. */
   def kcore(spark: SparkSession, dir: String): DataFrame =
     kcoreWithThreshold(spark, dir, LocalPeelEdges)
 
-  /** Max peeled-set rows the distributed peel will pull to the driver per
-    * level (≤ ~8 MB of longs — a free broadcast build). Levels that peel
-    * MORE than this stay fully distributed: on a 10⁹-vertex graph the
-    * first level routinely removes a large fraction of |V|, and an
-    * un-gated collect of that set is a driver OOM (the round-10 flag). */
-  private[graft] val PeelBroadcastRows = 1000000
-
   /** [[kcore]] with an explicit local-finish threshold — 0 forces the
     * pure distributed peel, Long.MaxValue the pure single-task peel;
-    * Round10Spec holds the two regimes' results identical.
-    * `broadcastGate` (default [[PeelBroadcastRows]]) caps the per-level
-    * driver collect; 0 forces the shuffle-anti-join fallback every level. */
+    * GraphSpec and ScaleCheck's `kcore_regimes` hold the results equal. */
   private[graft] def kcoreWithThreshold(spark: SparkSession, dir: String,
-      localThreshold: Long,
-      broadcastGate: Int = PeelBroadcastRows): DataFrame = {
+      localThreshold: Long): DataFrame = {
     import spark.implicits._
-    var edges = mutualEdges(spark, dir).localCheckpoint(eager = false)
-    var cnt = edges.count() // materialize the base once
-    // HYBRID PEEL (round 10). The peel has two regimes with different
-    // bottlenecks: the first levels are DATA-bound (they remove the bulk
-    // of the graph — distributed work Spark is right for), while the long
-    // convergence tail is ROUND-bound (37 levels at sf1, each a ~0.15 s
-    // scheduler round-trip shuffling a few thousand rows — 95% of the old
-    // 9.8 s cost was job overhead, not compute). So:
-    //
-    //  - ABOVE [[LocalPeelEdges]]: level-synchronous distributed peel.
-    //    Each level probes the PEELED set (deg < k — the small,
-    //    monotonically-shrinking side; Σ over all levels ≤ |V|) with
-    //    limit(gate+1).collect() — the driver never receives more than
-    //    `broadcastGate`+1 rows, whatever the level peels. Under the gate
-    //    the set becomes a LocalRelation whose broadcast build is free,
-    //    applied as two broadcast anti-joins (no shuffle); OVER the gate
-    //    (mass-peel levels of a huge sparse graph, where deg<k can be a
-    //    large fraction of |V|) the same aggregate is checkpointed on the
-    //    executors and applied as two shuffle anti-joins — slower per
-    //    level, but driver memory stays O(gate). Lineage truncates every
-    //    [[PeelsPerJob]] levels. Emptiness of the probe doubles as the
-    //    convergence check. (A lazily-chained keep-set-broadcast batch
-    //    was measured SLOWER: exchange reuse doesn't cross job boundaries,
-    //    so every build job re-executed all earlier levels' aggregates.)
-    //  - AT OR BELOW the threshold: the remaining subgraph fits ONE task
-    //    (≤ ~50 MB), so a single mapPartitions runs the exact queue-based
-    //    peel TO THE FIXPOINT in-executor — the verdict-suggested
-    //    iterate-until-local-stable step. One job replaces the entire
-    //    round-bound tail; the k-core's uniqueness makes the local result
-    //    identical to the level-synchronous one.
-    //
-    // At 100 TB the same shape holds: distributed levels do the mass
-    // removal at full parallelism, and the single-task finish only ever
-    // sees a bounded edge set (the gate is an edge COUNT, not a scale
-    // assumption).
-    var converged = cnt == 0L
-    var sinceTruncation = 0
-    // over-gate peeled sets pinned executor-side, released at the next
-    // lineage truncation: an eager localCheckpoint here was never
-    // reclaimed (round-11 advice) — its blocks outlived every level that
-    // referenced them. A persist is releasable; once `edges` has been
-    // re-checkpointed past the anti-joins, unpersisting the old sets can
-    // at worst force a deterministic re-aggregation from that checkpoint.
-    var pinnedRms = List.empty[org.apache.spark.sql.DataFrame]
-    def releasePinned(): Unit = {
-      pinnedRms.foreach(_.unpersist())
-      pinnedRms = Nil
-    }
-    while (!converged && cnt > localThreshold) {
+    val (edges, n) = Graph.fixpoint(mutualEdges(spark, dir), _.count(),
+        _ <= localThreshold) { edges =>
       val peeled = edges.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < CoreK).select(col("a"))
-      // limit(gate+1) bounds what reaches the driver: if the level peels
-      // ≤ gate vertices this IS the whole set, otherwise the extra row
-      // only signals "too big — stay distributed"
-      val probe = peeled.limit(broadcastGate + 1).collect()
-      if (probe.isEmpty) converged = true
-      else {
-        val rm =
-          if (probe.length <= broadcastGate)
-            broadcast(spark.createDataFrame(
-              java.util.Arrays.asList(probe: _*),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("rid",
-                  edges.schema("a").dataType)))))
-          else {
-            // over-gate level: re-run the same aggregate executor-side and
-            // pin it (one job) so the two anti-joins share one copy —
-            // nothing corpus-sized ever lands on the driver
-            val pinned = peeled.select(col("a").as("rid"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            pinned.count() // materialize now, while `edges` is current
-            pinnedRms ::= pinned
-            pinned
-          }
-        edges = edges
-          .join(rm, col("a") === col("rid"), "left_anti")
-          .join(rm.select(col("rid").as("rid2")),
-            col("b") === col("rid2"), "left_anti")
-          .select(col("a"), col("b"))
-        sinceTruncation += 1
-        if (sinceTruncation >= PeelsPerJob) {
-          edges = edges.localCheckpoint(eager = false)
-          cnt = edges.count()
-          releasePinned() // lineage truncated — the sets are unreferenced
-          sinceTruncation = 0
-        }
-      }
+        .filter(col("deg") < CoreK).select(col("a").as("rid"))
+      edges
+        .join(peeled, col("a") === col("rid"), "left_anti")
+        .join(peeled.select(col("rid").as("rid2")), col("b") === col("rid2"), "left_anti")
     }
-    if (pinnedRms.nonEmpty) {
-      // exited with pinned sets still in lineage: truncate once more so
-      // the release below cannot force a recompute of the final result
-      edges = edges.localCheckpoint(eager = false)
-      cnt = edges.count()
-      releasePinned()
-    }
-    if (!converged) {
-      edges = edges.select(col("a").cast("long"), col("b").cast("long"))
+    val core =
+      if (n > localThreshold) edges
+      else edges.select(col("a").cast("long"), col("b").cast("long"))
         .as[(Long, Long)]
         .coalesce(1)
         .mapPartitions(it => localPeel(it.toArray, CoreK))
         .toDF("a", "b")
-    }
-    edges.groupBy(col("a")).agg(count(lit(1)).as("degree_in_core"))
+    core.groupBy(col("a")).agg(count(lit(1)).as("degree_in_core"))
       .select(col("a").as("vec_id"), col("degree_in_core"))
   }
 

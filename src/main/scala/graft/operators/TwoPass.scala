@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * verdict's last scale-killer family (a corpus-cardinality relation put
   * through ONE window partition is a single-task sort at 10⁹-10¹⁰ docs).
   *
-  * Same shape as the `vecSide` / `PeelBroadcastRows` gates: BELOW
+  * Same shape as the `vecSide` gate: BELOW
   * [[WindowGateRows]] the plain global window runs (one sort task — the
   * fastest plan at every tested scale, and the semantic spec the DuckDB
   * oracles execute); ABOVE it the identical arithmetic runs distributed:
@@ -102,10 +102,10 @@ object TwoPass {
   private[graft] case class RefineStats(buckets: Int, refined: Int,
       groups: Int, maxGroup: Long)
 
-  /** Regime probe, the peel-gate idiom: the driver never receives more
-    * than gate+1 rows, whatever the relation holds. Callers whose
-    * windowed relation is expensive to produce (per-doc tokenization)
-    * pass a cheap 1:1 `probe` relation instead — the probe decides the
+  /** Regime probe: it collects at most gate+1 rows, whatever the
+    * relation holds. Callers whose windowed relation is expensive to
+    * produce (per-doc tokenization) pass a cheap 1:1 `probe` relation
+    * instead — the probe decides the
     * REGIME only, never a value, so the single requirement is equal row
     * counts. */
   private[graft] def overGate(df: DataFrame, gate: Long): Boolean =

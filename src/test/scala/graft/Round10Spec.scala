@@ -2,77 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
 
-/** Round-10 additions: the hybrid k-core peel (distributed mass removal +
-  * single-task iterate-until-local-stable finish) and the de-vacuized
-  * set-ops gate. */
+/** Round-10 additions: the de-vacuized set-ops gate (the hybrid k-core
+  * peel's specs live in GraphSpec). */
 class Round10Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  /** Level-synchronous reference peel — the definitionally-simple form the
-    * distributed implementation mirrors: remove ALL below-k vertices each
-    * round until stable. */
-  private def referencePeel(edges: Set[(Long, Long)], k: Int): Set[(Long, Long)] = {
-    var cur = edges
-    var stable = false
-    while (!stable) {
-      val deg = cur.groupBy(_._1).view.mapValues(_.size).toMap
-      val keep = deg.filter(_._2 >= k).keySet
-      val next = cur.filter { case (a, b) => keep(a) && keep(b) }
-      stable = next == cur
-      cur = next
-    }
-    cur
-  }
-
-  test("localPeel equals the level-synchronous reference on adversarial graphs") {
-    // symmetric edge lists (both directions), k = 3
-    def sym(pairs: (Long, Long)*): Set[(Long, Long)] =
-      pairs.toSet ++ pairs.map { case (a, b) => (b, a) }.toSet
-    val clique5 = sym((for {
-      a <- 0L to 4L; b <- 0L to 4L if a < b
-    } yield (a, b)): _*)
-    val chain = sym((0L until 10L).map(i => (i, i + 1)): _*)
-    // clique with a pendant path: the path peels away over several levels,
-    // the clique survives
-    val cliquePlusTail = clique5 ++ sym((4L, 5L), (5L, 6L), (6L, 7L))
-    // two cliques joined by a bridge — bridge endpoints keep degree >= 3
-    val bridged = clique5 ++
-      sym((for {
-        a <- 10L to 14L; b <- 10L to 14L if a < b
-      } yield (a, b)): _*) ++ sym((4L, 10L))
-    for ((g, name) <- Seq((clique5, "clique5"), (chain, "chain"),
-        (cliquePlusTail, "clique+tail"), (bridged, "bridged"),
-        (Set.empty[(Long, Long)], "empty"))) {
-      val got = Similarity.localPeel(g.toArray, 3).toSet
-      assert(got === referencePeel(g, 3), s"graph $name")
-    }
-  }
-
-  test("hybrid k-core: pure-distributed and pure-local regimes agree with " +
-    "the default on real data") {
-    val dir = TestSpark.Sf0001
-    def result(threshold: Long): Set[(Long, Long)] =
-      Similarity.kcoreWithThreshold(spark, dir, threshold).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val default = Similarity.kcore(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val distributed = result(0L) // every level runs the broadcast-anti-join path
-    val local = result(Long.MaxValue) // one mapPartitions does everything
-    // broadcastGate = 0 forces the over-gate fallback EVERY level: the
-    // peeled set is never collected, the anti-joins run as shuffle joins
-    // against the executor-side checkpoint (the 100 TB mass-peel path)
-    val shuffled = Similarity.kcoreWithThreshold(spark, dir, 0L, broadcastGate = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(distributed === local)
-    assert(default === local)
-    assert(shuffled === local)
-    assert(local.nonEmpty)
-    // and the shared fixpoint property
-    local.foreach { case (id, deg) =>
-      assert(deg >= Similarity.CoreK.toLong, s"vertex $id below k") }
-  }
 
   test("rel_set_ops returns a NON-EMPTY, non-total cohort (the gate " +
     "compares real rows, not empty-vs-empty)") {

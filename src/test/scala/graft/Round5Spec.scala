@@ -5,8 +5,9 @@ import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-5 additions: IDF-weighted Jaccard, semantic clusters, and the
-  * write-once Artifacts contract. */
+/** Round-5 additions: IDF-weighted Jaccard and the write-once Artifacts
+  * contract (the semantic-cluster and label-propagation specs live in
+  * GraphSpec). */
 class Round5Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -47,29 +48,6 @@ class Round5Spec extends AnyFunSuite {
     expected.foreach { case (k, v) => assert(got(k) == v, s"score mismatch at $k") }
   }
 
-  test("semantic clusters equal union-find over the cosine pair graph") {
-    val pairs = Similarity.embeddingCosinePairs(spark, TestSpark.Sf0001)
-      .select(col("vec_a"), col("vec_b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.nonEmpty, "fixture must exercise a non-trivial graph")
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val roots = parent.keys.map(v => v -> find(v)).toMap
-    val sizes = roots.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-    val expected = roots.map { case (v, r) => v -> (r, sizes(r)) }
-
-    val got = Similarity.semanticClusters(spark, TestSpark.Sf0001).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got == expected)
-  }
-
   test("multi-key blocking finds a superset of the single-prefix pairs") {
     val single = Dedup.nameEdit(spark, TestSpark.Sf0001).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getInt(2)).toMap
@@ -86,22 +64,6 @@ class Round5Spec extends AnyFunSuite {
       assert(byPfx || byLb)
       if (!byPfx) assert(!single.contains(k))
     }
-  }
-
-  test("label propagation converges on a chain deeper than the round cap") {
-    import spark.implicits._
-    // a 60-hop path: neighbor-only propagation needs 60 rounds (> the 20
-    // cap) — pointer jumping must close it in O(log n)
-    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
-    val got = operators.Graph.components(spark, chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == 61)
-    assert(got.values.forall(_ == 0L), "every chain node must reach the minimum")
-    // a second component stays separate
-    val two = chain.unionByName(Seq((1000L, 1001L), (1001L, 1002L)).toDF("a", "b"))
-    val got2 = operators.Graph.components(spark, two).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got2(1002L) == 1000L && got2(59L) == 0L)
   }
 
   test("mixture application realizes planned per-lang counts within sampling variance") {

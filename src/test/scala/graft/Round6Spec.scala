@@ -3,30 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-6 additions: scale-adaptive fixpoint partitioning and the
-  * cluster-real artifacts layer. */
+/** Round-6 additions: the cluster-real artifacts layer (the fixpoint
+  * partitioning spec lives in GraphSpec). */
 class Round6Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("components fixpoint partitioning follows the session shuffle setting") {
-    import spark.implicits._
-    val edges = (0L until 100L).map(i => (i, i + 1)).toDF("a", "b")
-    val orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      // the fixpoint's edge relation must be sized by the session, not a
-      // hardcoded width — 8 partitions on a 1000-executor cluster would cap
-      // every round of every near-dup component computation
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      assert(operators.Graph.fixpointPartitions(spark) == 7)
-      assert(operators.Graph.symmetrized(spark, edges).rdd.getNumPartitions == 7)
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
-      assert(operators.Graph.symmetrized(spark, edges).rdd.getNumPartitions == 13)
-      // and the fixpoint still converges to the right labels at either width
-      val got = operators.Graph.components(spark, edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size == 101 && got.values.forall(_ == 0L))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", orig)
-  }
 
   test("artifact cache key unifies file: URI forms with the bare local path") {
     // the readers accept either form (StageSpec); distinct keys would
