@@ -102,14 +102,9 @@ object Pipeline {
 
   private def msSince(t0: Long): Double = (System.nanoTime() - t0) / 1e6
 
-  /** A table a statement stored: `df` reads the locally checkpointed RDD. */
-  final class Stored private[Pipeline] (val df: DataFrame) {
-    private val rdd: RDD[_] =
-      df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
-
-    /** The row count, as one job over the stored blocks. */
-    def count(): Long = rdd.count()
-
+  /** A table a statement stored: `df` reads the locally checkpointed RDD,
+    * and `rows` is the count that forced it. */
+  final class Stored private[Pipeline] (val df: DataFrame, rdd: RDD[_], val rows: Long) {
     private[Pipeline] def release(): Unit = GraftSpark.release(rdd)
   }
 
@@ -155,11 +150,12 @@ object Pipeline {
     val (name, fn) = st
     val t0 = System.nanoTime()
     try {
-      val table = new Stored(fn(spark, dir).localCheckpoint(eager = false))
+      val df = fn(spark, dir).localCheckpoint(eager = false)
+      val rdd = df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
       // one job computes, stores and counts the table, like job.result() at
       // etl_medallion.py:67
-      val rows = try table.count() catch { case NonFatal(e) => table.release(); throw e }
-      (StatementResult(name, ok = true, None, rows, msSince(t0)), Some(table))
+      val rows = try rdd.count() catch { case NonFatal(e) => GraftSpark.release(rdd); throw e }
+      (StatementResult(name, ok = true, None, rows, msSince(t0)), Some(new Stored(df, rdd, rows)))
     } catch {
       case NonFatal(e) =>
         (StatementResult(name, ok = false, Some(truncate(e.getMessage)), -1L, msSince(t0)), None)

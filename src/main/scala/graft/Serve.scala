@@ -29,9 +29,10 @@ import scala.util.control.NonFatal
   * trigger: `/verify-results` and `/sample-data` read the tables the last
   * finished run stored and published ([[Pipeline.reading]]), as the
   * reference's reads hit the tables its last CTAS stored in BigQuery, and
-  * `/` and `/status` touch no table. Within one request the Spark work fans
-  * out: a trigger runs each layer's statements concurrently, and the read
-  * endpoints run their per-table counts and samples concurrently
+  * `/` and `/status` touch no table. `/verify-results` answers from the
+  * counts that forced each stored table and runs no job. Within one request
+  * the Spark work fans out: a trigger runs each layer's statements
+  * concurrently, and `/sample-data` samples the gold tables concurrently
   * ([[Pipeline.inParallel]]).
   */
 object Serve {
@@ -124,12 +125,12 @@ object Serve {
     })
 
     server.createContext("/verify-results", handler { _ =>
-      // inventory of the published tables, each counted from its stored
-      // RDD — requires a prior trigger run, exactly like the reference's
-      // verify against the live datasets; the counts run concurrently
+      // inventory of the published tables — requires a prior trigger run,
+      // exactly like the reference's verify against the live datasets. A
+      // stored table never changes, so its rows are the count that forced it
       val checks = Pipeline.reading(spark) { tables =>
-        Pipeline.inParallel(tableNames) { name =>
-          val rows = tables.get(name).fold(-1L)(_.count())
+        tableNames.map { name =>
+          val rows = tables.get(name).fold(-1L)(_.rows)
           s"""{"table":${q(name)},"present":${rows >= 0},"rows":$rows}"""
         }
       }

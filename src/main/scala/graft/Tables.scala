@@ -137,6 +137,18 @@ object Tables {
       if (f.name == "ts") f.copy(dataType = ts) else f))
   }
 
+  private val rowCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** The row count of one testdata table: one count job per table path per
+    * JVM, memoized like the events footer probe. A count only picks a plan
+    * shape (a row gate, a band geometry, a sample rate) or feeds a
+    * write-once artifact of the same input, so the memo never disagrees
+    * with an artifact already built from that input. */
+  def rows(spark: SparkSession, dir: String, name: String): Long =
+    rowCounts.computeIfAbsent(s"$dir/$name.parquet",
+      _ => Long.box(read(spark, dir, name).count()))
+
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     spark.read.schema(eventsReadSchema(spark, path)).parquet(path)

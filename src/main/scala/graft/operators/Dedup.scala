@@ -540,7 +540,7 @@ object Dedup {
     * spec run must never poison the default audit's tables. */
   private[graft] def bbitMinhashWithTarget(
       spark: SparkSession, dir: String, target: Long): DataFrame = {
-    val nDocs = Tables.documents(spark, dir).count()
+    val nDocs = Tables.rows(spark, dir, "documents")
     val sampleK = (nDocs + target - 1) / target
     val suffix = if (target == BbitSampleTarget) "" else s"_t$target"
     def inSample(idCol: Column): Column =

@@ -1101,7 +1101,7 @@ object EventTime {
     * is still 10⁸-10⁹ rows — borderline for one sorted partition — so the
     * decile assignment is row-gated by [[TwoPass.ntileDesc]] like the
     * corpus windows (single-task ntile below the gate, exact two-pass
-    * rank form above it; Round12Spec holds the regimes identical). The
+    * rank form above it; TwoPassSpec holds the regimes identical). The
     * ten-row cumulative window after the decile aggregate stays global by
     * design — its cardinality is the decile count. */
   def powerUsers(spark: SparkSession, dir: String): DataFrame =
@@ -1113,23 +1113,17 @@ object EventTime {
     val events = Tables.events(spark, dir)
     val perUser = events
       .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-    // regime probe: perUser is itself an aggregate, so a limit-probe on it
-    // cannot short-circuit (it would pay the full groupBy once more just
-    // to pick the regime — round-12 ADVICE). Estimate the post-agg
-    // cardinality with a map-side HLL over the pre-agg key instead: one
-    // scan, no full shuffle. HLL error only ever flips the regime near
-    // the gate, and the regimes are value-identical (Round12Spec), so the
-    // estimate can never change a result. The HLL scan itself is guarded
-    // by a cheap upper bound first (round-13 ADVICE: don't pay a fixed
-    // full scan on the common small-scale path): distinct users ≤ event
-    // rows, so when a limit-probe shows ≤ gate rows the regime is
-    // already decided and the HLL aggregate never runs.
-    val over = gate < 1L ||
-      (TwoPass.overGate(events, gate) && events
-        .agg(approx_count_distinct(col("user_id")).as("u"))
-        .head().getLong(0) > gate)
+    // perUser is an aggregate: distinct users <= event rows, so the
+    // (memoized) event count decides the regime whenever it is within the
+    // gate; only above it does a map-side HLL over the pre-agg key estimate
+    // the user count. HLL error only flips the regime near the gate, and
+    // the regimes are value-identical, so it never changes a result.
+    val nEvents = Tables.rows(spark, dir, "events")
+    val users =
+      if (nEvents <= gate) nEvents
+      else events.agg(approx_count_distinct(col("user_id"))).head().getLong(0)
     val deciles = TwoPass
-      .ntileDescRegime(perUser, "n_events", "user_id", 10, "decile", over)
+      .ntileDesc(perUser, "n_events", "user_id", 10, "decile", users, gate)
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_users"), sum(col("n_events")).as("n_events"))
     val tot = deciles.agg(sum(col("n_events")).as("total_events"))

@@ -390,7 +390,7 @@ object Multimodal {
     * the doc_id range (contiguous by construction). The prefix sum is
     * row-gated by [[TwoPass.prefixSum]]: the single-task global window
     * below the gate, the two-pass distributed form (per-bucket subtotals
-    * + broadcast offsets — same integer arithmetic) above it; Round12Spec
+    * + broadcast offsets — same integer arithmetic) above it; TwoPassSpec
     * holds the regimes value-identical. Payload bytes never move either
     * way: the window carries only (doc_id, n_bytes). */
   def shardManifest(spark: SparkSession, dir: String): DataFrame =
@@ -399,10 +399,8 @@ object Multimodal {
   private[graft] def shardManifestWithGate(
       spark: SparkSession, dir: String, gate: Long): DataFrame = {
     val base = features(spark, dir).select(col("doc_id"), col("n_bytes"))
-    // regime probe on the raw doc ids (1:1 with the feature rows) — the
-    // gate check must not pay the decode projection twice
-    TwoPass.prefixSum(base, "doc_id", "n_bytes", "cum_before", gate,
-      probe = Some(Tables.documents(spark, dir).select(col("doc_id"))))
+    TwoPass.prefixSum(base, "doc_id", "n_bytes", "cum_before",
+      Tables.rows(spark, dir, "documents"), gate)
       .withColumn("shard_id", expr(s"cum_before div $ShardBytes"))
       .groupBy(col("shard_id"))
       .agg(count(lit(1)).as("n_items"),

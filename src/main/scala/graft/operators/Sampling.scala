@@ -297,7 +297,7 @@ object Sampling {
     * below the gate (the oracle-serving plan at every tested scale), the
     * exact two-pass rank form (score-bucketed row_number + broadcast
     * bucket offsets + Spark's own tile arithmetic as a projection) above
-    * it; Round12Spec holds the regimes value-identical. */
+    * it; TwoPassSpec holds the regimes value-identical. */
   def curriculum(spark: SparkSession, dir: String): DataFrame =
     curriculumWithGate(spark, dir, TwoPass.WindowGateRows)
 
@@ -305,10 +305,8 @@ object Sampling {
       spark: SparkSession, dir: String, gate: Long): DataFrame = {
     val q = TextAnalysis.qualityScore(spark, dir)
       .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-    // regime probe on the raw doc ids (1:1 with q) — the gate check must
-    // not pay the per-doc quality tokenization twice
     TwoPass.ntileDesc(q, "quality_score", "doc_id", CurriculumPhases, "phase",
-      gate, probe = Some(Tables.documents(spark, dir).select(col("doc_id"))))
+      Tables.rows(spark, dir, "documents"), gate)
       .groupBy(col("phase"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("n_tokens"),

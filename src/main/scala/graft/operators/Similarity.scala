@@ -364,7 +364,7 @@ object Similarity {
     * self-join's candidate volume for that table — the quantity whose
     * growth rate decides whether the ANN tier is linear or quadratic. */
   private[graft] def bandOccupancy(spark: SparkSession, dir: String): DataFrame = {
-    val bits = bandBits(corpus(spark, dir).count())
+    val bits = bandBits(Tables.rows(spark, dir, "embeddings"))
     srpBands(spark, dir, "sim_srp_bands", NumTables, bits)
       .groupBy(col("tbl"), col("bkey")).agg(count(lit(1)).as("occ"))
       .groupBy(col("tbl"))
@@ -617,7 +617,7 @@ object Similarity {
   private[graft] def lshTopKBuild(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir)
     val bands = srpBands(spark, dir, "sim_srp_bands", NumTables,
-      bandBits(e.count()))
+      bandBits(Tables.rows(spark, dir, "embeddings")))
     val qBands = bands.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"), col("bkey").as("qkey"))
     val cand = bands.join(broadcast(qBands),
@@ -674,7 +674,7 @@ object Similarity {
     * rank-dominance of the returned similarities. */
   def multiProbeTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir)
-    val bits = bandBits(e.count())
+    val bits = bandBits(Tables.rows(spark, dir, "embeddings"))
     val bands = srpBands(spark, dir, "sim_srp_bands", NumTables, bits)
     val probes = bands.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"),
@@ -792,7 +792,7 @@ object Similarity {
   /** The producer pipeline (plan contract pinned in PlanSpec). */
   private[graft] def embeddingCosinePairsBuild(spark: SparkSession, dir: String): DataFrame = {
       val e = corpus(spark, dir)
-      val n = e.count()
+      val n = Tables.rows(spark, dir, "embeddings")
       val bits = bandBits(n)
       val bands = srpBands(spark, dir, "sim_srp_bands_pair",
         pairTablesFor(n), bits)
@@ -866,8 +866,7 @@ object Similarity {
     * both engines compute them bit-identically; any divergence in any
     * band row (plane sign, table index, bit weight) shifts them. */
   def pairBandAudit(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpus(spark, dir)
-    val n = e.count()
+    val n = Tables.rows(spark, dir, "embeddings")
     val bands = srpBands(spark, dir, "sim_srp_bands_pair",
       pairTablesFor(n), bandBits(n))
     val occ = bands.groupBy(col("tbl"), col("bkey"))
@@ -1351,7 +1350,7 @@ object Similarity {
 
   private[graft] def knnGraphBuild(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir)
-    val n = e.count()
+    val n = Tables.rows(spark, dir, "embeddings")
     // both self-join sides read the materialized band table
     val bands = srpBands(spark, dir, "sim_srp_bands", NumTables,
       bandBits(n))
@@ -2190,26 +2189,21 @@ object Similarity {
     * [[PrMass]] micro-units, ships `floor(mass·85 / (100·outdeg))` per
     * out-edge, and gets a 0.15·[[PrMass]] teleport — floor-div on
     * non-negative longs is identical everywhere, and the inbound long sum
-    * is associative. [[PrIters]] fixed iterations; each generation is
-    * `localCheckpoint`ed LAZILY (the components lesson: without lineage
-    * truncation, driver-side analysis — re-embedding the LSH subtree per
-    * round — dominates execution; eager=false keeps that truncation but
-    * folds the per-round materialization jobs into the single final
-    * action — each round's block set is computed exactly once on first
-    * use and cached, so the unrolled chain costs one job, not
-    * [[PrIters]]+1). At 100 TB: one join per iteration keyed
-    * on vec_id, mass table is node-bounded, edges re-read from their
-    * materialized table. */
+    * is associative. [[PrIters]] fixed iterations unrolled into one plan:
+    * the edges are a scan of the kNN-graph artifact, so the plan grows by
+    * one join and one aggregate per round and needs no lineage truncation
+    * (a `localCheckpoint` per generation ran every shuffle below it while
+    * the plan was being built, under AQE, and measured no faster). At
+    * 100 TB: one join per iteration keyed on vec_id, mass table is
+    * node-bounded, edges re-read from their materialized table. */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
     // (src, dst, outdeg) is STATIC across iterations — join degrees to the
     // edge relation once, outside the loop, so each round is a single join
-    // on src instead of two. The outdeg window needs no extra shuffle
-    // beyond the one materialized checkpoint.
+    // on src instead of two.
     val edges = knnGraph(spark, dir)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .withColumn("outdeg",
         count(lit(1)).over(Window.partitionBy(col("src"))))
-      .localCheckpoint(eager = false)
     val nodes = corpus(spark, dir).select(col("vec_id"))
     var rank = nodes.select(col("vec_id"), lit(PrMass).as("mass"))
     (1 to PrIters).foreach { _ =>
@@ -2221,7 +2215,6 @@ object Similarity {
         .join(contrib.select(col("dst").as("vec_id"), col("in_mass")), Seq("vec_id"), "left")
         .select(col("vec_id"),
           (lit(PrMass * 15 / 100) + coalesce(col("in_mass"), lit(0L))).as("mass"))
-        .localCheckpoint(eager = false)
     }
     rank.select(col("vec_id"), col("mass").as("rank_mass"))
   }

@@ -592,7 +592,7 @@ object TextAnalysis {
     * budget): an exclusive running sum, row-gated by [[TwoPass.prefixSum]]
     * — the single-task global window below the gate (the oracle-serving
     * plan at every tested scale), the two-pass distributed prefix sum
-    * (per-bucket subtotals + broadcast offsets) above it. Round12Spec
+    * (per-bucket subtotals + broadcast offsets) above it. TwoPassSpec
     * holds the regimes value-identical. */
   def tokenShards(spark: SparkSession, dir: String): DataFrame =
     tokenShardsWithGate(spark, dir, TwoPass.WindowGateRows)
@@ -601,10 +601,8 @@ object TextAnalysis {
       spark: SparkSession, dir: String, gate: Long): DataFrame = {
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens"))
-    // regime probe on the raw doc ids (1:1 with base) — the gate check
-    // must not pay the tokenization the query itself is about to do
-    TwoPass.prefixSum(base, "doc_id", "n_tokens", "cum_before", gate,
-      probe = Some(Tables.documents(spark, dir).select(col("doc_id"))))
+    TwoPass.prefixSum(base, "doc_id", "n_tokens", "cum_before",
+      Tables.rows(spark, dir, "documents"), gate)
       .select(col("doc_id"), col("n_tokens"),
         (col("cum_before") / ShardTokenBudget).cast("long").as("shard_id"))
   }

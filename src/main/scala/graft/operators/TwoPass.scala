@@ -26,9 +26,17 @@ import org.apache.spark.sql.functions._
   * input rows and ≤ ~1.5×10⁵ at 10¹⁰ — the round-12 fixed 32 was a
   * straggler/spill cap at exactly the scales the gate exists for.
   *
+  * Regime rule: each helper takes its input's row count `rows` and runs
+  * the single-task window iff `rows <= gate`. Callers pass
+  * [[graft.Tables.rows]] of the table their relation is 1:1 with (a
+  * per-JVM memo, so building the plan launches no job); a post-aggregate
+  * relation passes an upper bound or an estimate of its cardinality (see
+  * `EventTime.powerUsers`). The count decides the REGIME only, never a
+  * value.
+  *
   * The arithmetic is integer (prefix sums, row counts), so the two
   * regimes are value-identical — the gate can only change the exchange
-  * shape, never a result. Round12Spec pins regime equality on real data
+  * shape, never a result. TwoPassSpec pins regime equality on real data
   * and on adversarial tie/remainder cases; the over-gate plan is asserted
   * free of `Exchange SinglePartition`.
   *
@@ -102,15 +110,6 @@ object TwoPass {
   private[graft] case class RefineStats(buckets: Int, refined: Int,
       groups: Int, maxGroup: Long)
 
-  /** Regime probe: it collects at most gate+1 rows, whatever the
-    * relation holds. Callers whose windowed relation is expensive to
-    * produce (per-doc tokenization) pass a cheap 1:1 `probe` relation
-    * instead — the probe decides the
-    * REGIME only, never a value, so the single requirement is equal row
-    * counts. */
-  private[graft] def overGate(df: DataFrame, gate: Long): Boolean =
-    df.limit(gate.min(Int.MaxValue - 2L).toInt + 1).count() > gate
-
   /** EXCLUSIVE prefix sum of `valCol` in `orderCol` (ascending, unique
     * NON-NULL long key) order, emitted as long column `outCol`.
     *
@@ -126,10 +125,9 @@ object TwoPass {
     * form (the under-gate window would sort them first, so the regimes
     * would silently diverge). */
   private[graft] def prefixSum(df: DataFrame, orderCol: String,
-      valCol: String, outCol: String,
-      gate: Long = WindowGateRows,
-      probe: Option[DataFrame] = None): DataFrame =
-    if (!overGate(probe.getOrElse(df), gate)) {
+      valCol: String, outCol: String, rows: Long,
+      gate: Long): DataFrame =
+    if (rows <= gate) {
       val w = Window.orderBy(col(orderCol))
         .rowsBetween(Window.unboundedPreceding, -1)
       df.withColumn(outCol,
@@ -282,10 +280,9 @@ object TwoPass {
     * equal-width integer bucketing — and the integer sub-split of a hot
     * bucket's observed range — gives exactly. */
   private[graft] def prefixMaxExclusiveRange(df: DataFrame, orderCol: String,
-      valCol: String, outCol: String,
-      gate: Long = WindowGateRows,
-      probe: Option[DataFrame] = None): DataFrame =
-    if (!overGate(probe.getOrElse(df), gate)) {
+      valCol: String, outCol: String, rows: Long,
+      gate: Long): DataFrame =
+    if (rows <= gate) {
       val w = Window.orderBy(col(orderCol))
         .rangeBetween(Window.unboundedPreceding, -1)
       df.withColumn(outCol, max(col(valCol)).over(w).cast("long"))
@@ -339,23 +336,9 @@ object TwoPass {
     * per-sub recount) — the prefixSum input-cost contract applies:
     * persist an expensive upstream first. */
   private[graft] def ntileDesc(df: DataFrame, orderCol: String,
-      tieCol: String, k: Int, outCol: String,
-      gate: Long = WindowGateRows,
-      probe: Option[DataFrame] = None): DataFrame =
-    ntileDescRegime(df, orderCol, tieCol, k, outCol,
-      over = overGate(probe.getOrElse(df), gate))
-
-  /** [[ntileDesc]] with the regime decided BY THE CALLER — for callers
-    * whose windowed relation is itself an aggregate (no cheap 1:1 probe
-    * exists; `limit` cannot short-circuit an aggregation), which instead
-    * estimate the post-agg cardinality cheaply (e.g.
-    * `approx_count_distinct` on the pre-agg key: one map-side HLL scan,
-    * no shuffle of the full relation). Estimation error is harmless by
-    * construction: the two regimes are value-identical (Round12Spec), so
-    * the decision affects only the exchange shape. */
-  private[graft] def ntileDescRegime(df: DataFrame, orderCol: String,
-      tieCol: String, k: Int, outCol: String, over: Boolean): DataFrame =
-    if (!over) {
+      tieCol: String, k: Int, outCol: String, rows: Long,
+      gate: Long): DataFrame =
+    if (rows <= gate) {
       val w = Window.orderBy(col(orderCol).desc, col(tieCol))
       df.withColumn(outCol, ntile(k).over(w))
     } else distributedNtileDesc(df, orderCol, tieCol, k, outCol)

@@ -168,7 +168,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bucketed roundtrip joins bucket-to-bucket: no shuffle below the join") {
-    // both sides stored bucketBy(8, key): with broadcast disabled (at real
+    // both sides stored bucketed on the join key with one bucket count
+    // (Artifacts.bucketedTable): with broadcast disabled (at real
     // scale neither fact side broadcasts) the SMJ runs on bucket
     // co-location — the ONLY shuffle exchanges in the plan are the
     // post-join aggregation and the declared final sort. A non-bucketed

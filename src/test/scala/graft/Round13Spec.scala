@@ -163,8 +163,8 @@ class Round13Spec extends AnyFunSuite {
 
   test("power-users HLL regime probe: the estimated-over regime equals " +
     "the default single-task window on real data") {
-    // gate=1 forces the HLL probe to decide OVER (every corpus has > 1
-    // user); Round12Spec's gate=0 path skips the probe entirely
+    // gate=1 puts the event count over the gate, so the HLL user
+    // estimate decides OVER (every corpus has > 1 user)
     for (dir <- Seq(TestSpark.Sf0001, TestSpark.Sf001)) {
       val a = EventTime.powerUsers(spark, dir)
       val b = EventTime.powerUsersWithGate(spark, dir, 1L)

@@ -26,6 +26,13 @@ class Round7Spec extends AnyFunSuite {
     assert(!inDefault.exists(_.startsWith("graft_art_")), inDefault.mkString(","))
   }
 
+  test("rel_bucketed_roundtrip registers no table in the default namespace") {
+    assert(SparkEntry.queries("rel_bucketed_roundtrip")(spark, TestSpark.Sf0001)
+      .collect().nonEmpty)
+    val inDefault = spark.catalog.listTables("default").collect().map(_.name)
+    assert(!inDefault.exists(_.startsWith("graft_bkt_")), inDefault.mkString(","))
+  }
+
   test("catalog-surface queries never list artifact tables") {
     import spark.implicits._
     Artifacts.bucketedTable(spark, TestSpark.Sf0001, "r7_leak_probe", Seq("k")) {

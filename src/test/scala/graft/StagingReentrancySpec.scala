@@ -9,7 +9,8 @@ class StagingReentrancySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   Seq("rel_csv_roundtrip", "rel_csv_gzip_roundtrip", "rel_json_roundtrip",
-      "rel_orc_roundtrip", "rel_partitioned_roundtrip").foreach { name =>
+      "rel_orc_roundtrip", "rel_partitioned_roundtrip", "rel_bucketed_roundtrip",
+      "rel_uri_stage_roundtrip").foreach { name =>
     test(s"$name: the first build still executes after a second build") {
       val query = SparkEntry.queries(name)
       val first = query(spark, TestSpark.Sf0001)
