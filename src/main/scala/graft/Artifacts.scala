@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.GraftSpark
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
 import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -23,12 +24,14 @@ import scala.util.control.NonFatal
   * query run twice — reads the materialized table. Reuse is then a property
   * of the filesystem, not of cache-eviction luck; a consumer's plan starts
   * at a parquet scan of the artifact instead of embedding the producer's
-  * lineage. The scan carries the schema recorded when the artifact was
-  * written, so building a consumer launches no schema-inference job. On a
-  * real cluster these are warehouse tables written by the index-build
-  * stage and read by every serving / evaluation query (the reference's own
-  * medallion layering does exactly this between bronze→silver→gold;
-  * reference `etl_medallion.py:143-199`).
+  * lineage. The scan carries the schema the path's first read inferred
+  * ([[read]]), so building a consumer again launches no schema-inference
+  * job, and a build's own local checkpoints (a fixpoint's last generation)
+  * are released once the artifact is written. On a real cluster these are
+  * warehouse tables written by the index-build stage and read by every
+  * serving / evaluation query (the reference's own medallion layering
+  * does exactly this between bronze→silver→gold; reference
+  * `etl_medallion.py:143-199`).
   *
   * The artifact root is `SPARK_GRAFT_ARTIFACTS_DIR` when set — any
   * Hadoop-FS URI (`file://`, `hdfs://`, `s3a://`, `gs://` with the
@@ -138,20 +141,33 @@ object Artifacts {
       p
     }
 
-  /** The schema each [[table]] artifact's first read inferred, by path. */
+  /** The schema the first read of each artifact path inferred. */
   private val schemas = new ConcurrentHashMap[String, StructType]()
 
-  /** Return `name` for input `dir`, building + writing it on first use.
-    * The write records the schema its first read infers, and every read
-    * passes that schema back: the identical schema, without a parquet
-    * schema-inference job each time a query is built. */
+  /** Read artifact path `p` with `load`, passing it the schema `load`
+    * inferred on the first read of `p`: the identical schema, without a
+    * schema-inference job (parquet footers, CSV values, partition values)
+    * each time a query is built. Safe because every artifact path is
+    * written exactly once ([[path]]). */
+  def read(spark: SparkSession, p: String)(load: DataFrameReader => DataFrame): DataFrame =
+    load(spark.read.schema(schemas.computeIfAbsent(p, _ => load(spark.read).schema)))
+
+  /** Return `name` for input `dir`, building + writing it on first use,
+    * read through [[read]].
+    *
+    * Once written, the local checkpoints the build's own plan reads (the
+    * last generation of a [[operators.Graph.fixpoint]] loop) are released:
+    * nothing reads them again. A build reads only input files, other
+    * artifacts and its own generations, never a table [[Pipeline]]
+    * published, so no checkpoint it releases belongs to anyone else. */
   def table(spark: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame = {
     val p = path(spark, dir, name) { p =>
-      build.write.mode("overwrite").parquet(p)
-      schemas.put(p, spark.read.parquet(p).schema)
+      val df = build
+      df.write.mode("overwrite").parquet(p)
+      GraftSpark.release(df)
     }
-    spark.read.schema(schemas.get(p)).parquet(p)
+    read(spark, p)(_.parquet(p))
   }
 
   /** Like [[table]], but materialized as a BUCKETED catalog table on

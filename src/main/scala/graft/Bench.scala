@@ -12,9 +12,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
-    // ERROR, not WARN: benign CacheManager "already cached" warnings from
-    // re-running persisting queries otherwise flood the bounded stdout tail
-    // the driver parses the metric line from.
+    // ERROR, not WARN: the driver parses the metric line from a bounded
+    // stdout tail, so nothing below ERROR may crowd it out.
     spark.sparkContext.setLogLevel("ERROR")
     // optional comma-separated allowlist for focused timing runs
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * thousands of files never merge-infers schemas. This mirrors the
   * reference's silver-layer schema contract (reference
   * `etl_medallion.py:116-141` derives fixed silver schemas from SELECT
-  * lists) while the bronze CSV edge stays inference-based (`Csv` helpers
-  * below, reference `etl_medallion.py:90-99`).
+  * lists) while the bronze CSV edge stays inference-based
+  * ([[operators.Relational.csvRoundtrip]], reference
+  * `etl_medallion.py:90-99`).
   */
 object Tables {
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.GraftSpark
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by MIN-LABEL PROPAGATION with
@@ -70,7 +69,7 @@ object Graph {
           .select(col("l1.id"), col("l2.comp").as("comp")))
         .groupBy(col("id")).agg(min(col("comp")).as("comp"))
     }
-    release(sym) // the labels are materialized and no longer read it
+    GraftSpark.release(sym) // the labels are materialized and no longer read it
     labels
   }
 
@@ -93,16 +92,11 @@ object Graph {
     while (!done) {
       val next = step(cur).localCheckpoint(eager = false)
       val nextM = measure(next)
-      release(cur)
+      GraftSpark.release(cur)
       done = nextM == m || stop(nextM)
       cur = next
       m = nextM
     }
     (cur, m)
   }
-
-  /** Drop a materialized local checkpoint's blocks. */
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-      .foreach(GraftSpark.release)
 }

@@ -1,6 +1,8 @@
 package org.apache.spark
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into `private[spark]` core surface (the spark-core analog of
   * [[org.apache.spark.sql.GraftSql]]). */
@@ -18,4 +20,8 @@ object GraftSpark {
     * release only RDDs nothing reads again. */
   def release(rdd: RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Drop the blocks of every local checkpoint `df`'s plan reads. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.foreach(release(_))
 }

@@ -22,8 +22,6 @@ class DeterminismSpec extends AnyFunSuite {
     "sim_ivf_kmeans_topk", // iterative quantized k-means
     "sample_balanced_per_lang", // hash-order window rank
     "rel_zscore_outliers", // integer decision boundary (n·c−s)² vs 9(n·q−s²)
-    "sim_pca_power", // fixed-point power iteration, integer renormalization
-    "sim_kcore", // bounded peel fixpoint with early exit
     "events_top_paths") // ordered-pivot path fold + global-share window
 
   private def run(name: String): Seq[String] = {
@@ -54,7 +52,8 @@ class DeterminismSpec extends AnyFunSuite {
     // pipelines. Non-default geometries run their banding and verification
     // live (the 16x4 MinHash writes only its signature table) — the
     // partition-independence claim is pinned on those, plus the shared
-    // components fixpoint on a synthetic graph.
+    // components fixpoint on a synthetic graph, the power iteration and
+    // the k-core peel with its default single-task finish.
     import spark.implicits._
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     def runs(): Seq[Seq[String]] = {
@@ -76,7 +75,14 @@ class DeterminismSpec extends AnyFunSuite {
         .orderBy("vec_id", "rank").collect().map(_.toString).toSeq
       val pq = operators.Similarity.pqTopKBuild(spark, TestSpark.Sf0001)
         .orderBy("query_id", "rank").collect().map(_.toString).toSeq
-      Seq(lsh, sim, comp, bf, knn, pq)
+      // fixed-point power iteration, integer renormalization
+      val pca = operators.Similarity.pcaPowerBuild(spark, TestSpark.Sf0001)
+        .orderBy("d").collect().map(_.toString).toSeq
+      // peel fixpoint with its single-task finish
+      val kcore = operators.Similarity.kcoreWithThreshold(spark, TestSpark.Sf0001,
+          operators.Similarity.LocalPeelEdges)
+        .orderBy("vec_id").collect().map(_.toString).toSeq
+      Seq(lsh, sim, comp, bf, knn, pq, pca, kcore)
     }
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "32")
@@ -85,7 +91,8 @@ class DeterminismSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.shuffle.partitions", "5")
       val at5 = runs()
       Seq("minhash-lsh 16x4", "simhash 6x10", "components",
-        "bruteforce-topk build", "knn-graph build", "pq-topk build")
+        "bruteforce-topk build", "knn-graph build", "pq-topk build",
+        "pca-power build", "k-core build")
         .zipWithIndex.foreach {
           case (name, i) => assert(at32(i) == at5(i), s"$name differs across partitionings")
         }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -160,5 +161,14 @@ class GraphSpec extends AnyFunSuite {
     // build the k-core's upstream artifacts first, so only the peel is counted
     Similarity.kcore(spark, TestSpark.Sf0001).collect()
     assert(added(Similarity.kcoreWithThreshold(spark, TestSpark.Sf0001, 0L)).size == 1)
+    // artifacts whose builds run a fixpoint read none of its generations:
+    // built on an input dir whose artifact keys are fresh (links to the
+    // sf0.001 tables), the builds must leave nothing persisted
+    val fresh = Files.createTempDirectory("graft-graph-")
+    val links = new java.io.File(TestSpark.Sf0001).listFiles().toSeq
+      .map(t => Files.createSymbolicLink(fresh.resolve(t.getName), t.toPath))
+    try Seq("dedup_components", "sim_semantic_clusters", "sim_kcore").foreach { q =>
+      withClue(q)(assert(added(SparkEntry.queries(q)(spark, fresh.toString)).isEmpty))
+    } finally (links :+ fresh).foreach(Files.delete)
   }
 }

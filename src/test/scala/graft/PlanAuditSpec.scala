@@ -53,7 +53,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "sim_recall_eval" -> 8, // composes bf (×4 references) + lsh planes/bands
     // + ivf/pq probe broadcasts — each inherited BNLJ is allowlisted above
     // in its source query; caching can hide some, so this is the ceiling
-    "sim_kcore" -> 2, // inherits knnGraph's broadcast plane projection
     "sim_neighbor_jaccard" -> 2, // same knnGraph inheritance
     "rel_bloom_probe" -> 1, // one-row broadcast bits_set scalar folded in
     "dedup_bbit_minhash" -> 4, // two 1-row count scalars per method row

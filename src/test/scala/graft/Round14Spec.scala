@@ -1,18 +1,15 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.operators.{Similarity, TwoPass}
+import graft.operators.Similarity
 
 /** Round-14 directives: the band-geometry ceiling lift (MaxBits 16→24
-  * with an append-only plane catalog and a LOUD occupancy ceiling), the
-  * census skew refinement ported to the integer-keyed prefix forms, and
-  * a certification that the staged semantic closure's convergence guard
-  * actually trips on an under-rounded pipeline.
+  * with an append-only plane catalog and a LOUD occupancy ceiling) and a
+  * certification that the staged semantic closure's convergence guard
+  * actually trips on an under-rounded pipeline (the census skew
+  * refinement cases live in [[TwoPassSpec]]).
   */
 class Round14Spec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
 
   test("bandBits keeps adapting past the old 2^16 ceiling and fails " +
     "loudly at the new one") {
@@ -58,126 +55,6 @@ class Round14Spec extends AnyFunSuite {
     val cx = (0 until 64).map(d => Similarity.planeCoef(Similarity.planeIdx(0, 16), d))
     assert(c0.forall(v => v == 1 || v == -1))
     assert(c0 !== cx)
-  }
-
-  test("prefixRefinePlan: hot buckets re-split over their observed key " +
-    "range; single-key and cold buckets left alone; caps hold") {
-    // n=2540, b=100 → avgTarget = max(50, 26) = 50 → hot needs c > 200
-    val census = Seq(
-      (0L, 900L, 1000L, 1899L), // hot: 900 unique keys in [1000, 1899]
-      (1L, 50L, 5000L, 5049L), // cold
-      (2L, 800L, 7777L, 7777L), // over threshold but single-key: indivisible
-      (3L, 790L, 9000L, 9001L)) // hot, two keys: divisible
-    val plan = TwoPass.prefixRefinePlan(census, 2540L, 100, 50L)
-    assert(plan.keySet === Set(0L, 3L))
-    val (kmin, tw, subs) = plan(0L)
-    // subs = ceil(900/50) = 18; tw = (1899−1000)/18 + 1 = 50
-    assert(kmin === 1000L && subs === 18 && tw === 50L)
-    // sub caps: a 10M-row hot bucket against a ~500-row target is capped
-    // at RefineMaxSubs (avgTarget = max(1, 10M/20000+1) = 501)
-    val big = TwoPass.prefixRefinePlan(
-      Seq((0L, 10000000L, 0L, 10000000L)), 10000000L, 20000, 1L)
-    assert(big(0L)._3 === TwoPass.RefineMaxSubs)
-    // at most RefineMaxBuckets refine, largest first
-    val many = (0 until 200).map(i => (i.toLong, 1000L + i, i * 10000L, i * 10000L + 999L))
-    val capped = TwoPass.prefixRefinePlan(many, 200L * 1100L, 20000, 1L)
-    assert(capped.size === TwoPass.RefineMaxBuckets)
-    assert(capped.contains(199L) && !capped.contains(0L))
-  }
-
-  test("prefix skew refinement: the 90/10 clustered-key fixture through " +
-    "the refined path stays value-identical AND bounds the max sort group") {
-    import spark.implicits._
-    // the Round13Spec fixture shape, sized so a lowered refine target
-    // forces the hot-bucket path: 1800 keys dense around 10^9, 200
-    // spread over [0, 9·10^8) — unique by construction
-    val keys = (0 until 1800).map(i => 1000000000L + i * 3) ++
-      (0 until 200).map(i => i.toLong * 4500000L)
-    val rows = keys.zipWithIndex.map { case (k, i) => (k, (i % 13).toLong - 6) }
-    val df = rows.toDF("id", "v")
-    val wS = Window.orderBy(col("id")).rowsBetween(Window.unboundedPreceding, -1)
-    val wantS = df.withColumn("c", coalesce(sum(col("v")).over(wS), lit(0L)))
-      .select("id", "c").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val (gotSDf, sStats) = TwoPass.distributedPrefixSumStats(
-      df, "id", "v", "c", buckets = 32, minRefineRows = 64L)
-    val gotS = gotSDf.select("id", "c").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotS === wantS, "refined prefix sum: regimes differ")
-    // engagement receipts: without refinement the dense half (1800 rows)
-    // is ONE bucket; with it the max sort group is ~avgTarget-sized
-    assert(sStats.refined >= 1, "hot bucket did not refine")
-    val avgTarget = math.max(64L, 2000L / 32 + 1)
-    assert(sStats.maxGroup <= TwoPass.RefineFactor * avgTarget,
-      s"max group ${sStats.maxGroup} not bounded by refinement")
-    assert(sStats.maxGroup < 1800L, "dense cluster still one sort task")
-    // same fixture through the max form (range frame, exclusive)
-    val wM = Window.orderBy(col("id")).rangeBetween(Window.unboundedPreceding, -1)
-    val wantM = df.withColumn("m", max(col("v")).over(wM).cast("long"))
-      .select("id", "m").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    val (gotMDf, mStats) = TwoPass.distributedPrefixMaxStats(
-      df, "id", "v", "m", buckets = 32, minRefineRows = 64L)
-    val gotM = gotMDf.select("id", "m").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(gotM === wantM, "refined prefix max: regimes differ")
-    assert(mStats.refined >= 1 && mStats.maxGroup < 1800L)
-  }
-
-  test("prefix max refinement with DUPLICATE keys: equal keys share a " +
-    "sub-bucket (range-frame ties stay excluded); single-key hot bucket " +
-    "is left indivisible and stays correct") {
-    import spark.implicits._
-    // 600 rows on key 10^9 (one exact value — indivisible), 600 rows on
-    // keys 10^9+2..10^9+601 (dense, divisible), 100 spread
-    val keys = Seq.fill(600)(1000000000L) ++
-      (0 until 600).map(i => 1000000002L + i) ++
-      (0 until 100).map(i => i.toLong * 9000000L)
-    val rows = keys.zipWithIndex.map { case (k, i) => (k, (i % 17).toLong - 8) }
-    val df = rows.toDF("k", "v")
-    val w = Window.orderBy(col("k")).rangeBetween(Window.unboundedPreceding, -1)
-    val want = df.withColumn("m", max(col("v")).over(w).cast("long"))
-      .select("k", "v", "m").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
-    val (gotDf, stats) = TwoPass.distributedPrefixMaxStats(
-      df, "k", "v", "m", buckets = 32, minRefineRows = 16L)
-    val got = gotDf.select("k", "v", "m").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) ->
-        (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
-    assert(got === want, "duplicate-key refined prefix max: regimes differ")
-    assert(stats.refined >= 1)
-  }
-
-  test("forced-engagement parity on REAL data: per-user activity through " +
-    "all three refined forms equals the single-task window (the " +
-    "ScaleCheck skew_refinement gate's sf0.01 instance)") {
-    val perUser = Tables.events(spark, TestSpark.Sf001)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .persist()
-    try {
-      val nU = perUser.count()
-      val wantT = perUser.withColumn("t", ntile(10).over(
-        Window.orderBy(col("n_events").desc, col("user_id"))))
-      val (gotT, ntStats) = TwoPass.distributedNtileDescStats(
-        perUser, "n_events", "user_id", 10, "t",
-        buckets = 256, minRefineRows = 1L)
-      assert(wantT.exceptAll(gotT).count() === 0L &&
-        gotT.exceptAll(wantT).count() === 0L && gotT.count() === nU)
-      assert(ntStats.refined >= 1,
-        "real per-user counts did not trip ntile refinement")
-      val packed = perUser.select(
-        (col("n_events") * 1000000000L + col("user_id")).as("k"),
-        col("n_events").as("v"))
-      val wS = Window.orderBy(col("k")).rowsBetween(Window.unboundedPreceding, -1)
-      val wantS = packed.withColumn("c",
-        coalesce(sum(col("v")).over(wS).cast("long"), lit(0L)))
-      val (gotS, sStats) = TwoPass.distributedPrefixSumStats(
-        packed, "k", "v", "c", buckets = 256, minRefineRows = 1L)
-      assert(wantS.exceptAll(gotS).count() === 0L &&
-        gotS.exceptAll(wantS).count() === 0L)
-      assert(sStats.refined >= 1,
-        "real per-user counts did not trip prefixSum refinement")
-    } finally perUser.unpersist()
   }
 
   test("staged semantic closure guard: an under-rounded pipeline leaves " +
