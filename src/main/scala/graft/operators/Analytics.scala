@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
 object Analytics {
 
   /** Revenue by region/nation/year across 6 tables (TPC-H Q5 shape):
-    * lineitem ⋈ orders ⋈ customer ⋈ nation ⋈ region, dims broadcast. */
+    * lineitem ⋈ orders ⋈ customer ⋈ nation ⋈ region; the planner picks
+    * each dim join by size. */
   def regionalRevenue(spark: SparkSession, dir: String): DataFrame = {
     val li = Medallion.silverSales(spark, dir)
     val o = Tables.orders(spark, dir)
@@ -22,9 +23,9 @@ object Analytics {
     val n = Tables.nation(spark, dir)
     val r = Tables.region(spark, dir)
     li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
+      .join(c, o("o_custkey") === c("c_custkey"))
+      .join(n, c("c_nationkey") === n("n_nationkey"))
+      .join(r, n("n_regionkey") === r("r_regionkey"))
       .groupBy(r("r_name").as("region"), n("n_name").as("nation"),
         year(o("o_orderdate")).as("year"))
       .agg(

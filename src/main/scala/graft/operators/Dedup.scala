@@ -128,14 +128,18 @@ object Dedup {
     // bucketed by h: the candidate-generating self-joins (pair
     // intersections, weighted Jaccard, containment) equi-join this table
     // with itself on h — both sides of those joins start pre-partitioned,
-    // zero exchanges below the join (asserted in Round6Spec)
-    Artifacts.bucketedTable(spark, dir, "dedup_capped_shingle_index", Seq("h")) {
-      val idx = shingleIndex(spark, dir)
-      val hot = idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        .filter(col("df") > DfCap).select(col("h"))
-      idx.join(broadcast(hot), Seq("h"), "left_anti")
-        .select("doc_id", "h")
-    }
+    // zero exchanges below the join (asserted in ArtifactsSpec)
+    Artifacts.bucketedTable(spark, dir, "dedup_capped_shingle_index", Seq("h"))(
+      cappedShingleIndexBuild(spark, dir))
+
+  /** The producer pipeline (its kept hint is pinned in PlanSpec). */
+  private[graft] def cappedShingleIndexBuild(spark: SparkSession, dir: String): DataFrame = {
+    val idx = shingleIndex(spark, dir)
+    val hot = idx.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > DfCap).select(col("h"))
+    // kept: at sf1 a SortMergeJoin without it, 6/6 pairs slower (1.12x)
+    idx.join(broadcast(hot), Seq("h"), "left_anti").select("doc_id", "h")
+  }
 
   /** Shared CTE suffix: `shf` = the df-capped index over `sh`. */
   private[graft] val cappedShingleIndexSql: String =
@@ -172,7 +176,7 @@ object Dedup {
     Artifacts.table(spark, dir, "dedup_pair_intersections")(
       pairIntersectionsBuild(spark, dir))
 
-  /** The producer pipeline (Round6Spec pins the zero-exchange-below-join
+  /** The producer pipeline (ArtifactsSpec pins the zero-exchange-below-join
     * plan contract the bucketed capped index buys). */
   private[graft] def pairIntersectionsBuild(spark: SparkSession, dir: String): DataFrame = {
     val sh = cappedShingleIndex(spark, dir)
@@ -616,7 +620,7 @@ object Dedup {
     Seq("bbit2", "full").toDF("method")
       .join(nCand, Seq("method"), "left")
       .join(tp, Seq("method"), "left")
-      .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
+      .crossJoin(truth.agg(count(lit(1)).as("n_truth")))
       .select(col("method"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         col("n_truth"),
@@ -991,9 +995,7 @@ object Dedup {
     // a fingerprint self-join (two more passes over the capped stream).
     // Pair enumeration is a per-group generator fan-out over the collected
     // doc list (bounded ≤ DfCap rows by the eligibility filter, so the
-    // aggregation state is bounded) — no self-join at all. Hint-free: AQE
-    // broadcasts the eligible set when it is small (r17 ref_integrity
-    // policy; at boilerplate-heavy scale it may legitimately not be).
+    // aggregation state is bounded) — no self-join at all.
     // Round18Spec pins result equality to the self-join form.
     val eligible = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= DfCap).select(col("fp"))
@@ -1509,11 +1511,8 @@ object Dedup {
     // through BOTH broadcast verification joins (two complete index scans
     // per run for a delta-sized candidate set). Scan cost now scales with
     // the delta, not 2× the corpus. (An earlier pre-reduction via a driver
-    // collect measured slower.) Hint-free since round-18: the candidate
-    // set is delta-sized only while LSH band buckets stay small — a hot
-    // band bucket could grow it past broadcastable, and the explicit hint
-    // bypassed AQE's size threshold (r17 ADVICE; same policy as
-    // ref_integrity). AQE still picks a broadcast semi at bench scale.
+    // collect measured slower.) No hint: a hot LSH band bucket can grow
+    // the candidate set past broadcastable; AQE picks the semi-join.
     val candDocs = cand
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()

@@ -504,8 +504,8 @@ object EventTime {
     * spend, bucketed 1-5 against the corpus's interpolated quintile
     * thresholds. Deliberately NOT a global ntile: an unpartitioned ntile
     * sorts the whole user table on one reducer. Here the 12 threshold
-    * doubles are computed once and BROADCAST, and every user scores
-    * map-side by comparison — the form that survives a billion users.
+    * doubles are computed once as a one-row relation, and every user
+    * scores map-side by comparison — the form that survives a billion users.
     * (Users tied exactly on a threshold score identically in both engines:
     * interpolated quantiles and `>` are IEEE-exact.) */
   def rfmScores(spark: SparkSession, dir: String): DataFrame = {
@@ -547,7 +547,7 @@ object EventTime {
     def score(c: org.apache.spark.sql.Column, pre: String) =
       lit(1) + (c > col(s"${pre}1")).cast("int") + (c > col(s"${pre}2")).cast("int") +
         (c > col(s"${pre}3")).cast("int") + (c > col(s"${pre}4")).cast("int")
-    m.crossJoin(broadcast(th))
+    m.crossJoin(th)
       .select(
         col("user_id"), col("last_day"), col("freq"), col("monetary"),
         score(col("last_day"), "rq").as("r_score"),
@@ -974,11 +974,11 @@ object EventTime {
       .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
       .agg(count(lit(1)).as("n_both"))
     pairs
-      .join(broadcast(totals.select(col("event_type").as("type_a"), col("n").as("n_a"))),
+      .join(totals.select(col("event_type").as("type_a"), col("n").as("n_a")),
         Seq("type_a"))
-      .join(broadcast(totals.select(col("event_type").as("type_b"), col("n").as("n_b"))),
+      .join(totals.select(col("event_type").as("type_b"), col("n").as("n_b")),
         Seq("type_b"))
-      .crossJoin(broadcast(nUsers))
+      .crossJoin(nUsers)
       .select(col("type_a"), col("type_b"), col("n_both"), col("n_a"), col("n_b"),
         ((col("n_both") * col("n_users")).cast("double") / (col("n_a") * col("n_b")))
           .as("lift"))
@@ -1017,7 +1017,7 @@ object EventTime {
     val stats = days.agg(count(lit(1)).as("n"), sum(col("n_events")).as("s"),
       sum(col("n_events").cast(d38) * col("n_events")).as("q"))
     val dev = col("n").cast(d38) * col("n_events") - col("s")
-    days.crossJoin(broadcast(stats))
+    days.crossJoin(stats)
       .select(col("day"), col("n_events"),
         ((dev * dev) > (lit(9).cast(d38) *
           (col("n").cast(d38) * col("q") - col("s").cast(d38) * col("s"))))
@@ -1129,7 +1129,7 @@ object EventTime {
     val tot = deciles.agg(sum(col("n_events")).as("total_events"))
     val wc = Window.orderBy(col("decile"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    deciles.crossJoin(broadcast(tot))
+    deciles.crossJoin(tot)
       .withColumn("cum_events", sum(col("n_events")).over(wc))
       .select(col("decile"), col("n_users"), col("n_events"),
         expr("(n_events * 10000) div total_events").as("share_bp"),

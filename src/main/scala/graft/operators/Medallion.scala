@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *   - gold monthly rollup on EXTRACT(YEAR/MONTH) (`etl_medallion.py:197-210`)
   *   - sample analytics (`etl_medallion.py:346-396`)
   *
-  * Scale posture: dimension sides (part, supplier, nation) are broadcast so
-  * the fact scan never shuffles for the denormalization; aggregates rely on
+  * Scale posture: the planner broadcasts the dimension sides (part,
+  * supplier, nation) while they sit under its size threshold, so the fact
+  * scan does not shuffle for the denormalization; aggregates rely on
   * Catalyst's partial (map-side) HashAggregate; every money aggregate runs in
   * DECIMAL(18,2) so results are shuffle-order-independent.
   */
@@ -69,8 +70,8 @@ object Medallion {
 
   /** Gold `sales_analytics` analog (reference `etl_medallion.py:161-179`):
     * fact LEFT JOIN two dims, 12-col projection with rename, computed
-    * rep-name concat (J1,P3,C3). Dims are broadcast: at 100 TB the fact side
-    * streams map-side with zero shuffle.
+    * rep-name concat (J1,P3,C3). The planner picks each dim join: a
+    * broadcast while the dim is under its size threshold, a shuffle above.
     */
   def goldSalesAnalytics(spark: SparkSession, dir: String): DataFrame = {
     val sales = silverSales(spark, dir)
@@ -80,8 +81,8 @@ object Medallion {
     val products = silverProducts(spark, dir)
     val reps = silverSuppliers(spark, dir)
     sales
-      .join(broadcast(products), sales("l_partkey") === products("p_partkey"), "left")
-      .join(broadcast(reps), sales("l_suppkey") === reps("s_suppkey"), "left")
+      .join(products, sales("l_partkey") === products("p_partkey"), "left")
+      .join(reps, sales("l_suppkey") === reps("s_suppkey"), "left")
       .select(
         sales("l_orderkey"),
         sales("l_linenumber"),
@@ -244,8 +245,8 @@ object Medallion {
     val reps = silverSuppliers(spark, dir)
     val depts = Tables.nation(spark, dir)
     sales
-      .join(broadcast(reps), sales("l_suppkey") === reps("s_suppkey"), "left")
-      .join(broadcast(depts), reps("s_nationkey") === depts("n_nationkey"), "left")
+      .join(reps, sales("l_suppkey") === reps("s_suppkey"), "left")
+      .join(depts, reps("s_nationkey") === depts("n_nationkey"), "left")
       .groupBy(depts("n_name").as("department"))
       .agg(
         count(lit(1)).as("sales_count"),

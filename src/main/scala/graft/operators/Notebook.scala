@@ -56,7 +56,7 @@ object Notebook {
   def nullScan(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val bigParts = Tables.part(spark, dir).filter(col("p_size") > 25)
-    li.join(broadcast(bigParts), li("l_partkey") === bigParts("p_partkey"), "left")
+    li.join(bigParts, li("l_partkey") === bigParts("p_partkey"), "left")
       .filter(bigParts("p_name").isNull)
       .select(li("l_orderkey"), li("l_linenumber"), li("l_partkey"))
   }

@@ -528,7 +528,7 @@ object Relational {
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01")).as("order_day"))
-      .join(broadcast(dim),
+      .join(dim,
         col("o_custkey") === col("c_custkey") &&
           col("order_day") >= col("valid_from") && col("order_day") < col("valid_to"))
       .select(col("o_orderkey"), col("o_custkey"), col("order_day"), col("segment"))
@@ -663,11 +663,9 @@ object Relational {
     // COUNT(*) is the fact total and the null-count equals the old
     // anti-join count exactly. The previous form paid a second full fact
     // pass for the total plus a crossJoin per branch, and lineitem's two
-    // checks each re-scanned the fact; they now share a single scan. NO
-    // broadcast hint on the dim-key sets: orders' key set is fact-scale at
-    // sf6+ (a forced broadcast measured 2.7× slower there) — AQE picks
-    // broadcast when the distinct output is actually small and a shuffled
-    // join when it is not, which is the scale-adaptive behavior.
+    // checks each re-scanned the fact; they now share a single scan. No
+    // hint on the dim-key sets: orders' key set is fact-scale at sf6+ (a
+    // forced broadcast measured 2.7× slower there).
     val liChecks = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_partkey"))
       .join(Tables.orders(spark, dir)
@@ -1108,17 +1106,18 @@ object Relational {
       |ORDER BY p_partkey""".stripMargin
 
   /** Non-equi range (band) join: classify every event into a value tier by
-    * `lo <= value < hi` against a broadcast tier table. The generic point-
-    * in-interval join (pricing tiers, IP→geo ranges, SLA buckets): with the
-    * range side broadcast this is ONE corpus scan probing a tiny sorted
-    * interval list — the plan to want at 100 TB (the equi-join fallback is
-    * binning both sides to overlapping buckets; unnecessary at 4 rows). */
+    * `lo <= value < hi` against a 4-row tier table. The generic point-
+    * in-interval join (pricing tiers, IP→geo ranges, SLA buckets): the
+    * planner broadcasts the local tier relation at any scale, so this is ONE
+    * corpus scan probing a tiny interval list — the plan to want at 100 TB
+    * (the equi-join fallback is binning both sides to overlapping buckets;
+    * unnecessary at 4 rows). */
   def rangeJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tiers = Tiers.toDF("tier", "lo", "hi")
     Tables.events(spark, dir)
       .filter(col("value").isNotNull && col("value") >= 0)
-      .join(broadcast(tiers),
+      .join(tiers,
         col("value") >= col("lo") && col("value") < col("hi"))
       .groupBy(col("tier"))
       .agg(
@@ -1262,6 +1261,7 @@ object Relational {
     val dev = col("n").cast(d38) * col("c") - col("s")
     val isOut = (dev * dev) >
       (lit(9).cast(d38) * (col("n").cast(d38) * col("q") - col("s").cast(d38) * col("s")))
+    // kept: sf0.01-sf1 broadcast the per-row side without it; sf1 6/6 slower
     rows.join(broadcast(stats), Seq("event_type"))
       .withColumn("is_out", isOut.cast("long"))
       .groupBy(col("event_type"))
@@ -1447,7 +1447,7 @@ object Relational {
       .select(col("o_custkey").cast("long").as("a"), day.as("b"))
     val stats = base.agg(min(col("a")).as("a_min"), max(col("a")).as("a_max"),
       min(col("b")).as("b_min"), max(col("b")).as("b_max"))
-    base.crossJoin(broadcast(stats))
+    base.crossJoin(stats)
       .select(
         expr(s"((a - a_min) * $ZNorm) div greatest(a_max - a_min, 1)").as("na"),
         expr(s"((b - b_min) * $ZNorm) div greatest(b_max - b_min, 1)").as("nb"))
@@ -1513,7 +1513,7 @@ object Relational {
     * equivalence-class-cardinality-sized at any corpus scale. */
   def kAnonymity(spark: SparkSession, dir: String): DataFrame =
     Tables.customer(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir)),
+      .join(Tables.nation(spark, dir),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("n_name"), col("c_mktsegment"),
         floor(col("c_acctbal") / 1000.0).cast("long").as("bal_band"))
@@ -1643,12 +1643,12 @@ object Relational {
     val probes = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("key")).distinct()
     probeBits(probes)
-      .join(broadcast(bloom), Seq("word_idx"), "left")
+      .join(bloom, Seq("word_idx"), "left")
       .groupBy(col("key"))
       .agg(min(when(col("word").isNotNull &&
         (col("word").bitwiseAND(col("mask")) =!= 0L), 1L).otherwise(0L))
         .as("all_hit"))
-      .join(broadcast(build.withColumn("one", lit(1L))), Seq("key"), "left")
+      .join(build.withColumn("one", lit(1L)), Seq("key"), "left")
       .select(col("all_hit"), coalesce(col("one"), lit(0L)).as("is_member"))
       .agg(
         count(lit(1)).as("n_probed"),
@@ -1658,8 +1658,7 @@ object Relational {
           .otherwise(0L)).as("n_false_positive"),
         sum(when(col("all_hit") === 0L && col("is_member") === 1L, 1L)
           .otherwise(0L)).as("n_false_negative"))
-      .crossJoin(broadcast(
-        bloom.agg(sum(expr("bit_count(word)")).as("bits_set"))))
+      .crossJoin(bloom.agg(sum(expr("bit_count(word)")).as("bits_set")))
       .select(col("n_probed"), col("n_members"), col("n_bloom_positive"),
         col("n_false_positive"), col("n_false_negative"),
         // guard the all-probes-are-members edge: Spark's non-ANSI div

@@ -132,13 +132,13 @@ object Sampling {
     * documents are kept preferentially, the length-balancing lever when a
     * token budget should favor information-dense docs. Still a pure
     * function of (row identity, corpus max): reproducible anywhere. The
-    * corpus max is a one-row broadcast aggregate, not a driver constant.
+    * corpus max is a one-row aggregate joined back, not a driver constant.
     * All-integer threshold math (n_chars * 1000 div max) — no float
     * boundary risk. */
   def sizeBiased(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val mx = docs.agg(max(col("n_chars")).as("max_chars"))
-    docs.crossJoin(broadcast(mx))
+    docs.crossJoin(mx)
       .withColumn("threshold",
         expr("(n_chars * 1000) div max_chars")) // 0..1000 per-mille
       .filter(pmod(hash60(col("doc_id").cast("string")), lit(1000)) < col("threshold"))
@@ -207,7 +207,7 @@ object Sampling {
     * `planned_docs` is the stratum's size after applying the factor. All
     * ratios are integer basis points (floor on non-negative operands — both
     * engines agree), never a float boundary. One map-side-combinable
-    * aggregate over the corpus + a one-row broadcast: scan-speed at 100 TB,
+    * aggregate over the corpus + a one-row total: scan-speed at 100 TB,
     * and the output (one row per language) feeds the actual resampler as a
     * broadcast dim. */
   def mixtureWeights(spark: SparkSession, dir: String): DataFrame = {
@@ -216,7 +216,7 @@ object Sampling {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
     val tot = byLang.agg(
       sum(col("n_docs")).as("total_docs"), count(lit(1)).as("n_langs"))
-    byLang.crossJoin(broadcast(tot))
+    byLang.crossJoin(tot)
       .select(col("lang"), col("n_docs"), col("n_chars"),
         expr("(n_docs * 10000) div total_docs").as("share_bp"),
         expr("(total_docs * 10000) div (n_langs * n_docs)").as("repeat_bp"),
@@ -255,6 +255,7 @@ object Sampling {
   def mixtureApply(spark: SparkSession, dir: String): DataFrame = {
     val w = mixtureWeights(spark, dir).select(col("lang"), col("repeat_bp"))
     Tables.documents(spark, dir)
+      // kept: sf0.01-sf1 broadcast the documents without it; sf1 5/6 slower
       .join(broadcast(w), Seq("lang"))
       .select(col("doc_id"), col("lang"),
         pmod(hash60(concat(lit("mix:"), col("doc_id").cast("string"))), lit(10000))
@@ -376,7 +377,7 @@ object Sampling {
         max(when(col("cand") >= col("prev_t") && col("cand") < col("n_tokens"),
           col("cand"))),
         max(col("n_tokens"))).as("cap"))
-    perSource.crossJoin(broadcast(capOne))
+    perSource.crossJoin(capOne)
       .select(col("source"), col("n_tokens"),
         least(col("n_tokens"), col("cap")).as("alloc_tokens"),
         when(col("n_tokens") > col("cap"), 1L).otherwise(0L).as("capped"),

@@ -54,11 +54,13 @@ object Similarity {
   def bruteForceTopK(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "sim_bf_topk")(bruteForceTopKBuild(spark, dir))
 
-  /** The producer pipeline (plan contract pinned in PlanSpec). */
-  private[graft] def bruteForceTopKBuild(spark: SparkSession, dir: String): DataFrame = {
+  /** The producer pipeline (pinned in PlanSpec), the first `nQ` vectors as queries. */
+  private[graft] def bruteForceTopKBuild(spark: SparkSession, dir: String,
+      nQ: Int = NumQueries): DataFrame = {
     val e = corpus(spark, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
+    val q = e.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    // kept: at sf3 (60,000 vectors) this BNLJ plans as a CartesianProduct without it
     val pairs = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFast(col("qv"), col("v")).as("cos_sim"))
@@ -102,7 +104,7 @@ object Similarity {
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("label"), col("v").as("qv"))
-    val pairs = e.join(broadcast(q), Seq("label"))
+    val pairs = e.join(q, Seq("label"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
         cosineFast(col("qv"), col("v")).as("cos_sim"))
@@ -151,6 +153,7 @@ object Similarity {
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("label").as("q_label"),
         col("v").as("qv"))
+    // kept: without it, a CartesianProduct at sf3 (as in bruteForceTopKBuild)
     val pairs = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("q_label"),
         (col("label") === col("q_label")).as("is_pos"),
@@ -348,7 +351,7 @@ object Similarity {
     * build. Same sequential fold, so every band bit is unchanged. */
   private[graft] def srpBandsBuild(spark: SparkSession, dir: String,
       tables: Int, bits: Int): DataFrame =
-    corpus(spark, dir).crossJoin(broadcast(planesTable(spark, tables, bits)))
+    corpus(spark, dir).crossJoin(planesTable(spark, tables, bits))
       .select(col("vec_id"), col("tbl"),
         when(dotFast(col("v"), col("coefs")) > 0, expr("shiftleft(1, j)"))
           .otherwise(lit(0)).as("bit"))
@@ -376,8 +379,8 @@ object Similarity {
   }
 
   /** Exact top-[[K]] ground truth for the first `nQ` vectors — the
-    * recall probe's baseline, same plan shape as [[bruteForceTopK]] but
-    * with a probe-sized query batch (the production query, pinned to
+    * recall probe's baseline, [[bruteForceTopKBuild]]'s plan with a
+    * probe-sized query batch (the production query, pinned to
     * [[NumQueries]], stays oracle-comparable; the probe needs enough
     * queries for a recall number with a usable confidence interval).
     * Window partitions by query_id, so parallelism is nQ tasks of one
@@ -385,20 +388,8 @@ object Similarity {
     * 1.5G-row shuffle, the probe's one deliberate heavy pass. */
   private[graft] def probeGroundTruth(spark: SparkSession, dir: String,
       nQ: Int): DataFrame =
-    Artifacts.table(spark, dir, s"probe_bf_topk_q$nQ") {
-      val e = corpus(spark, dir)
-      val q = e.filter(col("vec_id") < nQ)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id"))
-      e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosineFast(col("qv"), col("v")).as("cos_sim"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= K)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          col("cos_sim"))
-    }
+    Artifacts.table(spark, dir, s"probe_bf_topk_q$nQ")(
+      bruteForceTopKBuild(spark, dir, nQ))
 
   /** The probe-key relation (query_id, qtbl, qkey) of the first `nQ`
     * vectors — one key per (query, table) single-probe, the Hamming-1
@@ -438,7 +429,7 @@ object Similarity {
     val bands = srpBands(spark, dir, s"probe_bands_${tables}x$bits",
       tables, bits)
     val qb = probeQueryKeys(bands, bits, multiprobe, nQ)
-    bands.join(broadcast(qb),
+    bands.join(qb,
       col("tbl") === col("qtbl") && col("bkey") === col("qkey") &&
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -577,7 +568,7 @@ object Similarity {
       s"plantedThetaRecall: bits=$bits outside the plane catalog [1, $MaxBits]")
     val planted = plantedNeighbors(spark, dir, nQ, perCell)
     val pb = planted
-      .crossJoin(broadcast(planesTable(spark, tables, bits)))
+      .crossJoin(planesTable(spark, tables, bits))
       .select(col("query_id"), col("cos_bp"), col("rep"), col("tbl"),
         when(dot(col("v"), col("coefs")) > 0, expr("shiftleft(1, j)"))
           .otherwise(lit(0)).as("bit"))
@@ -587,7 +578,7 @@ object Similarity {
       tables, bits)
     val qb = probeQueryKeys(bands, bits, multiprobe, nQ)
       .withColumnRenamed("query_id", "qid")
-    val collided = pb.join(broadcast(qb),
+    val collided = pb.join(qb,
         col("qid") === col("query_id") && col("qtbl") === col("tbl") &&
           col("qkey") === col("bkey"))
       .select(col("query_id"), col("cos_bp"), col("rep")).distinct()
@@ -620,7 +611,7 @@ object Similarity {
       bandBits(Tables.rows(spark, dir, "embeddings")))
     val qBands = bands.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"), col("bkey").as("qkey"))
-    val cand = bands.join(broadcast(qBands),
+    val cand = bands.join(qBands,
       col("tbl") === col("qtbl") && col("bkey") === col("qkey") &&
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -681,7 +672,7 @@ object Similarity {
         explode(array(
           (col("bkey") +: (0 until bits).map(i =>
             expr(s"bkey ^ ${1L << i}").cast("long"))): _*)).as("qkey"))
-    val cand = bands.join(broadcast(probes),
+    val cand = bands.join(probes,
       col("tbl") === col("qtbl") && col("bkey") === col("qkey") &&
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -731,7 +722,6 @@ object Similarity {
   }
 
   private val PairTables = 4
-  private val PairBits = 4
   private val PairTau = 0.35
 
   /** Table-budget growth schedule for the PAIR detector — the round-15
@@ -938,7 +928,7 @@ object Similarity {
   private def seedCentroids(spark: SparkSession, dir: String, dims: DataFrame): DataFrame =
     Artifacts.table(spark, dir, "sim_seed_centroids") {
       val lab = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
-      dims.join(broadcast(lab), "vec_id")
+      dims.join(lab, "vec_id")
         .groupBy(col("label").as("list_id"), col("d"))
         .agg(floor(sum(col("q")).cast("double") / count(lit(1))).cast("long").as("cq"))
     }
@@ -951,24 +941,24 @@ object Similarity {
     * seed-centroid artifacts: Σq·cq, Σq², Σcq² are associative BIGINT sums
     * (partition-order-free), and the only float work is one fixed
     * three-op tail (sqrt·sqrt, divide) on identical inputs in both
-    * engines. Ranking ties break on vec_id. Plan: one broadcast join of
-    * the labels + one of the labels×64 centroid relation onto the dims
-    * table, a map-side-combined per-vector aggregate, then a per-label
-    * top-k window over the labels-sized scored relation. */
+    * engines. Ranking ties break on vec_id. Plan: a join of the labels
+    * and one of the labels×64 centroid relation onto the dims table (the
+    * planner picks each), a map-side-combined per-vector aggregate, then a
+    * per-label top-k window over the labels-sized scored relation. */
   def labelOutliers(spark: SparkSession, dir: String): DataFrame = {
     val dims = quantDims(spark, dir)
     val lab = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
     val cent = seedCentroids(spark, dir, dims)
       .select(col("list_id").as("label"), col("d"), col("cq"))
-    val perVec = dims.join(broadcast(lab), "vec_id")
-      .join(broadcast(cent), Seq("label", "d"))
+    val perVec = dims.join(lab, "vec_id")
+      .join(cent, Seq("label", "d"))
       .groupBy(col("vec_id"), col("label"))
       .agg(sum(col("q") * col("cq")).as("dotq"),
         sum(col("q") * col("q")).as("nx"))
     val nc = cent.groupBy("label").agg(sum(col("cq") * col("cq")).as("ncy"))
     val w = Window.partitionBy(col("label"))
       .orderBy(col("cos_centroid").asc, col("vec_id"))
-    perVec.join(broadcast(nc), "label")
+    perVec.join(nc, "label")
       .select(col("label"), col("vec_id"),
         (col("dotq").cast("double") /
           (sqrt(col("nx").cast("double")) * sqrt(col("ncy").cast("double"))))
@@ -1013,6 +1003,7 @@ object Similarity {
 
   /** Exact integer L2 distance of every vector to every centroid. */
   private def centDist(dims: DataFrame, cent: DataFrame): DataFrame =
+    // kept (+ ivfSearchTail's): sf0.01-sf1 build the other side; sf1 6/6 slower
     dims.join(broadcast(cent), "d")
       .groupBy(col("vec_id"), col("list_id"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("d2"))
@@ -1054,6 +1045,7 @@ object Similarity {
     * generation by list equi-join, exact cosine re-rank, per-query top-k. */
   private def ivfSearchTail(e: DataFrame, assign: DataFrame,
       probes: DataFrame): DataFrame = {
+    // kept: see centDist
     val cand = assign.join(broadcast(probes),
       col("list_id") === col("probe_list") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
@@ -1265,13 +1257,13 @@ object Similarity {
     * evaluation tier. Ties in the dominant label break to the smallest
     * label (arg-max over cnt·1000−label — `mode()` ties are engine-
     * arbitrary, a silent cross-engine divergence). Reuses the written
-    * refined-centroid artifacts; the label join broadcasts. */
+    * refined-centroid artifacts; the planner picks the label join. */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     // reads the materialized k-means assignment (round-18) — previously
     // re-derived corpus × k distances + the argmin window per run
     val assign = kmeansAssign(spark, dir)
     val lab = Tables.embeddings(spark, dir).select(col("vec_id"), col("label"))
-    assign.join(broadcast(lab), "vec_id")
+    assign.join(lab, "vec_id")
       .groupBy(col("list_id"), col("label"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("list_id"))
@@ -1590,7 +1582,7 @@ object Similarity {
     Artifacts.table(spark, dir, "sim_pq_subcent") {
       val lab = Tables.embeddings(spark, dir)
         .select(col("vec_id"), pmod(col("label"), lit(PqCodes)).as("code"))
-      pqSub(spark, dir).join(broadcast(lab), "vec_id")
+      pqSub(spark, dir).join(lab, "vec_id")
         .groupBy(col("s"), col("code"), col("d"))
         .agg(floor(sum(col("q")).cast("double") / count(lit(1))).cast("long").as("cq"))
     }
@@ -1601,7 +1593,7 @@ object Similarity {
   private def pqCodes(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "sim_pq_codes") {
       val enc = pqSub(spark, dir)
-        .join(broadcast(pqSubCent(spark, dir)), Seq("s", "d"))
+        .join(pqSubCent(spark, dir), Seq("s", "d"))
         .groupBy(col("vec_id"), col("s"), col("code"))
         .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("d2"))
       val wEnc = Window.partitionBy(col("vec_id"), col("s")).orderBy(col("d2"), col("code"))
@@ -1611,17 +1603,17 @@ object Similarity {
     }
 
   /** Query ADC distance table: (query_id, qs, qcode, pd2) — queries × 64
-    * longs, always broadcast. */
+    * longs, a constant size the planner broadcasts. */
   private def pqDistTable(spark: SparkSession, dir: String): DataFrame =
     pqSub(spark, dir).filter(col("vec_id") < NumQueries)
-      .join(broadcast(pqSubCent(spark, dir)), Seq("s", "d"))
+      .join(pqSubCent(spark, dir), Seq("s", "d"))
       .groupBy(col("vec_id").as("query_id"), col("s").as("qs"), col("code").as("qcode"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("pd2"))
 
   private[graft] def pqTopKBuild(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_d2"), col("neighbor_id"))
-    pqCodes(spark, dir).join(broadcast(pqDistTable(spark, dir)),
+    pqCodes(spark, dir).join(pqDistTable(spark, dir),
         col("s") === col("qs") && col("code") === col("qcode") &&
           col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
@@ -1643,7 +1635,7 @@ object Similarity {
     * before it shows up as recall loss. */
   def pqDistortion(spark: SparkSession, dir: String): DataFrame = {
     val enc = pqSub(spark, dir)
-      .join(broadcast(pqSubCent(spark, dir)), Seq("s", "d"))
+      .join(pqSubCent(spark, dir), Seq("s", "d"))
       .groupBy(col("vec_id"), col("s"), col("code"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("d2"))
     enc.groupBy(col("vec_id"), col("s")).agg(min(col("d2")).as("d2"))
@@ -1740,14 +1732,14 @@ object Similarity {
       .withColumn("rn", row_number().over(wAssign))
       .filter(col("rn") <= IvfProbes)
       .select(col("vec_id").as("query_id"), col("list_id").as("probe_list"))
-    val cand = assign.join(broadcast(probes),
+    val cand = assign.join(probes,
         col("list_id") === col("probe_list") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_d2"), col("neighbor_id"))
     cand
       .join(pqCodes(spark, dir), col("neighbor_id") === col("vec_id"))
-      .join(broadcast(pqDistTable(spark, dir).withColumnRenamed("query_id", "dq")),
+      .join(pqDistTable(spark, dir).withColumnRenamed("query_id", "dq"),
         col("query_id") === col("dq") && col("s") === col("qs") &&
           col("code") === col("qcode"))
       .groupBy(col("query_id"), col("neighbor_id"))
@@ -1887,7 +1879,7 @@ object Similarity {
     val hit = gt
       .join(assign.withColumnRenamed("vec_id", "neighbor_id")
         .withColumnRenamed("list_id", "nlist"), Seq("neighbor_id"))
-      .join(broadcast(pr.withColumnRenamed("list_id", "nlist")),
+      .join(pr.withColumnRenamed("list_id", "nlist"),
         Seq("query_id", "nlist"), "left")
     val hitAgg = hit.agg(
       countDistinct(col("query_id")).as("n_queries"),
@@ -1898,7 +1890,7 @@ object Similarity {
         sum(when(col("rn") <= p, col("sz")).otherwise(0L)).as(s"c$p")).head,
       NprobeSteps.map(p =>
         sum(when(col("rn") <= p, col("sz")).otherwise(0L)).as(s"c$p")).tail: _*)
-    hitAgg.crossJoin(broadcast(candAgg))
+    hitAgg.crossJoin(candAgg)
       .select(explode(array(NprobeSteps.map(p => struct(
         lit(p).as("nprobe"), col("n_queries"), col("n_truth"),
         col(s"h$p").as("n_hits"),
@@ -2349,6 +2341,7 @@ object Similarity {
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .withColumn("dim", explode(array(TruncDims.map(lit(_)): _*)))
+    // kept: without it, a CartesianProduct at sf3 (as in bruteForceTopKBuild)
     val pairs = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("dim"), col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFast(slice(col("qv"), lit(1), col("dim")),

@@ -33,7 +33,7 @@ object TextAnalysis {
       .limit(OovVocabK)
       .select(col("token"))
     val perDoc = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tokens"))
-    val inVocab = toks.join(broadcast(vocab), Seq("token"), "left_semi")
+    val inVocab = toks.join(vocab, Seq("token"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_in"))
     perDoc.join(inVocab, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
@@ -373,7 +373,7 @@ object TextAnalysis {
     val best = pairCounts(seqs)
       .orderBy(col("pair_count").desc, col("pair")).limit(1)
       .select(col("pair").as("best_pair"))
-    val merged = seqs.crossJoin(broadcast(best))
+    val merged = seqs.crossJoin(best)
       .select(col("cnt"),
         expr("""replace(replace(seq, concat(' ', best_pair, ' '),
                                 concat(' ', replace(best_pair, ' ', ''), ' ')),
@@ -382,7 +382,7 @@ object TextAnalysis {
           .as("seq"),
         col("best_pair"))
     pairCounts(merged)
-      .crossJoin(broadcast(best))
+      .crossJoin(best)
       .select(col("pair"), col("pair_count"),
         expr("replace(best_pair, ' ', '')").as("applied_merge"))
       .orderBy(col("pair_count").desc, col("pair"))
@@ -535,7 +535,7 @@ object TextAnalysis {
     val benchGrams = grams.filter(col("doc_id") % 97 === 0)
       .select(col("h")).distinct()
     grams.filter(col("doc_id") % 97 =!= 0)
-      .join(broadcast(benchGrams), "h")
+      .join(benchGrams, "h")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_overlapping_grams"))
   }
@@ -564,7 +564,7 @@ object TextAnalysis {
     val flagged = contamination(spark, dir).select(col("doc_id"))
     Tables.documents(spark, dir)
       .filter(col("doc_id") % 97 =!= 0) // the held-out benchmark slice
-      .join(broadcast(flagged), Seq("doc_id"), "left_anti")
+      .join(flagged, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
 
@@ -676,8 +676,8 @@ object TextAnalysis {
     * not a `COUNT(*) OVER (PARTITION BY term)` window — the window form
     * reshuffled the entire corpus-sized (doc, term, tf) relation by a
     * Zipf-hot term key and sorted it, where the aggregate map-side-combines
-    * to the distinct-terms relation and AQE broadcasts it into the join
-    * (hint-free). df per term is COUNT of tf rows either way — exact
+    * to the distinct-terms relation joined back. df per term is COUNT of
+    * tf rows either way — exact
     * (Round18Spec pins equality to the window form). Two shuffles remain:
     * the (doc, term) aggregation and the per-doc top-k window. */
   def tfidfTop(spark: SparkSession, dir: String): DataFrame = {

@@ -264,7 +264,7 @@ object TwoPass {
         val out = tagged2
           .withColumn("__local",
             coalesce(sum(col(valCol)).over(w).cast("long"), lit(0L)))
-          .join(broadcast(offDf), Seq("__bid", "__sub"))
+          .join(offDf, Seq("__bid", "__sub"))
           .withColumn(outCol, col("__local") + col("__off"))
           .drop("__bid", "__sub", "__local", "__off")
         (out, stats)
@@ -321,7 +321,7 @@ object TwoPass {
           .rangeBetween(Window.unboundedPreceding, -1)
         val out = tagged2
           .withColumn("__lmx", max(col(valCol)).over(w).cast("long"))
-          .join(broadcast(offDf), Seq("__bid", "__sub"))
+          .join(offDf, Seq("__bid", "__sub"))
           .withColumn(outCol, greatest(col("__lmx"), col("__pmx")))
           .drop("__bid", "__sub", "__lmx", "__pmx")
         (out, stats)
@@ -470,7 +470,7 @@ object TwoPass {
       .orderBy(col(orderCol).desc, col(tieCol))
     val out = tagged2
       .withColumn("__lrn", row_number().over(w))
-      .join(broadcast(offDf), Seq("__bid", "__sub"))
+      .join(offDf, Seq("__bid", "__sub"))
       .withColumn("__rn", col("__roff") + col("__lrn"))
       .withColumn(outCol, tile.cast("int"))
       .drop("__bid", "__sub", "__lrn", "__roff", "__rn")

@@ -7,9 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * land with a quadratic plan unnoticed.
   *
   *   - CartesianProduct: never, anywhere.
-  *   - BroadcastNestedLoopJoin: only where a broadcast-batch × corpus scan
-  *     is the intended plan (brute-force scoring, LSH plane projection),
-  *     and never more than the whitelisted count.
+  *   - BroadcastNestedLoopJoin: only where a small-side × corpus scan is
+  *     the intended plan (brute-force scoring, LSH plane projection, one-row
+  *     scalars), and exactly the listed count.
   *   - Single-partition SORTS (a global window/sort funneling a relation
   *     through one task): only over the enumerated reduced-size-class
   *     relations, and never more per query than today.
@@ -26,50 +26,34 @@ class PlanAuditSpec extends AnyFunSuite {
       q.name -> p
     }.toMap
 
-  /** query → max allowed BNLJ nodes (broadcast small-batch designs). */
+  /** query → its exact number of BNLJ nodes (planned at sf0.001). */
   private val bnlAllowed: Map[String, Int] = Map(
-    "sim_bruteforce_topk" -> 1, // broadcast query batch × corpus (≠ condition)
-    "sim_dim_truncation" -> 1, // same broadcast query batch × corpus shape
+    // the index-side BNLJs (brute-force query batch, plane projections,
+    // IVF/PQ probes) run inside artifact builds, which these plans only read
+    "sim_dim_truncation" -> 1, // broadcast query batch × corpus (≠ condition)
     "sim_hard_negatives" -> 1, // broadcast anchor batch × corpus (≠ condition)
-    "rel_zorder_skipping" -> 1, // one-row broadcast min/max stats scalar
-    "sim_lsh_topk" -> 2, // plane table + query-band broadcast
-    "sim_ivf_topk" -> 1, // broadcast probes (≠ condition)
-    "sim_ivf_kmeans_topk" -> 1,
-    "sim_ivfpq_topk" -> 1, // same broadcast-probes candidate join as IVF
-    "dedup_embedding_cosine" -> 2, // plane table per self-join side
-    "dedup_pair_band_audit" -> 1, // the shared pair-band artifact's
-    // broadcast plane projection, visible only when this query plans
-    // before dedup_embedding_cosine has built it
-    "sim_knn_graph" -> 2, // plane table per self-join side
-    "sample_size_biased" -> 1, // one-row broadcast corpus-max scalar
+    "rel_zorder_skipping" -> 1, // one-row min/max stats scalar
+    "sample_size_biased" -> 1, // one-row corpus-max scalar
     "rel_hll_union" -> 1, // one-row merged-sketch scalar × one-row direct scalar
-    "rel_range_join" -> 1, // broadcast 4-row tier table, non-equi band condition
-    "sim_triangles" -> 2, // inherits knnGraph's broadcast plane projection
-    // (1 or 2 visible depending on whether the band table is already cached)
-    "sim_pagerank" -> 2, // same knnGraph inheritance as sim_triangles
-    "events_rfm" -> 3, // three one-row broadcast quintile-threshold scalars
+    "rel_range_join" -> 1, // 4-row tier table, non-equi band condition
+    "events_rfm" -> 3, // three one-row quintile-threshold scalars
     // (pinned-interpolation thresholds: one per metric, round 7)
     "events_time_to_convert" -> 1, // one-row totals x one-row pinned-percentile scalar
-    "sim_recall_eval" -> 8, // composes bf (×4 references) + lsh planes/bands
-    // + ivf/pq probe broadcasts — each inherited BNLJ is allowlisted above
-    // in its source query; caching can hide some, so this is the ceiling
-    "sim_neighbor_jaccard" -> 2, // same knnGraph inheritance
-    "rel_bloom_probe" -> 1, // one-row broadcast bits_set scalar folded in
-    "dedup_bbit_minhash" -> 4, // two 1-row count scalars per method row
+    "sim_recall_eval" -> 1, // one 1-row scalar join
+    "rel_bloom_probe" -> 1, // one-row bits_set scalar folded in
+    "dedup_bbit_minhash" -> 1, // one 1-row count scalar
     "sim_nprobe_curve" -> 1, // one-row hit-agg x one-row candidate-agg scalars
-    "text_bpe_merge" -> 2, // one-row broadcast best-pair scalar, used twice
+    "text_bpe_merge" -> 2, // one-row best-pair scalar, used twice
     // (merge projection + applied_merge output column)
-    "events_cooccurrence" -> 1, // one-row broadcast corpus-user-count scalar
-    "events_power_users" -> 1, // one-row broadcast total-events scalar
-    "events_anomaly_days" -> 1, // one-row broadcast daily-stats scalar
-    "sample_mixture_weights" -> 1, // one-row broadcast corpus-total scalar
+    "events_cooccurrence" -> 1, // one-row corpus-user-count scalar
+    "events_power_users" -> 1, // one-row total-events scalar
+    "events_anomaly_days" -> 1, // one-row daily-stats scalar
+    "sample_mixture_weights" -> 1, // one-row corpus-total scalar
     "sample_mixture_apply" -> 1, // inherits mixtureWeights' one-row scalar
-    "meta_ref_integrity" -> 3, // one 1-row broadcast fact-total per FK check
     "dedup_lsh_recall" -> 2, // two 1-row count scalars joined to the tp row
     "dedup_impact" -> 1, // 1-row before-aggregate × 1-row after-aggregate
-    "dedup_modality_agreement" -> 4, // two 1-row count scalars + the
-    // embedding-pair side's broadcast plane projections
-    "sample_token_budget" -> 1, // the solved 1-row cap broadcast over the
+    "dedup_modality_agreement" -> 2, // two 1-row count scalars
+    "sample_token_budget" -> 1, // the solved 1-row cap joined onto the
     // domain-sized relation (totals fold into the single window pass)
     "events_drift" -> 1) // observed-days × observed-types grid completion
     // (both sides are distinct-aggregates of the day×type count relation)
@@ -80,8 +64,8 @@ class PlanAuditSpec extends AnyFunSuite {
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
       val bnl = """\(\d+\) BroadcastNestedLoopJoin""".r.findAllIn(plan).size
-      if (bnl > bnlAllowed.getOrElse(name, 0))
-        offenders += s"$name: $bnl BNLJ (allowed ${bnlAllowed.getOrElse(name, 0)})"
+      if (bnl != bnlAllowed.getOrElse(name, 0))
+        offenders += s"$name: $bnl BNLJ (listed ${bnlAllowed.getOrElse(name, 0)})"
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
@@ -127,5 +111,22 @@ class PlanAuditSpec extends AnyFunSuite {
       "global single-task sorts crept in — gate them (TwoPass) or argue " +
         "the relation's size class onto the allowlist:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("PlanChecks.singlePartitionSorts: SortAggregate / SortMergeJoin " +
+    "parents are not global sorts (round-12 ADVICE regression)") {
+    def plan(parent: String): String =
+      s"""== Physical Plan ==
+         |$parent (3)
+         |+- Exchange (2)
+         |   +- Scan parquet (1)
+         |
+         |(2) Exchange
+         |Input [1]: [x#1L]
+         |Arguments: SinglePartition
+         |""".stripMargin
+    assert(PlanChecks.singlePartitionSorts(plan("Sort")) === 1)
+    assert(PlanChecks.singlePartitionSorts(plan("SortAggregate")) === 0)
+    assert(PlanChecks.singlePartitionSorts(plan("SortMergeJoin")) === 0)
   }
 }

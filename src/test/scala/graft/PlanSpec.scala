@@ -186,6 +186,41 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
+  test("kept join hints still broadcast with the size threshold off") {
+    // Every other join is left to the broadcast threshold and AQE. Each
+    // case below plans a join whose hint stays (the recorded plan changes
+    // without it: see the comment at each hint) at sf0.01 through its
+    // producer or declared query. Turning the threshold off stands in for
+    // inputs above it: only a hinted join can still broadcast, so deleting
+    // one of these hints fails its case.
+    import operators.{Dedup, Relational, Sampling, Similarity}
+    val d = TestSpark.Sf001
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame, String, Int)] = Seq(
+      ("bruteForceTopKBuild", () => Similarity.bruteForceTopKBuild(spark, d),
+        "BroadcastNestedLoopJoin", 1),
+      ("hardNegatives", () => Similarity.hardNegatives(spark, d),
+        "BroadcastNestedLoopJoin", 1),
+      ("dimTruncation", () => Similarity.dimTruncation(spark, d),
+        "BroadcastNestedLoopJoin", 1),
+      ("ivfKmeansTopK", () => Similarity.ivfKmeansTopK(spark, d),
+        "BroadcastHashJoin", 2), // centDist + ivfSearchTail
+      ("zscoreOutliers", () => Relational.zscoreOutliers(spark, d),
+        "BroadcastHashJoin", 1),
+      ("mixtureApply", () => Sampling.mixtureApply(spark, d),
+        "BroadcastHashJoin", 1),
+      ("cappedShingleIndexBuild", () => Dedup.cappedShingleIndexBuild(spark, d),
+        "BroadcastHashJoin", 1))
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for ((name, df, join, n) <- cases) {
+        val p = PlanChecks.formatted(df())
+        val got = (raw"\(\d+\) " + join).r.findAllIn(p).size
+        assert(got == n, s"$name: $got $join (expected $n):\n${p.take(1500)}")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+  }
+
   test("zone maps scan reads only the three involved columns") {
     val p = plan("rel_zone_maps")
     val rs = p.linesIterator.filter(_.contains("ReadSchema")).mkString
