@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.GraftSpark
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, GraftSql, SparkSession}
 import org.apache.spark.sql.types.StructType
 import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 import java.util.concurrent.atomic.AtomicInteger
@@ -24,8 +24,8 @@ import scala.util.control.NonFatal
   * query run twice — reads the materialized table. Reuse is then a property
   * of the filesystem, not of cache-eviction luck; a consumer's plan starts
   * at a parquet scan of the artifact instead of embedding the producer's
-  * lineage. The scan carries the schema the path's first read inferred
-  * ([[read]]), so building a consumer again launches no schema-inference
+  * lineage. The scan carries the schema the build wrote ([[table]]), so
+  * neither the first read nor any later one launches a schema-inference
   * job, and a build's own local checkpoints (a fixpoint's last generation)
   * are released once the artifact is written. On a real cluster these are
   * warehouse tables written by the index-build stage and read by every
@@ -141,7 +141,8 @@ object Artifacts {
       p
     }
 
-  /** The schema the first read of each artifact path inferred. */
+  /** The schema of each artifact path: the one [[table]] wrote, or the one
+    * the first read of a staged [[path]] inferred. */
   private val schemas = new ConcurrentHashMap[String, StructType]()
 
   /** Read artifact path `p` with `load`, passing it the schema `load`
@@ -153,7 +154,10 @@ object Artifacts {
     load(spark.read.schema(schemas.computeIfAbsent(p, _ => load(spark.read).schema)))
 
   /** Return `name` for input `dir`, building + writing it on first use,
-    * read through [[read]].
+    * read through [[read]] with the schema it wrote, made nullable as every
+    * file-source read makes it, so no read infers it again. Staged [[path]]
+    * outputs (CSV, partitioned layouts) keep [[read]]'s inference: their
+    * schemas really are inferred.
     *
     * Once written, the local checkpoints the build's own plan reads (the
     * last generation of a [[operators.Graph.fixpoint]] loop) are released:
@@ -166,6 +170,7 @@ object Artifacts {
       timed(name) {
         val df = build
         df.write.mode("overwrite").parquet(p)
+        schemas.put(p, GraftSql.asNullable(df.schema))
         GraftSpark.release(df)
       }
     }

@@ -62,7 +62,7 @@ object StagedOracles {
     * below is the corresponding CTE block of the SAME monolithic text
     * ([[Similarity.knnGraphHeadSql]]/[[Similarity.knnGraphCandSql]]/
     * [[Similarity.knnGraphScoredSql]]/[[Similarity.knnGraphTailSql]] —
-    * knnGraphSql is their byte-identical concatenation, Round16Spec),
+    * knnGraphSql is their byte-identical concatenation, StagedOracleSpec),
     * with upstream CTEs redirected to the previous stage table; the
     * inter-stage relations are id/score tuples (16-24 B/row columnar),
     * never the vector lists, and each phase's temp is freed before the
@@ -331,7 +331,7 @@ object StagedOracles {
     * final held ten concurrent self-join/DISTINCT spill states and died
     * of disk in the round-15 sf6 sweep). Each is its CTE block of the
     * monolithic text ([[Dedup.bbitSigCtesSql]] etc. — bbitMinhashSql is
-    * their byte-identical concatenation, Round16Spec), with the shingle
+    * their byte-identical concatenation, StagedOracleSpec), with the shingle
     * index and pair-intersection inputs redirected to their stages; the
     * staged final's twelve scalar aggregates then read tables. */
   private val stBbitBcand = "stage_bbit_bcand" ->

@@ -645,7 +645,7 @@ object Dedup {
   // ONE monolithic plan held ten concurrent self-join+DISTINCT spill
   // states and died of disk (round-15 sweep, >48 GB observed in the
   // round-16 bisect). bbitMinhashSql itself is the byte-identical
-  // concatenation of these blocks (Round16Spec pins the assembly).
+  // concatenation of these blocks (StagedOracleSpec pins the assembly).
 
   /** shb/sigc/sk/sig: the sampled [[NumPerms]]-perm signature pipeline. */
   private[graft] val bbitSigCtesSql: String = {

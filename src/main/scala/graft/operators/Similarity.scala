@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Artifacts, Q, Tables}
 import graft.functions.VectorFns._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,6 +48,43 @@ object Similarity {
   private[graft] def vecSide(e: DataFrame, n: Long): DataFrame =
     if (n <= VecBroadcastRows) broadcast(e) else e
 
+  // The search skeleton every ANN family composes: a candidate step (the
+  // band probe, the band pairs, the nearest-list probe) generates pairs,
+  // and only those are refined (the exact re-rank, the top-K). Each step's
+  // order and tie-break policy is stated once, below; the candidate joins
+  // stay at their call sites, with their own join hints.
+
+  /** Per-query top-[[K]] of a scored (query_id, neighbor_id, …) relation:
+    * `rank` 1..K within each query_id ordered by `score` (`cos_sim` DESC
+    * for exact cosine, `approx_d2` for PQ), an exact score tie going to
+    * the lower neighbor_id — the ROW_NUMBER order of every oracle. */
+  private[graft] def topK(scored: DataFrame, score: Column): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(score, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= K)
+  }
+
+  /** Exact re-rank of (query_id, neighbor_id) candidates: each pair is
+    * scored by [[cosineFast]] between the two vectors of `e` (the
+    * [[corpus]]), then [[topK]] keeps (query_id, neighbor_id, rank,
+    * cos_sim). Only candidates are ever scored. */
+  private[graft] def rerank(cand: DataFrame, e: DataFrame): DataFrame =
+    topK(cand
+      .join(e.select(col("vec_id"), col("v").as("qv")), col("query_id") === col("vec_id"))
+      .drop("vec_id")
+      .join(e, col("neighbor_id") === col("vec_id"))
+      .select(col("query_id"), col("neighbor_id"), cosineFast(col("qv"), col("v")).as("cos_sim")),
+      col("cos_sim").desc)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
+
+  /** Each vector's `n` nearest lists in a [[centDist]] relation (vec_id,
+    * list_id, d2), ranked `rn` = 1..n by (d2, list_id): an exact distance
+    * tie goes to the lower list_id, so every assignment (`n` = 1) and
+    * probe set is a pure function of the integer distances. */
+  private[graft] def nearestLists(dist: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
+    dist.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
+  }
+
   /** Exact brute-force cosine top-k for the first [[NumQueries]] vectors.
     * Materialized: the declared query AND the recall evaluation (which uses
     * it as ground truth against all three indexes) read the same table. */
@@ -64,11 +101,7 @@ object Similarity {
     val pairs = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosineFast(col("qv"), col("v")).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
+    topK(pairs, col("cos_sim").desc)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
   }
 
@@ -108,11 +141,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
         cosineFast(col("qv"), col("v")).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
+    topK(pairs, col("cos_sim").desc)
       .select(col("query_id"), col("label"), col("neighbor_id"), col("rank"),
         col("cos_sim"))
   }
@@ -426,15 +455,30 @@ object Similarity {
       bits: Int, tables: Int, multiprobe: Boolean, nQ: Int): DataFrame = {
     require(bits >= 1 && bits <= MaxBits,
       s"probeCandidates: bits=$bits outside the plane catalog [1, $MaxBits]")
-    val bands = srpBands(spark, dir, s"probe_bands_${tables}x$bits",
-      tables, bits)
-    val qb = probeQueryKeys(bands, bits, multiprobe, nQ)
-    bands.join(qb,
+    bandProbe(srpBands(spark, dir, s"probe_bands_${tables}x$bits", tables, bits),
+      bits, multiprobe, nQ)
+  }
+
+  /** The query-side band probe: (query_id, neighbor_id) for every vector
+    * sharing a (tbl, bkey) band with one of the first `nQ` vectors' probe
+    * keys ([[probeQueryKeys]]), the query itself excluded, each pair once. */
+  private[graft] def bandProbe(bands: DataFrame, bits: Int, multiprobe: Boolean,
+      nQ: Int): DataFrame =
+    bands.join(probeQueryKeys(bands, bits, multiprobe, nQ),
       col("tbl") === col("qtbl") && col("bkey") === col("qkey") &&
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
       .distinct()
-  }
+
+  /** Band pairs: every unordered pair (vec_a < vec_b) of vectors sharing a
+    * (tbl, bkey) band, once — the self-join Σ|bucket|² candidate set. */
+  private[graft] def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("x")
+      .join(bands.as("y"),
+        col("x.tbl") === col("y.tbl") && col("x.bkey") === col("y.bkey") &&
+          col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
+      .distinct()
 
   /** EMPIRICAL recall@[[K]] of an SRP geometry against exact ground
     * truth — the measurement the round-14 verdict named as the one open
@@ -443,10 +487,10 @@ object Similarity {
     * query: (query_id, hits, n_cand, recall_at_k).
     *
     * Key identity making this exact AND cheap: the production families
-    * re-rank candidates by EXACT cosine with the same (cos DESC,
-    * neighbor_id) tie order as the ground truth, so a true neighbor is in
-    * the returned top-k iff it is in the CANDIDATE set (any candidate
-    * out-ranking it would out-rank it in the exact truth too). Recall is
+    * re-rank candidates through [[rerank]], whose [[topK]] order is the
+    * ground truth's, so a true neighbor is in the returned top-k iff it
+    * is in the CANDIDATE set (any candidate out-ranking it would out-rank
+    * it in the exact truth too). Recall is
     * therefore |candidates ∩ exact top-k| / k — a semi-join against the
     * band artifact, no re-rank pass needed. `n_cand` is the per-query
     * candidate count, the query-side cost the recall is bought with. */
@@ -516,7 +560,7 @@ object Similarity {
     * math, so the construction distributes like any other projection.
     * Output: (query_id, cos_bp, rep, v, cos_actual); cos_actual is the
     * realized exact cosine (equals c to float rounding; pinned in
-    * Round16Spec). */
+    * SimilaritySpec). */
   private[graft] def plantedNeighbors(spark: SparkSession, dir: String,
       nQ: Int, perCell: Int): DataFrame =
     corpus(spark, dir).filter(col("vec_id") < nQ)
@@ -596,35 +640,19 @@ object Similarity {
       .orderBy(col("cos_target"))
   }
 
-  /** Multi-table SRP-LSH + exact cosine re-rank: candidates are vectors
-    * sharing any of [[NumTables]] band keys with the query, deduplicated,
-    * then re-ranked with exact cosine. Approximate — recall vs
-    * [[bruteForceTopK]] is measured in the spec. At scale the band explode
-    * multiplies the corpus by NumTables but turns ANN into an equi-join.
-    * Materialized: the declared query and the recall evaluation share it. */
+  /** Multi-table SRP-LSH: the single-key [[bandProbe]] of the
+    * [[NumTables]]-table band artifact, then the exact [[rerank]].
+    * Approximate — recall vs [[bruteForceTopK]] is measured in the spec.
+    * At scale the band explode multiplies the corpus by NumTables but
+    * turns ANN into an equi-join. Materialized: the declared query and
+    * the recall evaluation share it. */
   def lshTopK(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "sim_lsh_topk")(lshTopKBuild(spark, dir))
 
   private[graft] def lshTopKBuild(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpus(spark, dir)
-    val bands = srpBands(spark, dir, "sim_srp_bands", NumTables,
-      bandBits(Tables.rows(spark, dir, "embeddings")))
-    val qBands = bands.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"), col("bkey").as("qkey"))
-    val cand = bands.join(qBands,
-      col("tbl") === col("qtbl") && col("bkey") === col("qkey") &&
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand
-      .join(e.select(col("vec_id"), col("v").as("qv")), col("query_id") === col("vec_id")).drop("vec_id")
-      .join(e, col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"), cosineFast(col("qv"), col("v")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
+    val bits = bandBits(Tables.rows(spark, dir, "embeddings"))
+    val bands = srpBands(spark, dir, "sim_srp_bands", NumTables, bits)
+    rerank(bandProbe(bands, bits, multiprobe = false, NumQueries), corpus(spark, dir))
   }
 
   val lshTopKSql: String = {
@@ -656,38 +684,18 @@ object Similarity {
     * key bits) — recall of a much larger table budget at the memory cost
     * of none, the standard production ANN trade. Probing is a pure
     * key-fanout on the query side: queries × (bits+1) probe keys join the
-    * SAME materialized band artifact the single-probe family reads; the
-    * corpus-side index is untouched, candidates stay an equi-join, and
-    * exact cosine re-ranks candidates only. Probe keys and band keys are
+    * SAME materialized band artifact the single-probe family reads
+    * ([[bandProbe]] with `multiprobe`); the corpus-side index is
+    * untouched, candidates stay an equi-join, and [[rerank]] scores
+    * candidates only. Probe keys and band keys are
     * integers from the shared deterministic plane matrix, so the oracle
     * reproduces the probe set exactly. By construction the candidate set
     * is a superset of [[lshTopK]]'s — the spec asserts pointwise
     * rank-dominance of the returned similarities. */
   def multiProbeTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = corpus(spark, dir)
     val bits = bandBits(Tables.rows(spark, dir, "embeddings"))
     val bands = srpBands(spark, dir, "sim_srp_bands", NumTables, bits)
-    val probes = bands.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("tbl").as("qtbl"),
-        explode(array(
-          (col("bkey") +: (0 until bits).map(i =>
-            expr(s"bkey ^ ${1L << i}").cast("long"))): _*)).as("qkey"))
-    val cand = bands.join(probes,
-      col("tbl") === col("qtbl") && col("bkey") === col("qkey") &&
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand
-      .join(e.select(col("vec_id"), col("v").as("qv")),
-        col("query_id") === col("vec_id")).drop("vec_id")
-      .join(e, col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosineFast(col("qv"), col("v")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
+    rerank(bandProbe(bands, bits, multiprobe = true, NumQueries), corpus(spark, dir))
   }
 
   val multiProbeTopKSql: String = {
@@ -733,7 +741,7 @@ object Similarity {
     * grown 16-table budget (the ExtTableBase catalog block) measured
     * 0.977. So past [[PairGrow16Rows]] vectors the detector draws 16
     * tables, past [[PairGrow32Rows]] 32 (the catalog's full injective
-    * budget, Round15Spec). The thresholds are integers mirrored verbatim
+    * budget, SimilaritySpec). The thresholds are integers mirrored verbatim
     * in the oracle's CASE (the usual idiom), and every oracle-swept
     * scale sits below the first one — the sweeps pin the 4/8-table
     * regimes, the 1.2M/12M planted probes pin the grown ones.
@@ -781,26 +789,17 @@ object Similarity {
 
   /** The producer pipeline (plan contract pinned in PlanSpec). */
   private[graft] def embeddingCosinePairsBuild(spark: SparkSession, dir: String): DataFrame = {
-      val e = corpus(spark, dir)
-      val n = Tables.rows(spark, dir, "embeddings")
-      val bits = bandBits(n)
-      val bands = srpBands(spark, dir, "sim_srp_bands_pair",
-        pairTablesFor(n), bits)
-      val cand = bands.as("x")
-        .join(bands.as("y"),
-          col("x.tbl") === col("y.tbl") && col("x.bkey") === col("y.bkey") &&
-            col("x.vec_id") < col("y.vec_id"))
-        .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-        .distinct()
-      cand
-        .join(vecSide(e.select(col("vec_id"), col("v").as("va")), n),
-          col("vec_a") === col("vec_id"))
-        .drop("vec_id")
-        .join(vecSide(e.select(col("vec_id"), col("v").as("vb")), n),
-          col("vec_b") === col("vec_id"))
-        .select(col("vec_a"), col("vec_b"), cosineFast(col("va"), col("vb")).as("cos_sim"))
-        .filter(col("cos_sim") >= PairTau)
-    }
+    val e = corpus(spark, dir)
+    val n = Tables.rows(spark, dir, "embeddings")
+    bandPairs(srpBands(spark, dir, "sim_srp_bands_pair", pairTablesFor(n), bandBits(n)))
+      .join(vecSide(e.select(col("vec_id"), col("v").as("va")), n),
+        col("vec_a") === col("vec_id"))
+      .drop("vec_id")
+      .join(vecSide(e.select(col("vec_id"), col("v").as("vb")), n),
+        col("vec_b") === col("vec_id"))
+      .select(col("vec_a"), col("vec_b"), cosineFast(col("va"), col("vb")).as("cos_sim"))
+      .filter(col("cos_sim") >= PairTau)
+  }
 
   // The three textual building blocks of [[embeddingCosinePairsSql]],
   // exposed like the kNN-graph blocks above and for the same reason: the
@@ -875,7 +874,7 @@ object Similarity {
   }
 
   /** Oracle for [[pairBandAudit]] — REUSES [[cosinePairsHeadSql]] verbatim
-    * (asserted byte-identical in Round17Spec), so the audited bands CTE is
+    * (asserted byte-identical in SimilaritySpec), so the audited bands CTE is
     * the same text every pair-family oracle executes, grown catalog and
     * table-budget CASE included. Digest sums stay inside BIGINT out past
     * 2³² band rows (each term < 2³¹). */
@@ -1013,10 +1012,7 @@ object Similarity {
     * quantized-integer + floor, so the step is a pure function of its
     * input — reproducible across partitionings and engines. */
   private def lloydStep(dims: DataFrame, cent: DataFrame): DataFrame = {
-    val dist = centDist(dims, cent)
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-    val assign = dist.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val assign = nearestLists(centDist(dims, cent), 1)
       .select(col("vec_id"), col("list_id"))
     dims.join(assign, "vec_id")
       .groupBy(col("list_id"), col("d"))
@@ -1028,38 +1024,20 @@ object Similarity {
     * re-rank inside the probed lists. */
   private def ivfSearch(e: DataFrame, dims: DataFrame, cent: DataFrame): DataFrame = {
     val dist = centDist(dims, cent)
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-    val assign = dist
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("list_id"))
-    val probes = dist
-      .filter(col("vec_id") < NumQueries)
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") <= IvfProbes)
+    val assign = nearestLists(dist, 1).select(col("vec_id"), col("list_id"))
+    val probes = nearestLists(dist.filter(col("vec_id") < NumQueries), IvfProbes)
       .select(col("vec_id").as("query_id"), col("list_id").as("probe_list"))
     ivfSearchTail(e, assign, probes)
   }
 
   /** The probe/search tail shared by every IVF variant: candidate
-    * generation by list equi-join, exact cosine re-rank, per-query top-k. */
+    * generation by list equi-join, then the exact [[rerank]]. */
   private def ivfSearchTail(e: DataFrame, assign: DataFrame,
-      probes: DataFrame): DataFrame = {
+      probes: DataFrame): DataFrame =
     // kept: see centDist
-    val cand = assign.join(broadcast(probes),
+    rerank(assign.join(broadcast(probes),
       col("list_id") === col("probe_list") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand
-      .join(e.select(col("vec_id"), col("v").as("qv")), col("query_id") === col("vec_id"))
-      .drop("vec_id")
-      .join(e, col("neighbor_id") === col("vec_id"))
-      .select(col("query_id"), col("neighbor_id"), cosineFast(col("qv"), col("v")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("cos_sim"))
-  }
+      .select(col("query_id"), col("vec_id").as("neighbor_id")), e)
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame =
     // materialized: the declared query and the recall evaluation share it
@@ -1102,26 +1080,14 @@ object Similarity {
     * the assignment IS index metadata written once at build time.
     * Round18Spec pins content equality to the inline derivation. */
   private[graft] def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.table(spark, dir, "sim_kmeans_assign") {
-      val dims = quantDims(spark, dir)
-      val dist = centDist(dims, kmeansCentroids(spark, dir))
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-      dist.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("list_id"))
-    }
+    Artifacts.table(spark, dir, "sim_kmeans_assign")(kmeansAssignInline(spark, dir))
 
-  /** The pre-round-18 derivations, kept as differential references for
-    * Round18Spec: the artifact-backed assignment and the filtered-probe
-    * search must reproduce these rows exactly. */
-  private[graft] def kmeansAssignInline(spark: SparkSession, dir: String): DataFrame = {
-    val dims = quantDims(spark, dir)
-    val dist = centDist(dims, kmeansCentroids(spark, dir))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-    dist.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  /** The unwrapped k-means derivations: [[kmeansAssign]] writes the first,
+    * and Round18Spec holds the filtered-probe [[ivfKmeansTopK]] to the
+    * second's rows. */
+  private[graft] def kmeansAssignInline(spark: SparkSession, dir: String): DataFrame =
+    nearestLists(centDist(quantDims(spark, dir), kmeansCentroids(spark, dir)), 1)
       .select(col("vec_id"), col("list_id"))
-  }
   private[graft] def ivfKmeansTopKInline(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir)
     val dims = quantDims(spark, dir)
@@ -1138,10 +1104,7 @@ object Similarity {
     // per-vector window are both keyed on vec_id.
     val dist = centDist(dims.filter(col("vec_id") < NumQueries),
       kmeansCentroids(spark, dir))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-    val probes = dist
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") <= IvfProbes)
+    val probes = nearestLists(dist, IvfProbes)
       .select(col("vec_id").as("query_id"), col("list_id").as("probe_list"))
     ivfSearchTail(e, kmeansAssign(spark, dir), probes)
   }
@@ -1343,29 +1306,20 @@ object Similarity {
   private[graft] def knnGraphBuild(spark: SparkSession, dir: String): DataFrame = {
     val e = corpus(spark, dir)
     val n = Tables.rows(spark, dir, "embeddings")
-    // both self-join sides read the materialized band table
-    val bands = srpBands(spark, dir, "sim_srp_bands", NumTables,
-      bandBits(n))
-    // Round-17: generate UNORDERED candidate pairs (vec_a < vec_b) and
-    // score each once, then emit both directions through a 2-element
-    // generator. Band-sharing is symmetric, so the old ordered candidate
-    // set was exactly {(a,b),(b,a) : {a,b} band-mates} — and cosineFast is
-    // bit-symmetric (IEEE multiplication is commutative and the fold order
-    // is fixed), so exploding the half-set reproduces the old scored
-    // relation row-for-row while HALVING the self-join output, the
-    // DISTINCT state, both candidate->vector joins, and the cosine count
-    // (guide §2.3/§2.4: shuffle fewer bytes, compute less). The generator
-    // — not a self-union — keeps the join subtree single-execution.
-    // Round17Spec pins equality against the two-sided form.
-    val cand = bands.as("x")
-      .join(bands.as("y"),
-        col("x.tbl") === col("y.tbl") && col("x.bkey") === col("y.bkey") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-      .distinct()
+    // Round-17: score each unordered band pair (vec_a < vec_b) once, then
+    // emit both directions through a 2-element generator. Band-sharing is
+    // symmetric, so the old ordered candidate set was exactly
+    // {(a,b),(b,a) : {a,b} band-mates} — and cosineFast is bit-symmetric
+    // (IEEE multiplication is commutative and the fold order is fixed), so
+    // exploding the half-set reproduces the old scored relation
+    // row-for-row while HALVING the self-join output, the DISTINCT state,
+    // both candidate->vector joins, and the cosine count (guide §2.3/§2.4:
+    // shuffle fewer bytes, compute less). The generator — not a
+    // self-union — keeps the join subtree single-execution. SimilaritySpec
+    // pins equality against the two-sided form.
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    cand
+    bandPairs(srpBands(spark, dir, "sim_srp_bands", NumTables, bandBits(n)))
       .join(vecSide(e.select(col("vec_id").as("sv"), col("v").as("va")), n),
         col("vec_a") === col("sv"))
       .drop("sv")
@@ -1399,7 +1353,7 @@ object Similarity {
   // are id/score tuples (16-24 B/row columnar), never the 64-DOUBLE
   // vector lists. knnGraphSql itself is the same byte-identical
   // concatenation the driver's monolithic gate has hash-verified since
-  // the query landed (Round16Spec pins the assembly).
+  // the query landed (StagedOracleSpec pins the assembly).
 
   /** `WITH e, nn/prm/planes/bands` — corpus + adaptive band geometry. */
   private[graft] val knnGraphHeadSql: String =
@@ -1610,19 +1564,15 @@ object Similarity {
       .groupBy(col("vec_id").as("query_id"), col("s").as("qs"), col("code").as("qcode"))
       .agg(sum((col("q") - col("cq")) * (col("q") - col("cq"))).as("pd2"))
 
-  private[graft] def pqTopKBuild(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2"), col("neighbor_id"))
-    pqCodes(spark, dir).join(pqDistTable(spark, dir),
+  private[graft] def pqTopKBuild(spark: SparkSession, dir: String): DataFrame =
+    topK(pqCodes(spark, dir).join(pqDistTable(spark, dir),
         col("s") === col("qs") && col("code") === col("qcode") &&
           col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("pd2")).as("approx_d2"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("approx_d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("approx_d2")),
+      col("approx_d2"))
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("approx_d2"))
-  }
 
   /** PQ QUANTIZATION-DISTORTION REPORT — the index-quality metric read
     * next to the recall curve: per subspace, the total / mean / max
@@ -1727,25 +1677,18 @@ object Similarity {
     // probe selection only needs the QUERY batch's centroid distances
     val qDist = centDist(dims.filter(col("vec_id") < NumQueries),
       seedCentroids(spark, dir, dims))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-    val probes = qDist
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") <= IvfProbes)
+    val probes = nearestLists(qDist, IvfProbes)
       .select(col("vec_id").as("query_id"), col("list_id").as("probe_list"))
     val cand = assign.join(probes,
         col("list_id") === col("probe_list") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2"), col("neighbor_id"))
-    cand
+    topK(cand
       .join(pqCodes(spark, dir), col("neighbor_id") === col("vec_id"))
       .join(pqDistTable(spark, dir).withColumnRenamed("query_id", "dq"),
         col("query_id") === col("dq") && col("s") === col("qs") &&
           col("code") === col("qcode"))
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("pd2")).as("approx_d2"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
+      .agg(sum(col("pd2")).as("approx_d2")), col("approx_d2"))
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("approx_d2"))
   }
 
@@ -1838,10 +1781,7 @@ object Similarity {
   private def seedAssign(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "sim_ivf_assign") {
       val dims = quantDims(spark, dir)
-      val dist = centDist(dims, seedCentroids(spark, dir, dims))
-      val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
-      dist.withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") === 1)
+      nearestLists(centDist(dims, seedCentroids(spark, dir, dims)), 1)
         // d2 (exact integer distance to the OWN centroid) rides along: the
         // SemDeDup keep-policy ranks within-list vectors by it
         .select(col("vec_id"), col("list_id"), col("d2"))
@@ -1864,15 +1804,12 @@ object Similarity {
   def nprobeCurve(spark: SparkSession, dir: String): DataFrame = {
     val dims = quantDims(spark, dir)
     val dist = centDist(dims, seedCentroids(spark, dir, dims))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("list_id"))
     val assign = seedAssign(spark, dir).select(col("vec_id"), col("list_id"))
     val lsz = assign.groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
     // probe-rank relation feeds both the hit and candidate aggregates —
     // artifact, not persist(): released at write time, re-reads are scans
     val pr = Artifacts.table(spark, dir, "sim_probe_rank") {
-      dist.filter(col("vec_id") < NumQueries)
-        .withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") <= NprobeSteps.max)
+      nearestLists(dist.filter(col("vec_id") < NumQueries), NprobeSteps.max)
         .select(col("vec_id").as("query_id"), col("list_id"), col("rn"))
     }
     val gt = bruteForceTopK(spark, dir).select(col("query_id"), col("neighbor_id"))

@@ -18,6 +18,10 @@ object GraftSql {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `s` with every field, array element and map value nullable — the
+    * schema a file-source read of data written with `s` reports. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** The analyzed logical plan of a DataFrame (for composing custom plans). */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

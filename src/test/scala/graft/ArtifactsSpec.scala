@@ -176,4 +176,36 @@ class ArtifactsSpec extends AnyFunSuite {
         "staging a roundtrip's files must not count as an index build")
     } finally (links :+ fresh).foreach(Files.delete)
   }
+
+  test("a fresh artifact is read with the schema it wrote: no " +
+    "schema-inference job") {
+    import java.nio.file.Files
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a fresh input (links to the sf0.001 tables), so every artifact below
+    // is written by this very call; an artifact write runs inside a SQL
+    // execution, a parquet footer inference outside any
+    val fresh = Files.createTempDirectory("graft-artschema-")
+    val links = new java.io.File(TestSpark.Sf0001).listFiles().toSeq
+      .map(t => Files.createSymbolicLink(fresh.resolve(t.getName), t.toPath))
+    val inferences = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val stage = e.stageInfos.map(_.name).headOption.getOrElse("?")
+        if (e.properties.getProperty("spark.sql.execution.id") == null &&
+          stage.startsWith("parquet at Artifacts.scala")) inferences.add(stage)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val before = Artifacts.count
+      val df = SparkEntry.queries("sim_label_centroids")(spark, fresh.toString)
+      assert(Artifacts.count > before, "the artifacts must be built by this call")
+      assert(df.collect().nonEmpty)
+      org.apache.spark.GraftSpark.drainListenerBus(spark.sparkContext)
+      assert(inferences.isEmpty, s"schema-inference jobs: $inferences")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      (links :+ fresh).foreach(Files.delete)
+    }
+  }
 }

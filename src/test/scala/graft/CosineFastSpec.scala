@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * embeddings and on ragged/edge inputs. */
 class CosineFastSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  private val dir = TestSpark.Sf0001
 
   test("cosineFast == HOF cosine bit-for-bit on the embeddings table") {
     val e = Tables.embeddings(spark, TestSpark.Sf0001)
@@ -43,5 +44,20 @@ class CosineFastSpec extends AnyFunSuite {
     // '*(n)' marks operators inside a WholeStageCodegen region
     assert(plan.linesIterator.exists(l =>
       l.contains("cosine_similarity") && l.contains("*(")), plan.take(800))
+  }
+
+  test("native dotFast is bit-identical to the HOF dot fold") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.VectorFns
+    val e = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), VectorFns.toDouble(col("embedding")).as("v"))
+    val mism = e.select(
+        VectorFns.dot(col("v"), col("v")).as("hof"),
+        VectorFns.dotFast(col("v"), col("v")).as("native"))
+      // bit-level comparison: NaN-safe via the eqNullSafe of raw doubles
+      // is not enough for -0.0 vs 0.0 — compare the IEEE bit patterns
+      .filter(expr("cast(hof as string) <> cast(native as string)"))
+      .count()
+    assert(mism == 0L, s"$mism rows where dotFast diverges from the HOF dot")
   }
 }

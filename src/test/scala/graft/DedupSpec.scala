@@ -99,4 +99,19 @@ class DedupSpec extends AnyFunSuite {
     assert(planted.get(1L).contains(0L) || planted.isEmpty == false)
     if (planted.contains(2L)) assert(planted(2L) == 0L)
   }
+
+  test("native arrayEqCount matches the zip_with+aggregate signature count") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.VectorFns
+    // arbitrary long arrays with ties: pairs of shuffled id-derived values
+    val df = spark.range(0, 500).selectExpr(
+      "array(id % 7, id % 3, id % 7, 42L, id) as a",
+      "array(id % 7, id % 5, (id + 1) % 7, 42L, id) as b")
+    val mism = df.select(
+        VectorFns.arrayEqCount(col("a"), col("b")).as("native"),
+        aggregate(zip_with(col("a"), col("b"), (x, y) => (x === y).cast("int")),
+          lit(0), (acc, v) => acc + v).as("hof"))
+      .filter(col("native") =!= col("hof")).count()
+    assert(mism == 0L)
+  }
 }

@@ -418,4 +418,45 @@ class StagedOracleSpec extends AnyFunSuite {
     assert(j.contains("\"dedup_cascade\"") && j.contains("\"sim_modularity\""))
     assert(j.contains("\"stages\"") && j.contains("\"final\""))
   }
+
+  test("staged semantic closure guard: an under-rounded pipeline leaves " +
+    "edges joining two labels (the error() predicate trips); the " +
+    "doubling bound converges a long path within its predicted rounds") {
+    // exact Scala model of StagedOracles.semRound: hook (neighbor min) →
+    // h = min(cur, hook) → compress lbl ← min(h, h[h]) — certifying the
+    // f ← 2f+2 claim and the guard itself, which DuckDB-only execution
+    // keeps out of reach of the sbt suite (the oracle engine is
+    // driver-side; this pins the algebra the SQL implements)
+    def propagate(sym: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+      var lbl = sym.map(_._1).distinct.map(id => id -> id).toMap
+      for (_ <- 1 to rounds) {
+        val hook = sym.groupBy(_._1).map { case (a, es) =>
+          a -> es.map(e => lbl(e._2)).min }
+        val h = lbl.map { case (id, l) =>
+          id -> math.min(l, hook.getOrElse(id, l)) }
+        lbl = h.map { case (id, l) => id -> math.min(l, h.getOrElse(l, l)) }
+      }
+      lbl
+    }
+    def unconvergedEdges(sym: Seq[(Long, Long)], lbl: Map[Long, Long]): Int =
+      sym.count(e => lbl(e._1) != lbl(e._2))
+    val n = 2000L
+    val edges = (0L until n - 1).map(i => (i, i + 1))
+    val sym = edges ++ edges.map(_.swap)
+    // f_r = 2^(r+1) − 2 reach ⇒ a path of diameter 1999 needs ≤ 10 rounds
+    val bound = (1 to 30).find(r => (1L << (r + 1)) - 2 >= n - 1).get
+    assert(bound === 10)
+    val minimal = (1 to bound).find(r =>
+      unconvergedEdges(sym, propagate(sym, r)) == 0)
+    assert(minimal.isDefined,
+      s"doubling bound violated: $bound rounds did not converge a $n-path")
+    // the guard: one round short of minimal, stage_sem_fix's COUNT(*) is
+    // nonzero — the error() branch fires instead of serving bad labels
+    val short = propagate(sym, minimal.get - 1)
+    assert(unconvergedEdges(sym, short) > 0,
+      "under-rounded pipeline converged — the guard test is vacuous")
+    // converged labeling is edge-uniform at the component minimum
+    val done = propagate(sym, minimal.get)
+    assert(done.values.toSet === Set(0L))
+  }
 }
