@@ -22,7 +22,7 @@ object Dedup {
   private val NumPerms = 32
   private val NumBands = 8 // 4 rows per band
   private val RowsPerBand = NumPerms / NumBands
-  private val JaccardThreshold = 0.3
+  private[graft] val JaccardThreshold = 0.3
 
   /** MinHash permutations are affine maps h_i(x) = (a_i·x + b_i) mod P over
     * a single MD5-derived base hash — one MD5 per shingle instead of
@@ -147,6 +147,15 @@ object Dedup {
        |        JOIN (SELECT h FROM sh GROUP BY h
        |              HAVING COUNT(*) <= $DfCap) r USING (h))""".stripMargin
 
+  /** Shared CTE suffix: `sz` (capped sizes) and `inter` (capped pair
+    * intersections) over `shf`, the oracle of [[cappedPairScores]]. */
+  private val cappedPairsSql: String =
+    """sz AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
+      |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+      |          FROM shf a JOIN shf b
+      |            ON a.h = b.h AND a.doc_id < b.doc_id
+      |          GROUP BY 1, 2)""".stripMargin
+
   /** Per-doc distinct-shingle counts over the FULL index — the `|A|`/`|B|`
     * sizes the MinHash and incremental-LSH verifications divide by.
     * Materialized (round-17, guide §2.4): the aggregate is keyed identically
@@ -187,6 +196,15 @@ object Dedup {
       .agg(count(lit(1)).as("n_common"))
   }
 
+  /** [[pairIntersections]] with both capped sizes, `sa.n` and `sb.n`: the
+    * Jaccard, containment and threshold-sweep scores each project it. */
+  private def cappedPairScores(spark: SparkSession, dir: String): DataFrame = {
+    val sz = docSizesCapped(spark, dir)
+    pairIntersections(spark, dir)
+      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
+  }
+
   /** Exact n-gram Jaccard near-dup pairs above [[JaccardThreshold]], found
     * through the inverted shingle index (docs never meet unless they share a
     * shingle — no O(n²) cross join), restricted to discriminative shingles
@@ -197,11 +215,7 @@ object Dedup {
     // bucketed by doc_a to co-partition with the minhash-pairs table the
     // recall evaluation joins it against
     Artifacts.bucketedTable(spark, dir, "dedup_jaccard_pairs", Seq("doc_a")) {
-      val sz = docSizesCapped(spark, dir)
-      val inter = pairIntersections(spark, dir)
-      inter
-        .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-        .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
+      cappedPairScores(spark, dir)
         .select(col("doc_a"), col("doc_b"), col("n_common"),
           (col("sa.n") + col("sb.n") - col("n_common")).as("n_union"),
           (col("n_common").cast("double") / (col("sa.n") + col("sb.n") - col("n_common")))
@@ -212,11 +226,7 @@ object Dedup {
   val ngramJaccardSql: String =
     s"""WITH $shingleIndexSql,
        |$cappedShingleIndexSql,
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-       |          FROM shf a JOIN shf b
-       |            ON a.h = b.h AND a.doc_id < b.doc_id
-       |          GROUP BY 1, 2)
+       |$cappedPairsSql
        |SELECT doc_a, doc_b, n_common,
        |       sa.n + sb.n - n_common AS n_union,
        |       CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) AS jaccard
@@ -295,27 +305,18 @@ object Dedup {
     * a training-data pipeline must catch. Same inverted-index candidate
     * generation as [[ngramJaccard]] (bucketed equi-join, never all-pairs);
     * only the final scoring differs. */
-  def containment(spark: SparkSession, dir: String): DataFrame = {
-    val sz = docSizesCapped(spark, dir)
-    val inter = pairIntersections(spark, dir)
-    inter
-      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
+  def containment(spark: SparkSession, dir: String): DataFrame =
+    cappedPairScores(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("n_common"),
         col("sa.n").as("n_a"), col("sb.n").as("n_b"),
         (col("n_common").cast("double") / least(col("sa.n"), col("sb.n")))
           .as("containment"))
       .filter(col("containment") >= ContainmentThreshold)
-  }
 
   val containmentSql: String =
     s"""WITH $shingleIndexSql,
        |$cappedShingleIndexSql,
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-       |          FROM shf a JOIN shf b
-       |            ON a.h = b.h AND a.doc_id < b.doc_id
-       |          GROUP BY 1, 2)
+       |$cappedPairsSql
        |SELECT doc_a, doc_b, n_common, sa.n AS n_a, sb.n AS n_b,
        |       CAST(n_common AS DOUBLE) / LEAST(sa.n, sb.n) AS containment
        |FROM inter
@@ -374,7 +375,8 @@ object Dedup {
   }
 
   /** (doc_id, band, k0..k⌈r/2⌉₋₁) from a signature table: each band's
-    * slice packed pairwise into longs (see [[minhashPipeline]]). */
+    * slice packed pairwise into longs (see [[minhashPipeline]]); the key
+    * columns are [[packedBandKeys]]. */
   private def bandsOf(sig: DataFrame, numPerms: Int, numBands: Int): DataFrame = {
     val rowsPerBand = numPerms / numBands
     val nPacks = (rowsPerBand + 1) / 2
@@ -392,11 +394,67 @@ object Dedup {
         (0 until nPacks).map(i => col(s"bs.k$i")): _*)
   }
 
-  /** Band equi-join condition between aliases x and y. */
-  private def bandJoinCond(nPacks: Int): Column =
-    (0 until nPacks)
-      .map(i => col(s"x.k$i") === col(s"y.k$i"))
-      .foldLeft(col("x.band") === col("y.band"))(_ && _)
+  /** The key columns of a [[bandsOf]] table with `rowsPerBand` rows. */
+  private def packedBandKeys(rowsPerBand: Int): Seq[String] =
+    "band" +: (0 until (rowsPerBand + 1) / 2).map(i => s"k$i")
+
+  /** Aliases x and y agree on every column of `keys`. */
+  private def bandKeyEq(keys: Seq[String]): Column =
+    keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _)
+
+  /** The band self-join (aliases x, y): rows agreeing on every key, each
+    * unordered pair only as `x.doc_id < y.doc_id` (no self-pairs), once per
+    * shared band. */
+  private def bandJoin(bands: DataFrame, keys: Seq[String]): DataFrame =
+    bands.as("x")
+      .join(bands.as("y"), bandKeyEq(keys) && col("x.doc_id") < col("y.doc_id"))
+
+  /** The distinct `(doc_a, doc_b)` pairs sharing a band ([[bandJoin]]). */
+  private[graft] def bandCandidates(bands: DataFrame, keys: Seq[String]): DataFrame =
+    bandJoin(bands, keys)
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .distinct()
+
+  /** `(doc_id, <digest>, band, bkey)`: per band b < `nBands`, `bkey` is
+    * the digest's `bandBits` bits from bit b·`bandBits`. */
+  private[graft] def digestBands(
+      digests: DataFrame, digest: String, nBands: Int, bandBits: Int): DataFrame = {
+    val mask = (1L << bandBits) - 1
+    digests.select(col("doc_id"), col(digest),
+      posexplode(array((0 until nBands).map(b =>
+        expr(s"shiftright($digest, ${b * bandBits}) & $mask")): _*)))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
+  }
+
+  /** `(doc_a, doc_b, hamming)`: distinct [[digestBands]] pairs sharing a
+    * band ([[bandJoin]]) whose digests differ in at most `max` bits. */
+  private[graft] def hammingPairs(
+      bands: DataFrame, digest: String, max: Int): DataFrame =
+    bandJoin(bands, Seq("band", "bkey"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        col(s"x.$digest").as("ah"), col(s"y.$digest").as("bh"))
+      .distinct()
+      .withColumn("hamming", expr("bit_count(ah ^ bh)"))
+      .filter(col("hamming") <= max)
+      .select(col("doc_a"), col("doc_b"), col("hamming"))
+
+  /** Exact Jaccard of candidates `(doc_a, doc_b, <carry>)` only: shared
+    * `index` hashes `(doc_id, h)` over the union of sizes `sz` `(doc_id,
+    * n)`, kept at `jaccard >= JaccardThreshold` (inclusive). */
+  private[graft] def verifyJaccard(
+      cand: DataFrame, carry: String, index: DataFrame, sz: DataFrame): DataFrame =
+    cand
+      .join(index.as("ca"), col("doc_a") === col("ca.doc_id"))
+      .join(index.as("cb"),
+        col("doc_b") === col("cb.doc_id") && col("ca.h") === col("cb.h"))
+      .groupBy(col("doc_a"), col("doc_b"), col(carry))
+      .agg(count(lit(1)).as("n_common"))
+      .join(sz.as("za"), col("doc_a") === col("za.doc_id"))
+      .join(sz.as("zb"), col("doc_b") === col("zb.doc_id"))
+      .select(col("doc_a"), col("doc_b"), col(carry),
+        (col("n_common").cast("double") / (col("za.n") + col("zb.n") - col("n_common")))
+          .as("jaccard"))
+      .filter(col("jaccard") >= JaccardThreshold)
 
   private def minhashPipeline(
       spark: SparkSession,
@@ -404,8 +462,6 @@ object Dedup {
       numPerms: Int,
       numBands: Int): DataFrame = {
     require(numPerms % numBands == 0, "numBands must divide numPerms")
-    val rowsPerBand = numPerms / numBands
-    val sh = shingleIndex(spark, dir)
     val sig = minhashSignatures(spark, dir, numPerms)
 
     // one row per (doc, band): the band key is the band's signature slice
@@ -416,13 +472,8 @@ object Dedup {
     // hashing work at all — and the key function is plain integer
     // arithmetic, so the DuckDB oracle reproduces the identical candidate
     // set. (SimHash bands were already integer — this closes the gap.)
-    val nPacks = (rowsPerBand + 1) / 2
-    val bands = bandsOf(sig, numPerms, numBands)
-    val bandEq = bandJoinCond(nPacks)
-    val cand = bands.as("x")
-      .join(bands.as("y"), bandEq && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
+    val cand = bandCandidates(bandsOf(sig, numPerms, numBands),
+      packedBandKeys(numPerms / numBands))
 
     // native fused loop (round-17): the zip_with+aggregate chain was
     // CodegenFallback, breaking whole-stage codegen for the estimate
@@ -436,49 +487,42 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         (estMatches.cast("double") / numPerms).as("est_jaccard"))
 
-    // verify candidates with exact jaccard, computed ONLY for the candidate
-    // pairs (shingle intersection semi-joined to the candidate set) — the
-    // whole point of LSH is that the exact O(pairs) work touches ~nothing
-    val sz = docSizesFull(spark, dir)
-    val nCommon = withEst
-      .join(sh.as("ca"), col("doc_a") === col("ca.doc_id"))
-      .join(sh.as("cb"),
-        col("doc_b") === col("cb.doc_id") && col("ca.h") === col("cb.h"))
-      .groupBy(col("doc_a"), col("doc_b"), col("est_jaccard"))
-      .agg(count(lit(1)).as("n_common"))
-    nCommon
-      .join(sz.as("za"), col("doc_a") === col("za.doc_id"))
-      .join(sz.as("zb"), col("doc_b") === col("zb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"),
-        (col("n_common").cast("double") / (col("za.n") + col("zb.n") - col("n_common")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= JaccardThreshold)
+    verifyJaccard(withEst, "est_jaccard", shingleIndex(spark, dir), docSizesFull(spark, dir))
   }
 
-  val minhashLshSql: String = {
-    val minCols = (0 until NumPerms)
-      .map(i => s"MIN((${permA(i)} * base + ${permB(i)}) % $MersenneP) AS h$i")
-      .mkString(",\n       ")
-    val sigList = (0 until NumPerms).map(i => s"h$i").mkString("[", ", ", "]")
-    val estSum = (1 to NumPerms)
-      .map(i => s"CASE WHEN sa.sig[$i] = sb.sig[$i] THEN 1 ELSE 0 END")
-      .mkString("(", " + ", ")")
-    // packed pairwise integer band keys — mirrors the Spark side exactly
-    // (sig values < P so v1*P + v2 stays inside BIGINT)
+  /** Oracle text of the [[NumPerms]]-perm signature: the `h<i>` min-hash
+    * select list over `base`, and the `sig` array of those columns. */
+  private val sigMinColsSql: String = (0 until NumPerms)
+    .map(i => s"MIN((${permA(i)} * base + ${permB(i)}) % $MersenneP) AS h$i")
+    .mkString(",\n       ")
+  private val sigListSql: String = (0 until NumPerms).map(i => s"h$i").mkString("[", ", ", "]")
+
+  /** Oracle text of [[bandsOf]] at the default geometry, mirroring the
+    * Spark side exactly (sig values < P, so v1·P + v2 stays inside BIGINT):
+    * the packed `k<i>` columns joined by `sep` (the caller's layout) and
+    * the x/y equality over them. */
+  private def packedBandSql(sep: String): (String, String) = {
     val nPacks = (RowsPerBand + 1) / 2
     val packCols = (0 until nPacks).map { i =>
       val v1 = s"sig[b*$RowsPerBand + ${2 * i + 1}]"
       val v2 = if (2 * i + 1 < RowsPerBand) s"sig[b*$RowsPerBand + ${2 * i + 2}]"
         else "0"
       s"$v1 * $MersenneP + $v2 AS k$i"
-    }.mkString(",\n                 ")
-    val keyEq = (0 until nPacks).map(i => s"x.k$i = y.k$i").mkString(" AND ")
+    }.mkString(sep)
+    (packCols, (0 until nPacks).map(i => s"x.k$i = y.k$i").mkString(" AND "))
+  }
+
+  val minhashLshSql: String = {
+    val estSum = (1 to NumPerms)
+      .map(i => s"CASE WHEN sa.sig[$i] = sb.sig[$i] THEN 1 ELSE 0 END")
+      .mkString("(", " + ", ")")
+    val (packCols, keyEq) = packedBandSql(",\n                 ")
     s"""WITH $shingleIndexSql,
        |shb AS (SELECT doc_id, h % $MersenneP AS base FROM sh),
        |sigc AS (SELECT doc_id,
-       |       $minCols
+       |       $sigMinColsSql
        |       FROM shb GROUP BY doc_id),
-       |sig AS (SELECT doc_id, $sigList AS sig FROM sigc),
+       |sig AS (SELECT doc_id, $sigListSql AS sig FROM sigc),
        |bands AS (SELECT doc_id, b,
        |                 $packCols
        |          FROM sig, UNNEST(range(0, $NumBands)) AS u(b)),
@@ -536,7 +580,7 @@ object Dedup {
   def bbitMinhash(spark: SparkSession, dir: String): DataFrame =
     bbitMinhashWithTarget(spark, dir, BbitSampleTarget)
 
-  /** [[bbitMinhash]] with an explicit sample-size target — Round12Spec
+  /** [[bbitMinhash]] with an explicit sample-size target — DedupSpec
     * forces a tiny target so the sampled regime (k > 1, unreachable at
     * test corpus sizes under the default) runs and is held to the same
     * invariants. A non-default target suffixes the artifact names: the
@@ -556,7 +600,6 @@ object Dedup {
       if (sampleK == 1L) minhashSignatures(spark, dir, NumPerms)
       else minhashSignatures(spark, dir, NumPerms)
         .filter(inSample(col("doc_id")))
-    val rowsPerBand = NumPerms / NumBands
     val bmask = (1L << BbitBits) - 1
     // band tables + candidate sets go through the Artifacts layer, not
     // session persist(): a persist held here is never released for the
@@ -568,31 +611,20 @@ object Dedup {
         spark, dir, s"dedup_bbit_bands$suffix", Seq("bkey")) {
       sig.select(col("doc_id"),
         posexplode(array((0 until NumBands).map { b =>
-          (0 until rowsPerBand).map(j =>
-            (col("sig").getItem(b * rowsPerBand + j) % (bmask + 1)) *
+          (0 until RowsPerBand).map(j =>
+            (col("sig").getItem(b * RowsPerBand + j) % (bmask + 1)) *
               lit(1L << (BbitBits * j))).reduce((a: Column, c: Column) => a + c)
         }: _*)))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
     }
-    val bcand = Artifacts.table(spark, dir, s"dedup_bbit_cand$suffix") {
-      bbitBands.as("x")
-        .join(bbitBands.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-    }
-    val nPacks = (rowsPerBand + 1) / 2
+    val bcand = Artifacts.table(spark, dir, s"dedup_bbit_cand$suffix")(
+      bandCandidates(bbitBands, Seq("band", "bkey")))
     val fbands = Artifacts.bucketedTable(
         spark, dir, s"dedup_bbit_fbands$suffix", Seq("k0")) {
       bandsOf(sig, NumPerms, NumBands)
     }
-    val fcand = Artifacts.table(spark, dir, s"dedup_bbit_fcand$suffix") {
-      fbands.as("x")
-        .join(fbands.as("y"), bandJoinCond(nPacks) && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
-    }
+    val fcand = Artifacts.table(spark, dir, s"dedup_bbit_fcand$suffix")(
+      bandCandidates(fbands, packedBandKeys(RowsPerBand)))
     val truthAll = ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b"))
     // truth restricted to the same sampled universe the candidates come
     // from — recall/precision stay ratios over one population
@@ -609,7 +641,7 @@ object Dedup {
     // per-method scalar counts. A method with zero candidates cannot
     // occur (both artifacts are non-empty by the band construction at
     // every swept scale), but the left join + coalesce keeps the row
-    // like the old crossJoin-of-1-row-aggregates did. Round18Spec pins
+    // like the old crossJoin-of-1-row-aggregates did. DedupSpec pins
     // row equality to the per-method form.
     val tagged = bcand.select(lit("bbit2").as("method"), col("doc_a"), col("doc_b"))
       .unionByName(fcand.select(lit("full").as("method"), col("doc_a"), col("doc_b")))
@@ -648,27 +680,21 @@ object Dedup {
   // concatenation of these blocks (StagedOracleSpec pins the assembly).
 
   /** shb/sigc/sk/sig: the sampled [[NumPerms]]-perm signature pipeline. */
-  private[graft] val bbitSigCtesSql: String = {
-    val minCols = (0 until NumPerms)
-      .map(i => s"MIN((${permA(i)} * base + ${permB(i)}) % $MersenneP) AS h$i")
-      .mkString(",\n       ")
-    val sigList = (0 until NumPerms).map(i => s"h$i").mkString("[", ", ", "]")
+  private[graft] val bbitSigCtesSql: String =
     s"""shb AS (SELECT doc_id, h % $MersenneP AS base FROM sh),
        |sigc AS (SELECT doc_id,
-       |       $minCols
+       |       $sigMinColsSql
        |       FROM shb GROUP BY doc_id),
        |sk AS (SELECT (COUNT(*) + ${BbitSampleTarget - 1}) // $BbitSampleTarget
        |         AS k FROM documents),
-       |sig AS (SELECT doc_id, $sigList AS sig FROM sigc CROSS JOIN sk
+       |sig AS (SELECT doc_id, $sigListSql AS sig FROM sigc CROSS JOIN sk
        |        WHERE ${hash60Sql("'bbit:' || CAST(doc_id AS VARCHAR)")} % k = 0)""".stripMargin
-  }
 
   /** bb/bcand: the b-bit ([[BbitBits]]-bit) banded candidate self-join. */
   private[graft] val bbitBcandCtesSql: String = {
-    val rowsPerBand = NumPerms / NumBands
     val bmask1 = 1L << BbitBits
-    val bkeyExpr = (0 until rowsPerBand).map(j =>
-      s"(sig[b*$rowsPerBand + ${j + 1}] % $bmask1) * ${1L << (BbitBits * j)}")
+    val bkeyExpr = (0 until RowsPerBand).map(j =>
+      s"(sig[b*$RowsPerBand + ${j + 1}] % $bmask1) * ${1L << (BbitBits * j)}")
       .mkString(" + ")
     s"""bb AS (SELECT doc_id, b, $bkeyExpr AS bkey
        |       FROM sig, UNNEST(range(0, $NumBands)) AS u(b)),
@@ -679,15 +705,7 @@ object Dedup {
 
   /** fbands/fcand: the full-width banded candidate self-join. */
   private[graft] val bbitFcandCtesSql: String = {
-    val rowsPerBand = NumPerms / NumBands
-    val nPacks = (rowsPerBand + 1) / 2
-    val packCols = (0 until nPacks).map { i =>
-      val v1 = s"sig[b*$rowsPerBand + ${2 * i + 1}]"
-      val v2 = if (2 * i + 1 < rowsPerBand) s"sig[b*$rowsPerBand + ${2 * i + 2}]"
-        else "0"
-      s"$v1 * $MersenneP + $v2 AS k$i"
-    }.mkString(",\n                  ")
-    val keyEq = (0 until nPacks).map(i => s"x.k$i = y.k$i").mkString(" AND ")
+    val (packCols, keyEq) = packedBandSql(",\n                  ")
     s"""fbands AS (SELECT doc_id, b,
        |                  $packCols
        |           FROM sig, UNNEST(range(0, $NumBands)) AS u(b)),
@@ -698,11 +716,7 @@ object Dedup {
 
   /** sz/inter/truth: exact-Jaccard ground truth over the audit sample. */
   private[graft] val bbitTruthCtesSql: String =
-    s"""sz AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-       |          FROM shf a JOIN shf b
-       |            ON a.h = b.h AND a.doc_id < b.doc_id
-       |          GROUP BY 1, 2),
+    s"""$cappedPairsSql,
        |truth AS (SELECT doc_a, doc_b FROM inter
        |          JOIN sz sa ON doc_a = sa.doc_id
        |          JOIN sz sb ON doc_b = sb.doc_id
@@ -757,29 +771,42 @@ object Dedup {
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("h", hash60(col("token")))
-    val bitSums = (0 until SimhashBits).map(j =>
-      sum(when(expr(s"(shiftright(h, $j) & 1) = 1"), col("cnt")).otherwise(-col("cnt")))
-        .as(s"b$j"))
-    val digest = (0 until SimhashBits)
-      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce((a: Column, b: Column) => a + b)
     // the digest table is the operator's product: the declared simhash
     // query AND the band-pair query both read the materialized table
-    Artifacts.table(spark, dir, "dedup_simhash") {
-      toks.groupBy("doc_id")
-        .agg(bitSums.head, bitSums.tail: _*)
-        .select(col("doc_id"), digest.as("simhash"))
-    }
+    Artifacts.table(spark, dir, "dedup_simhash")(
+      simhashDigest(toks, col("cnt"), SimhashBits, "simhash"))
+  }
+
+  /** SimHash `(doc_id, <out>)` of `(doc_id, h)` rows: each row votes
+    * ±`weight` on bit j < `bits` as bit j of `h` is set or not, and the
+    * digest's bit j is 1 only for a vote sum above 0 (0 gives 0). */
+  private[graft] def simhashDigest(
+      features: DataFrame, weight: Column, bits: Int, out: String): DataFrame = {
+    val bitSums = (0 until bits).map(j =>
+      sum(when(expr(s"(shiftright(h, $j) & 1) = 1"), weight).otherwise(-weight))
+        .as(s"b$j"))
+    val digest = (0 until bits)
+      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+      .reduce((a: Column, b: Column) => a + b)
+    features.groupBy("doc_id")
+      .agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"), digest.as(out))
+  }
+
+  /** [[simhashDigest]]'s oracle text: the `b<j>` vote sums, the digest. */
+  private[operators] def simhashDigestSql(bits: Int, weight: String): (String, String) = {
+    val bitSums = (0 until bits)
+      .map(j => s"SUM(CASE WHEN ((h >> $j) & 1) = 1 THEN $weight ELSE -$weight END) AS b$j")
+      .mkString(",\n       ")
+    val digest = (0 until bits)
+      .map(j => s"CASE WHEN b$j > 0 THEN ${1L << j} ELSE 0 END")
+      .mkString("(", " + ", ")")
+    (bitSums, digest)
   }
 
   /** Shared CTE prefix computing (doc_id, simhash) as `d`. */
   private val simhashCoreSql: String = {
-    val bitSums = (0 until SimhashBits)
-      .map(j => s"SUM(CASE WHEN ((h >> $j) & 1) = 1 THEN cnt ELSE -cnt END) AS b$j")
-      .mkString(",\n       ")
-    val digest = (0 until SimhashBits)
-      .map(j => s"CASE WHEN b$j > 0 THEN ${1L << j} ELSE 0 END")
-      .mkString("(", " + ", ")")
+    val (bitSums, digest) = simhashDigestSql(SimhashBits, "cnt")
     s"""tok AS (SELECT doc_id, UNNEST(regexp_split_to_array(trim(text), '\\s+')) AS token
        |            FROM documents),
        |tc AS (SELECT doc_id, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
@@ -817,22 +844,8 @@ object Dedup {
       bandBits: Int = SimhashBandBits,
       hammingMax: Int = HammingMax): DataFrame = {
     require(nBands * bandBits <= SimhashBits, "bands must tile the digest")
-    val mask = (1L << bandBits) - 1
-    val d = simhash(spark, dir)
-    val bands = d.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until nBands).map(b =>
-        expr(s"shiftright(simhash, ${b * bandBits}) & $mask")): _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.simhash").as("ah"), col("y.simhash").as("bh"))
-      .distinct()
-      .withColumn("hamming", expr("bit_count(ah ^ bh)"))
-      .filter(col("hamming") <= hammingMax)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+    val bands = digestBands(simhash(spark, dir), "simhash", nBands, bandBits)
+    hammingPairs(bands, "simhash", hammingMax)
   }
 
   val simhashPairsSql: String =
@@ -884,14 +897,21 @@ object Dedup {
   def lshRecall(spark: SparkSession, dir: String): DataFrame = {
     val truth = ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b"))
     val found = minhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-    val tp = truth.join(found, Seq("doc_a", "doc_b"), "left_semi")
-      .agg(count(lit(1)).as("n_tp"))
-    truth.agg(count(lit(1)).as("n_truth"))
-      .crossJoin(found.agg(count(lit(1)).as("n_found")))
-      .crossJoin(tp)
+    pairOverlap(truth, found, "n_truth", "n_found", "n_tp")
       .select(col("n_truth"), col("n_found"), col("n_tp"),
         (col("n_tp").cast("double") / col("n_truth")).as("recall"),
         (col("n_tp").cast("double") / col("n_found")).as("precision"))
+  }
+
+  /** One row: |a| as `nA`, |b| as `nB` and |a ⋉ b| as `nBoth` for two
+    * `(doc_a, doc_b)` pair sets (counts, so an empty side gives 0). */
+  private[graft] def pairOverlap(
+      a: DataFrame, b: DataFrame, nA: String, nB: String, nBoth: String): DataFrame = {
+    val both = a.join(b, Seq("doc_a", "doc_b"), "left_semi")
+      .agg(count(lit(1)).as(nBoth))
+    a.agg(count(lit(1)).as(nA))
+      .crossJoin(b.agg(count(lit(1)).as(nB)))
+      .crossJoin(both)
   }
 
   val lshRecallSql: String =
@@ -996,7 +1016,7 @@ object Dedup {
     // Pair enumeration is a per-group generator fan-out over the collected
     // doc list (bounded ≤ DfCap rows by the eligibility filter, so the
     // aggregation state is bounded) — no self-join at all.
-    // Round18Spec pins result equality to the self-join form.
+    // DedupSpec pins result equality to the self-join form.
     val eligible = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= DfCap).select(col("fp"))
     fps.join(eligible, Seq("fp"), "left_semi")
@@ -1041,10 +1061,7 @@ object Dedup {
     * jaccard double is an int/int division computed identically on both
     * engines, so the threshold comparisons agree bit-for-bit. */
   def thresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    val sz = docSizesCapped(spark, dir)
-    val scored = pairIntersections(spark, dir)
-      .join(sz.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("doc_b") === col("sb.doc_id"))
+    val scored = cappedPairScores(spark, dir)
       .select((col("n_common").cast("double") /
         (col("sa.n") + col("sb.n") - col("n_common"))).as("j"))
     val aggs = (1 to 9).map(i =>
@@ -1064,11 +1081,7 @@ object Dedup {
       .mkString("\nUNION ALL\n")
     s"""WITH $shingleIndexSql,
        |$cappedShingleIndexSql,
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-       |          FROM shf a JOIN shf b
-       |            ON a.h = b.h AND a.doc_id < b.doc_id
-       |          GROUP BY 1, 2),
+       |$cappedPairsSql,
        |sc AS (SELECT CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common) AS j
        |       FROM inter
        |       JOIN sz sa ON sa.doc_id = doc_a
@@ -1095,11 +1108,7 @@ object Dedup {
     val lex = ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b"))
     val sem = Similarity.embeddingCosinePairs(spark, dir)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val both = lex.join(sem, Seq("doc_a", "doc_b"), "left_semi")
-      .agg(count(lit(1)).as("n_both"))
-    lex.agg(count(lit(1)).as("n_lexical"))
-      .crossJoin(sem.agg(count(lit(1)).as("n_semantic")))
-      .crossJoin(both)
+    pairOverlap(lex, sem, "n_lexical", "n_semantic", "n_both")
       .select(col("n_lexical"), col("n_semantic"), col("n_both"),
         when(col("n_lexical") + col("n_semantic") - col("n_both") === 0,
           lit(null).cast("double"))
@@ -1485,19 +1494,18 @@ object Dedup {
     * delta cost. `is_cross` separates new-vs-corpus pairs from
     * within-batch ones (both engines compute it from the hash split). */
   def incrementalLsh(spark: SparkSession, dir: String): DataFrame = {
-    val nPacks = (NumPerms / NumBands + 1) / 2
+    val keys = packedBandKeys(RowsPerBand)
     val sig = minhashSignatures(spark, dir, NumPerms)
     val bands = bandsOf(sig, NumPerms, NumBands)
       .withColumn("nb", pmod(hash60(col("doc_id").cast("string")), lit(10)) === 9)
     val newB = bands.filter(col("nb"))
     val oldB = bands.filter(!col("nb"))
     val cross = newB.as("x")
-      .join(oldB.as("y"), bandJoinCond(nPacks))
+      .join(oldB.as("y"), bandKeyEq(keys))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
         lit(true).as("is_cross"))
-    val within = newB.as("x")
-      .join(newB.as("y"), bandJoinCond(nPacks) && col("x.doc_id") < col("y.doc_id"))
+    val within = bandJoin(newB, keys)
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         lit(false).as("is_cross"))
     // read twice below (the semi-reduction's key set + the scoring join);
@@ -1505,7 +1513,6 @@ object Dedup {
     val cand = Artifacts.table(spark, dir, "dedup_incremental_lsh_cand") {
       cross.unionByName(within).distinct()
     }
-    // exact-Jaccard verification, candidates only (the pipeline's tail).
     // Round-17 (guide §3.2): semi-reduce the corpus-sized shingle index to
     // the candidate docs ONCE — the former shape streamed the full index
     // through BOTH broadcast verification joins (two complete index scans
@@ -1518,19 +1525,7 @@ object Dedup {
       .distinct()
     val shCand = shingleIndex(spark, dir)
       .join(candDocs, Seq("doc_id"), "left_semi")
-    val sz = docSizesFull(spark, dir)
-    cand
-      .join(shCand.as("ca"), col("doc_a") === col("ca.doc_id"))
-      .join(shCand.as("cb"),
-        col("doc_b") === col("cb.doc_id") && col("ca.h") === col("cb.h"))
-      .groupBy(col("doc_a"), col("doc_b"), col("is_cross"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(sz.as("za"), col("doc_a") === col("za.doc_id"))
-      .join(sz.as("zb"), col("doc_b") === col("zb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("is_cross"),
-        (col("n_common").cast("double") / (col("za.n") + col("zb.n") - col("n_common")))
-          .as("jaccard"))
-      .filter(col("jaccard") >= JaccardThreshold)
+    verifyJaccard(cand, "is_cross", shCand, docSizesFull(spark, dir))
   }
 
   /** Correctness contract as SQL: full-rebuild pairs restricted to those

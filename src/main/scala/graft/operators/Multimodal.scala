@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
@@ -177,46 +177,21 @@ object Multimodal {
     import graft.functions.TextFns.hash60
     val th = imageTiles(spark, dir)
       .select(col("doc_id"), hash60(col("tile_digest")).as("h"))
-    val bitSums = (0 until PhashBits).map(j =>
-      sum(expr(s"CASE WHEN (shiftright(h, $j) & 1) = 1 THEN 1 ELSE -1 END"))
-        .as(s"b$j"))
-    val digest = (0 until PhashBits)
-      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce((a: Column, b: Column) => a + b)
-    val mask = (1L << PhashBandBits) - 1
     // signature+band table: artifact, not persist() — the self-join below
     // reads both sides from the bucketed parquet (zero-exchange on bkey)
     // and no executor memory stays owned after the build (round-9 advice)
     val bands = graft.Artifacts.bucketedTable(
         spark, dir, "mm_phash_bands", Seq("bkey")) {
-      th.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-        .select(col("doc_id"), digest.as("phash"))
-        .select(col("doc_id"), col("phash"),
-          posexplode(array((0 until PhashBands).map(b =>
-            expr(s"shiftright(phash, ${b * PhashBandBits}) & $mask")): _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bkey")
+      Dedup.digestBands(Dedup.simhashDigest(th, lit(1), PhashBits, "phash"),
+        "phash", PhashBands, PhashBandBits)
     }
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.phash").as("ah"), col("y.phash").as("bh"))
-      .distinct()
-      .withColumn("hamming", expr("bit_count(ah ^ bh)"))
-      .filter(col("hamming") <= PhashHammingMax)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+    Dedup.hammingPairs(bands, "phash", PhashHammingMax)
   }
 
   val phashPairsSql: String = {
     import graft.functions.TextFns.hash60Sql
     val mask = (1L << PhashBandBits) - 1
-    val bitSums = (0 until PhashBits)
-      .map(j => s"SUM(CASE WHEN ((h >> $j) & 1) = 1 THEN 1 ELSE -1 END) AS b$j")
-      .mkString(",\n       ")
-    val digest = (0 until PhashBits)
-      .map(j => s"CASE WHEN b$j > 0 THEN ${1L << j} ELSE 0 END")
-      .mkString("(", " + ", ")")
+    val (bitSums, digest) = Dedup.simhashDigestSql(PhashBits, "1")
     s"""WITH f AS (
        |  SELECT doc_id, md5(text) AS content_md5,
        |         greatest(CAST(octet_length(encode(text)) % 640 AS INTEGER), 1) AS w,

@@ -262,7 +262,7 @@ object Relational {
     * pins the expected names as a literal VALUES list: a schema contract,
     * so any accidental column rename/reorder in silver/gold turns this row
     * red. 44 driver-side metadata rows in one LocalRelation, zero jobs; the
-    * ordinal is correct by construction (Round18Spec pins ordinals = 1..5
+    * ordinal is correct by construction (PipelineSpec pins ordinals = 1..5
     * per table). */
   def catalogColumns(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

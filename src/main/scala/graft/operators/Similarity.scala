@@ -1078,12 +1078,12 @@ object Similarity {
     * both read it, where each previously re-derived corpus × k integer
     * distances plus the per-vector argmin window at query time. At 100 TB
     * the assignment IS index metadata written once at build time.
-    * Round18Spec pins content equality to the inline derivation. */
+    * SimilaritySpec pins content equality to the inline derivation. */
   private[graft] def kmeansAssign(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "sim_kmeans_assign")(kmeansAssignInline(spark, dir))
 
   /** The unwrapped k-means derivations: [[kmeansAssign]] writes the first,
-    * and Round18Spec holds the filtered-probe [[ivfKmeansTopK]] to the
+    * and SimilaritySpec holds the filtered-probe [[ivfKmeansTopK]] to the
     * second's rows. */
   private[graft] def kmeansAssignInline(spark: SparkSession, dir: String): DataFrame =
     nearestLists(centDist(quantDims(spark, dir), kmeansCentroids(spark, dir)), 1)
@@ -2193,7 +2193,7 @@ object Similarity {
     // neighbor_id) (top-k emits each rank once), and the per-method
     // distinct() reduces each approximate result to the key set the old
     // semi-join probed, so the inner-join count per (method, query) is
-    // |exact ∩ approx| — byte-identical to the semi form (Round18Spec
+    // |exact ∩ approx| — byte-identical to the semi form (SimilaritySpec
     // pins equality to the round-17 body).
     val tagged = Seq(
       "ivf" -> ivfTopK(spark, dir),

@@ -678,7 +678,7 @@ object TextAnalysis {
     * Zipf-hot term key and sorted it, where the aggregate map-side-combines
     * to the distinct-terms relation joined back. df per term is COUNT of
     * tf rows either way — exact
-    * (Round18Spec pins equality to the window form). Two shuffles remain:
+    * (TextSpec pins equality to the window form). Two shuffles remain:
     * the (doc, term) aggregation and the per-doc top-k window. */
   def tfidfTop(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -87,12 +87,4 @@ object AsofStream {
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(stateFn)
   }
-
-  /** Batch reference over the same fold (for parity specs). */
-  def enrichBatch(events: Dataset[Ev])(implicit spark: SparkSession): Dataset[Enriched] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroups { (_, evs) => foldEvents(evs, None)._1.iterator }
-  }
 }

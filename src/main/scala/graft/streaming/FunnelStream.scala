@@ -32,7 +32,7 @@ object FunnelStream {
 
   /** The pure funnel: first view, first click strictly after it, first
     * purchase strictly after that — identical gating to the batch SQL. */
-  private[streaming] def computeFunnel(
+  private[graft] def computeFunnel(
       userId: Long, events: Seq[(Long, String)]): Option[FunnelRow] = {
     val sorted = events.sortBy(_._1)
     sorted.collectFirst { case (t, "view") => t }.map { v =>
@@ -41,11 +41,6 @@ object FunnelStream {
       FunnelRow(userId, v, c, p, 1 + c.size + p.size)
     }
   }
-
-  /** Test access to the pure funnel function. */
-  private[graft] def computeFunnelForTest(
-      userId: Long, events: Seq[(Long, String)]): Option[FunnelRow] =
-    computeFunnel(userId, events)
 
   // parallel primitive arrays: the flat state shape the state-store
   // encoder handles without object-graph codegen (a Vector[(Long, String)]

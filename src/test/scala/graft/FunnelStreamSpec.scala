@@ -54,7 +54,7 @@ class FunnelStreamSpec extends AnyFunSuite {
   }
 
   test("funnel gating: pre-view clicks never count") {
-    val out = FunnelStream.computeFunnelForTest(7L,
+    val out = FunnelStream.computeFunnel(7L,
       Seq((100L, "click"), (200L, "view"), (150L, "purchase")))
     assert(out.contains(FunnelRow(7L, 200L, None, None, 1)),
       "click at 100 < view at 200 must not advance the funnel")

@@ -9,6 +9,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
   * reported in declared order), truncated errors. */
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  private val dir = TestSpark.Sf0001
 
   test("happy path: all layers processed in order, inventory complete") {
     val report = Pipeline.run(spark, TestSpark.Sf0001)
@@ -103,5 +104,23 @@ class PipelineSpec extends AnyFunSuite {
       assert(SparkEntry.queries(name)(spark, TestSpark.Sf0001).count() > 0)
       withClue(s"after $name: ")(assert(stored.isDefined))
     }
+  }
+
+  test("rel_catalog_columns ordinals are 1..n per table in schema order") {
+    val rows = operators.Relational.catalogColumns(spark, dir)
+      .collect()
+      .groupBy(_.getString(0))
+    assert(rows.keySet.size === 9)
+    rows.foreach { case (table, rs) =>
+      val ordinals = rs.map(_.getInt(1)).toSeq.sorted
+      assert(ordinals === (1 to rs.length), s"$table: $ordinals")
+      assert(rs.length <= 5, table)
+    }
+    // first-5 column names must match the medallion relation's schema order
+    val byName = rows.map { case (t, rs) =>
+      t -> rs.sortBy(_.getInt(1)).map(_.getString(2)).toSeq
+    }
+    val expected = operators.Medallion.silverSales(spark, dir).schema.fieldNames.take(5).toSeq
+    assert(byName("silver_sales") === expected)
   }
 }

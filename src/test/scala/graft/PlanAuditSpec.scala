@@ -73,13 +73,13 @@ class PlanAuditSpec extends AnyFunSuite {
   /** query → max single-partition sorts, each with its size-class
     * argument. Everything here sorts a REDUCED relation (or is the
     * under-gate regime of a row-gated window whose over-gate form is
-    * separately asserted exchange-free in Round12Spec). A new query — or
+    * separately asserted exchange-free in TwoPassSpec). A new query — or
     * a refactor that regrows a global window over a corpus-sized relation
     * — fails the audit below until it is gated or argued onto this list. */
   private val singlePartitionSortsAllowed: Map[String, Int] = Map(
     // row-gated windows (TwoPass): the audit plans the DEFAULT path at
     // sf0.001, which is the documented under-gate single-task regime;
-    // Round12Spec pins the over-gate plan at zero single-partition sorts
+    // TwoPassSpec pins the over-gate plan at zero single-partition sorts
     "text_token_shards" -> 1,
     "mm_shard_manifest" -> 1,
     "sample_curriculum" -> 1,

@@ -72,18 +72,6 @@ class Round4Spec extends AnyFunSuite {
     }
   }
 
-  test("LSH dedup recall row reproduces set arithmetic over the two pair tables") {
-    import graft.operators.Dedup
-    val truth = Dedup.ngramJaccard(spark, TestSpark.Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val found = Dedup.minhashLsh(spark, TestSpark.Sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val row = Dedup.lshRecall(spark, TestSpark.Sf0001).collect()(0)
-    assert(row.getLong(0) == truth.size)
-    assert(row.getLong(1) == found.size)
-    assert(row.getLong(2) == (truth & found).size)
-  }
-
   test("cluster purity: per-list top-label count dominates and bounds hold") {
     import graft.operators.Similarity
     val rows = Similarity.clusterPurity(spark, TestSpark.Sf0001).collect()

@@ -74,26 +74,6 @@ class Round9bSpec extends AnyFunSuite {
     }
   }
 
-  test("cascade: the funnel chains and starts from the whole corpus") {
-    import graft.operators.Dedup
-    val rows = Dedup.cascade(spark, dir).orderBy("stage").collect()
-    assert(rows.map(_.getAs[String]("stage")).toSeq ===
-      Seq("1_exact", "2_minhash", "3_semantic"))
-    val n0 = Tables.documents(spark, dir).count()
-    assert(rows.head.getAs[Long]("docs_in") === n0)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("docs_removed") >= 0)
-      assert(r.getAs[Long]("docs_in") - r.getAs[Long]("docs_removed") ===
-        r.getAs[Long]("docs_out"))
-    }
-    // each stage's survivors feed the next stage
-    rows.sliding(2).foreach {
-      case Array(a, b) =>
-        assert(a.getAs[Long]("docs_out") === b.getAs[Long]("docs_in"))
-      case _ =>
-    }
-  }
-
   test("modularity: degree accounting closes and Q terms are bounded") {
     import graft.operators.Similarity
     val rows = Similarity.modularity(spark, dir).collect()

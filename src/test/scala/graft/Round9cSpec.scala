@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-9 continuation: watermark lateness profile, epoch shuffle,
-  * CCNet perplexity terciles, paragraph dedup, Matryoshka truncation, and
+  * CCNet perplexity terciles, Matryoshka truncation, and
   * the z-order skipping audit. Each test asserts the operator's defining
   * law against an independent recomputation, not just shape.
   */
@@ -88,27 +88,6 @@ class Round9cSpec extends AnyFunSuite {
           avg <= r.getAs[Long]("max_score_bp"))
       }
     }
-  }
-
-  test("paragraph dedup: kept segments equal the distinct-segment count") {
-    import graft.operators.Dedup
-    val rows = Dedup.paragraphDedup(spark, dir).collect()
-    assert(rows.map(_.getAs[Long]("n_segs")).sum > 0)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_kept") >= 0 &&
-        r.getAs[Long]("n_kept") <= r.getAs[Long]("n_segs"))
-      val frac = r.getAs[Double]("removed_frac")
-      assert(frac >= 0.0 && frac <= 1.0)
-    }
-    // every distinct segment survives exactly once, corpus-wide
-    import graft.functions.TextFns.tokens
-    val distinctSegs = Tables.documents(spark, dir)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(explode(expr(
-        "transform(sequence(0, (size(toks)-1) div 20)," +
-          " i -> array_join(slice(toks, i*20+1, 20), ' '))")).as("seg"))
-      .distinct().count()
-    assert(rows.map(_.getAs[Long]("n_kept")).sum === distinctSegs)
   }
 
   test("dim truncation: full-width slice is exact (recall 1.0), curve bounded") {
@@ -273,18 +252,6 @@ class Round9cSpec extends AnyFunSuite {
       assert(r.getAs[Boolean]("flag_regular") === (n * q - s * s < s * s))
       assert(r.getAs[Boolean]("flag_rapid") === (s < n * 720))
       assert(r.getAs[Long]("cv2_bp") === (n * q - s * s) * 10000 / (s * s))
-    }
-  }
-
-  test("source overlap: cells partition the pair product, triangle normalized") {
-    import graft.operators.Dedup
-    val pairs = Dedup.ngramJaccard(spark, dir).count()
-    val cells = Dedup.sourceOverlap(spark, dir).collect()
-    assert(cells.map(_.getAs[Long]("n_pairs")).sum === pairs)
-    cells.foreach { c =>
-      assert(c.getAs[String]("source_lo") <= c.getAs[String]("source_hi"))
-      assert(c.getAs[Long]("n_strong") <= c.getAs[Long]("n_pairs"))
-      assert(c.getAs[Double]("min_j") <= c.getAs[Double]("max_j"))
     }
   }
 

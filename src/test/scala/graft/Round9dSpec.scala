@@ -144,41 +144,6 @@ class Round9dSpec extends AnyFunSuite {
     assert(r.getAs[Long]("fill_bp") === bits.size.toLong * 10000 / 65536)
   }
 
-  test("phash_pairs: exact match with a driver-side signature pipeline") {
-    import graft.operators.Multimodal
-    import graft.functions.TextFns.hash60Long
-    val rows = Multimodal.phashPairs(spark, dir)
-      .orderBy("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-
-    def md5Hex(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    val sigs = Tables.documents(spark, dir).select("doc_id", "text").collect()
-      .filter(_.getLong(0) % 3 == 0)
-      .map { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        val bytes = text.getBytes("UTF-8").length
-        val w = math.max(bytes % 640, 1); val h = math.max(bytes * 7 % 480, 1)
-        val (nx, ny) = ((w + 31) / 32, (h + 31) / 32)
-        val cm = md5Hex(text)
-        val hs = (0 until nx * ny).map(i => hash60Long(md5Hex(cm + "@" + i)))
-        val phash = (0 until 60).map { j =>
-          val votes = hs.map(hv => if (((hv >> j) & 1L) == 1L) 1 else -1).sum
-          if (votes > 0) 1L << j else 0L
-        }.sum
-        id -> phash
-      }
-    val expected = (for {
-      (a, pa) <- sigs; (b, pb) <- sigs if a < b
-      if (0 until 4).exists(k => ((pa >> (k * 15)) & 32767) == ((pb >> (k * 15)) & 32767))
-      ham = java.lang.Long.bitCount(pa ^ pb) if ham <= 3
-    } yield (a, b, ham)).sortBy(t => (t._1, t._2))
-    assert(rows.toSeq === expected.toSeq)
-    // duplicate source docs share every tile digest → identical signatures
-    val dupImagePairs = sigs.groupBy(_._2).values.count(_.length > 1)
-    if (dupImagePairs > 0) assert(rows.exists(_._3 == 0))
-  }
-
   test("snapshot_drift: recomputed counts and exact chi-square boundary") {
     import graft.operators.Relational
     val rows = Relational.snapshotDrift(spark, dir).collect()
@@ -226,28 +191,6 @@ class Round9dSpec extends AnyFunSuite {
     spc.foreach { case (q, n) => assert(mpc.getOrElse(q, 0) >= n) }
     // and it genuinely widens the candidate pool somewhere
     assert(mp.size >= sp.size)
-  }
-
-  test("cluster_reps: rep is the quality argmax of its own cluster") {
-    import graft.operators.{Dedup, TextAnalysis}
-    val reps = Dedup.clusterReps(spark, dir).collect()
-    val comp = Dedup.components(spark, dir).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("component_root"))
-    val qual = TextAnalysis.qualityScore(spark, dir).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("quality_score")).toMap
-    assert(reps.nonEmpty)
-    val byRoot = comp.groupBy(_._2)
-    assert(reps.length === byRoot.size, "one rep per cluster")
-    reps.foreach { r =>
-      val root = r.getAs[Long]("component_root")
-      val members = byRoot(root).map(_._1)
-      assert(r.getAs[Long]("cluster_size") === members.length.toLong)
-      assert(r.getAs[Long]("min_doc") === members.min)
-      val best = members.minBy(id => (-qual(id), id))
-      assert(r.getAs[Long]("rep_doc") === best)
-      assert(r.getAs[Double]("rep_quality") === qual(best))
-      assert(r.getAs[Boolean]("rep_differs") === (best != members.min))
-    }
   }
 
   test("caption_pairs: CLIP-rule keep flags recomputed from raw docs") {
@@ -371,29 +314,6 @@ class Round9dSpec extends AnyFunSuite {
         subDims.map(d => { val diff = q(d) - cent(code)(d - 0); diff * diff }).sum).min
     }.sum
     assert(rows.head.getAs[Long]("total_d2") === total0)
-  }
-
-  test("bbit_minhash: low-bit candidates strictly contain the full-width set") {
-    import graft.operators.Dedup
-    val rows = Dedup.bbitMinhash(spark, dir).collect()
-      .map(r => r.getAs[String]("method") ->
-        (r.getAs[Long]("n_candidates"), r.getAs[Long]("n_truth"),
-          r.getAs[Long]("tp"), r.getAs[Long]("recall_bp"),
-          r.getAs[Long]("precision_bp"))).toMap
-    val (ncB, ntB, tpB, recB, preB) = rows("bbit2")
-    val (ncF, ntF, tpF, recF, preF) = rows("full")
-    assert(ntB === ntF && ntB > 0)
-    // a full-band match implies every low-bit slice matches → superset
-    assert(ncB >= ncF, s"bbit candidates $ncB < full $ncF")
-    assert(tpB >= tpF)
-    assert(recB >= recF)
-    assert(recB === tpB * 10000 / ntB)
-    if (ncB > 0) assert(preB === tpB * 10000 / ncB)
-    assert(tpB <= ncB && tpF <= ncF && tpB <= ntB)
-    // the 16x-smaller signature must pay with a real precision drop
-    // (collision floor) — if it didn't, the full width would be waste
-    assert(ncB > ncF, "2-bit keys should collide more at this scale")
-    assert(preB <= preF)
   }
 
   test("neyman_alloc: recomputed moments, budget bound, share laws") {

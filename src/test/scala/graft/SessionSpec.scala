@@ -24,4 +24,13 @@ class SessionSpec extends AnyFunSuite {
     assert(spark.catalog.functionExists("hash60"))
     assert(spark.sql("SELECT hash60('a') >= 0").head().getBoolean(0))
   }
+
+  test("Cpus.effective honors SPARK_GRAFT_CPUS up to the budget") {
+    val eff = Cpus.effective()
+    val avail = Runtime.getRuntime.availableProcessors()
+    assert(eff >= 1 && eff <= avail)
+    // quota parsing: this sandbox has no quota (v1 cfs_quota -1) or a
+    // readable one; either way the call must not throw and must be >= 1
+    Cpus.cgroupQuotaCores().foreach(q => assert(q >= 1))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite {
@@ -536,5 +537,45 @@ class SimilaritySpec extends AnyFunSuite {
     assert(opt == ref,
       s"optimized kNN graph diverges: only-opt=${(opt -- ref).take(5)} " +
         s"only-ref=${(ref -- opt).take(5)}")
+  }
+
+  test("sim_kmeans_assign artifact equals the inline Lloyd assignment, " +
+    "and the filtered-probe k-means IVF search equals the round-17 form") {
+    val art = operators.Similarity.kmeansAssign(spark, dir)
+    val inline = operators.Similarity.kmeansAssignInline(spark, dir)
+    assert(art.exceptAll(inline).isEmpty && inline.exceptAll(art).isEmpty)
+    val now = operators.Similarity.ivfKmeansTopK(spark, dir)
+    val old = operators.Similarity.ivfKmeansTopKInline(spark, dir)
+    assert(now.columns.toSeq === Seq("query_id", "neighbor_id", "rank", "cos_sim"))
+    assert(now.exceptAll(old).isEmpty && old.exceptAll(now).isEmpty)
+    assert(now.count() > 0)
+  }
+
+  test("sim_recall_eval tagged-union form equals the round-17 per-method form") {
+    import operators.Similarity
+    val now = Similarity.recallEval(spark, dir)
+    assert(now.columns.toSeq === Seq("method", "query_id", "hits", "recall_at_k"))
+    // round-17 body, verbatim: five independent semi-join branches
+    val bf = Similarity.bruteForceTopK(spark, dir)
+      .select(col("query_id"), col("neighbor_id"))
+    val qs = bf.select(col("query_id")).distinct()
+    def one(method: String, ap: org.apache.spark.sql.DataFrame) = {
+      val hits = bf
+        .join(ap.select(col("query_id"), col("neighbor_id")),
+          Seq("query_id", "neighbor_id"), "left_semi")
+        .groupBy(col("query_id")).agg(count(lit(1)).as("h"))
+      qs.join(hits, Seq("query_id"), "left")
+        .select(lit(method).as("method"), col("query_id"),
+          coalesce(col("h"), lit(0L)).as("hits"),
+          (coalesce(col("h"), lit(0L)).cast("double") / Similarity.K)
+            .as("recall_at_k"))
+    }
+    val old = one("ivf", Similarity.ivfTopK(spark, dir))
+      .unionByName(one("ivfpq", Similarity.ivfPqTopK(spark, dir)))
+      .unionByName(one("lsh", Similarity.lshTopK(spark, dir)))
+      .unionByName(one("mplsh", Similarity.multiProbeTopK(spark, dir)))
+      .unionByName(one("pq", Similarity.pqTopK(spark, dir)))
+    assert(now.exceptAll(old).isEmpty && old.exceptAll(now).isEmpty)
+    assert(now.count() > 0)
   }
 }

@@ -1,13 +1,16 @@
 package graft
 
+import graft.functions.TextFns
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 class TextSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  private val dir = TestSpark.Sf0001
 
   private lazy val docsDir: String = {
     val dir = Files.createTempDirectory("graft-text").toString
@@ -53,5 +56,28 @@ class TextSpec extends AnyFunSuite {
     val rows = TextAnalysis.winnowFingerprint(spark, docsDir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(rows(0L)._2 == "the cat sat on the mat".length - 7)
+  }
+
+  test("text_tfidf_top df-aggregate form equals the round-17 window form") {
+    import org.apache.spark.sql.expressions.Window
+    val now = operators.TextAnalysis.tfidfTop(spark, dir)
+    assert(now.columns.toSeq ===
+      Seq("doc_id", "term", "tf", "df", "salience", "rk"))
+    // round-17 body, verbatim: df via COUNT(*) OVER (PARTITION BY term)
+    val tf = Tables.documents(spark, dir)
+      .select(col("doc_id"),
+        explode(TextFns.tokens(col("text"))).as("term"))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+    val old = tf
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+      .withColumn("salience", col("tf").cast("double") / col("df"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("salience").desc, col("term"))))
+      .filter(col("rk") <= 3)
+      .select(col("doc_id"), col("term"), col("tf"), col("df"),
+        col("salience"), col("rk"))
+    assert(now.exceptAll(old).isEmpty && old.exceptAll(now).isEmpty)
+    assert(now.count() > 0)
   }
 }

@@ -420,4 +420,39 @@ class TwoPassSpec extends AnyFunSuite {
         "real per-user counts did not trip prefixSum refinement")
     } finally perUser.unpersist()
   }
+
+  test("overGate probe never pulls more than gate+1 rows and flips " +
+    "exactly at the gate") {
+    // the regime is the caller's row count against the gate: the
+    // single-task window at rows = gate (deciding it launches no job), the
+    // per-bucket form at gate + 1, with the same values
+    import spark.implicits._
+    import org.apache.spark.GraftSpark
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = (1 to 50).map(i => (i.toLong, (i % 7).toLong)).toDF("id", "v")
+    val forms = Seq[(String, (Long, Long) => DataFrame)](
+      "prefixSum" -> ((rows, gate) => TwoPass.prefixSum(df, "id", "v", "c", rows, gate)),
+      "prefixMaxExclusiveRange" -> ((rows, gate) =>
+        TwoPass.prefixMaxExclusiveRange(df, "id", "v", "c", rows, gate)),
+      "ntileDesc" -> ((rows, gate) => TwoPass.ntileDesc(df, "v", "id", 4, "c", rows, gate)))
+    def perBucket(out: DataFrame): Boolean =
+      out.queryExecution.analyzed.toString.contains("__bid")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try forms.foreach { case (name, form) =>
+      GraftSpark.drainListenerBus(sc)
+      jobs.set(0)
+      val single = form(50L, 50L)
+      GraftSpark.drainListenerBus(sc)
+      withClue(name)(assert(jobs.get == 0 && !perBucket(single)))
+      val distributed = form(51L, 50L)
+      withClue(name)(assert(perBucket(distributed)))
+      val rows = (d: DataFrame) => d.orderBy("id").collect().toSeq
+      withClue(name)(assert(rows(single) == rows(distributed)))
+    } finally sc.removeSparkListener(listener)
+  }
 }
